@@ -2,8 +2,6 @@ package graft
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Per-round benchmark (driver contract): times every registered
   * query at SPARK_GRAFT_SF_DIR and prints one JSON line.
   *
@@ -75,47 +73,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // AQE's coalescer (parallelismFirst=true) targets
-      // max(stageBytes/parallelism, minPartitionSize); at bench scale
-      // every shuffle is 1-30 MB, so the default 1 MB floor coalesces
-      // post-shuffle stages to a handful of tasks and serializes the
-      // work local[$cpus] could parallelize (guide §2.2: size
-      // partitions to the job, measured 45-90% per-query ratios with
-      // the floor lowered). The floor only binds when a stage's data
-      // is smaller than parallelism × floor — at production shuffle
-      // sizes stageBytes/parallelism dominates and this setting is
-      // inert, so the local default is safe at any scale; it stays
-      // env-parameterized for clusters that want the 1m default back.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_COALESCE_BYTES", "64k"))
-      // Whole-stage-codegen compile cache (static conf, default 100
-      // entries): a 294-query sweep generates thousands of distinct
-      // codegen units, so at the default size every unit is evicted
-      // before its second sweep and janino recompiles the entire
-      // suite per sweep — pure fixed overhead in every measured
-      // sample. Sized to hold the whole suite's units; this caches
-      // COMPILED CODE keyed by generated source, never data or
-      // results.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "5000"))
-      .config("spark.ui.enabled", "false")
-      // This host stalls the whole VM for minutes at a time (see the
-      // sweep comment below) and a 48g sf1 heap can take >2 min in a
-      // single full GC; either starves the in-process heartbeater
-      // past the default 120 s window and the executor then KILLS a
-      // healthy run ("Exit as unable to send heartbeats", observed
-      // at sf1). Local mode has no real liveness question — driver
-      // and executor share the JVM — so widen the windows.
-      .config("spark.network.timeout", "600s")
-      .config("spark.executor.heartbeatInterval", "60s")
-      .withExtensions(new functions.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.create(GraftSession.envCpus)
     // Two full sweeps, per-query min reported: this host shows
     // sporadic multi-minute external stalls (load ~1.4 with no local
     // processes; 60–270 s landing on whichever query is running).
@@ -164,28 +122,23 @@ object Bench {
         // executor store. Then let the ContextCleaner release
         // broadcasts/shuffle state (after the clock is read — a
         // full GC is not query time).
-        // SPARK_GRAFT_NOCLEAN=1: local A/B-attribution switch only
-        // (the driver never sets it) — isolates harness cleanup cost
-        // from query-code changes when a regression needs blame.
         // clearCache per query (cheap; bounds the CacheManager's
         // strong plan-keyed pins across a 294-query sweep); the full
         // GC that lets the ContextCleaner drop broadcast/shuffle
         // state only every 16th query — per-query System.gc() chilled
         // the NEXT query ~10% (BASELINE.md round-6 attribution table)
         // while the cleanup it buys needs only periodic cadence.
-        if (!sys.env.contains("SPARK_GRAFT_NOCLEAN")) {
-          spark.sqlContext.clearCache()
-          // Raw RDD persists (Ranking.exactNtile/runningSums pin their
-          // range-sorted RDD) are NOT in the CacheManager and would
-          // otherwise wait on GC + ContextCleaner — with gc only every
-          // 16th query, up to 16 queries' blocks could accumulate.
-          // Explicitly drop them: the returned frame stays computable
-          // (lineage recomputes), and the next query never reuses them.
-          spark.sparkContext.getPersistentRDDs.values
-            .foreach(_.unpersist(blocking = false))
-          qIdx += 1
-          if (qIdx % 16 == 0) System.gc()
-        }
+        spark.sqlContext.clearCache()
+        // Raw RDD persists (Ranking.exactNtile/runningSums pin their
+        // range-sorted RDD) are NOT in the CacheManager and would
+        // otherwise wait on GC + ContextCleaner — with gc only every
+        // 16th query, up to 16 queries' blocks could accumulate.
+        // Explicitly drop them: the returned frame stays computable
+        // (lineage recomputes), and the next query never reuses them.
+        spark.sparkContext.getPersistentRDDs.values
+          .foreach(_.unpersist(blocking = false))
+        qIdx += 1
+        if (qIdx % 16 == 0) System.gc()
         name -> (if (ok) sec else -1.0)
       }
     }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** One-time index-build economics: builds each persisted index family
   * ([[ext.GraphIndex]], [[ext.DedupIndex]], [[ext.TextIndex]],
   * [[ext.MmIndex]]) for the given sf dir into a FRESH index root and
@@ -24,17 +22,7 @@ import org.apache.spark.sql.SparkSession
 object IndexBuild {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.network.timeout", "600s")
-      .config("spark.executor.heartbeatInterval", "60s")
-      .withExtensions(new functions.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.create(GraftSession.envCpus)
     def time(body: => Long): (Double, Long) = {
       val t0 = System.nanoTime()
       val n = body

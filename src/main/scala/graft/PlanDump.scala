@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Writes PLANS.md: the formatted physical plan of each headline
@@ -13,13 +12,9 @@ object PlanDump {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val out = args.lift(1).getOrElse("PLANS.md")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new functions.GraftExtensions)
-      .getOrCreate()
+    // Fixed local[4], not SPARK_GRAFT_CPUS: the partition count shows
+    // in every Exchange, and PLANS.md must not depend on the host.
+    val spark = GraftSession.create(4)
     spark.sparkContext.setLogLevel("ERROR")
     // The dump list IS the registry (sorted for a stable diff):
     // round 3 missed a query because this was a hand-maintained

@@ -55,15 +55,7 @@ object SyntheticGen {
     val out = args.headOption.getOrElse("/tmp/sf1")
     val sf = args.lift(1).map(_.toDouble).getOrElse(1.0)
     val skewHot = args.lift(2).map(_.toDouble).getOrElse(0.0)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.create(GraftSession.envCpus)
     generate(spark, out, sf, skewHot)
     spark.stop()
   }

@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 import java.nio.file.{Files, Paths}
@@ -32,33 +32,9 @@ object Verify {
     }.toSeq: _*)
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // Write TIMESTAMP_MICROS, not INT96: pandas reads INT96 as
-      // datetime64[ns] but DuckDB's .df() yields datetime64[us] —
-      // the driver's dtype-sensitive hash then reds EVERY timestamp
-      // column. Micros round-trips identically on both sides.
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      // Same AQE coalesce floor as Bench (see there): keeps the
-      // correctness dump's post-shuffle stages parallel at the tiny
-      // oracle scales; inert at production shuffle sizes.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_COALESCE_BYTES", "64k"))
-      // Codegen compile cache sized for the full suite — see Bench.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "5000"))
-      .config("spark.ui.enabled", "false")
-      // Same widening as Bench: host-wide stalls / large-heap full
-      // GCs can starve the in-process heartbeater past 120 s and a
-      // healthy sf1 dump then self-destructs mid-sweep.
-      .config("spark.network.timeout", "600s")
-      .config("spark.executor.heartbeatInterval", "60s")
-      .withExtensions(new functions.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // The session writes TIMESTAMP_MICROS, which `canonical` relies
+    // on (see GraftSession).
+    val spark = GraftSession.create(GraftSession.envCpus)
     new java.io.File(outDir).mkdirs()
     // Local-iteration filter (not used by the driver): run only the
     // named queries, e.g. SPARK_GRAFT_ONLY=q1,q2 (pair with

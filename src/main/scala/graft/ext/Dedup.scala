@@ -193,8 +193,8 @@ object Dedup {
   }
 
   /** (doc_id, h1..h4) over corpus() from the persisted [[DedupIndex]]
-    * (in-session build under SPARK_GRAFT_NO_DEDUP_INDEX) — the frame
-    * every banding/star derivation in the family starts from. */
+    * — the frame every banding/star derivation in the family starts
+    * from. */
   private def idxSigs(s: SparkSession, d: String): DataFrame =
     DedupIndex.signatures(s, d).select("doc_id", "h1", "h2", "h3", "h4")
 
@@ -401,11 +401,11 @@ object Dedup {
   }
 
   /** (doc_a, doc_b, na, nb, n_inter) for every gram-colliding pair —
-    * the open inverted-index self-join. Exact, and the right shape
-    * while gram collision counts are corpus-linear; on a saturated
-    * gram space hot grams make the join output quadratic (measured
-    * 43 s at sf1 for dedup_ngram_jaccard vs 0.8 s at sf0.1). */
-  private def gramPairCountsOpen(sized: DataFrame): DataFrame = {
+    * the inverted-index self-join. Exact; its output grows with the
+    * gram collision mass, which stays moderate on this corpus up to
+    * sf1 (a PPJoin-style prefix filter measured 3.8x slower there:
+    * its extra shuffles cost more than the collisions it skips). */
+  private def gramPairCounts(sized: DataFrame): DataFrame = {
     val s = sized.sparkSession
     import s.implicits._
     sized.as("a")
@@ -417,121 +417,22 @@ object Dedup {
       .agg(count(lit(1)).as("n_inter"))
   }
 
-  /** Gram index ranked for prefix filtering (guide §3.2 "reduce the
-    * big side before shuffling it"): each doc's grams ordered by
-    * GLOBAL document frequency ascending (ties by gram), so a doc's
-    * "prefix" holds its rarest grams. The standard prefix-filter
-    * theorem (All-Pairs/PPJoin): under one global order, the
-    * rarest COMMON gram of a qualifying pair must sit inside both
-    * docs' prefixes — so joining prefixes (not full gram sets)
-    * loses no pair, while the hot grams that explode the open join
-    * sit at the END of the order and drop out of most prefixes. */
-  private def prefixRanked(sized: DataFrame): DataFrame = {
+  /** dedup_ngram_jaccard body (registry + RegimeEquivalenceSpec). */
+  private[ext] def ngramJaccardFrame(sized: DataFrame): DataFrame = {
     val s = sized.sparkSession
     import s.implicits._
-    val dfc = sized.groupBy($"gram").agg(count(lit(1)).as("dfc"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy($"doc_id").orderBy($"dfc".asc, $"gram".asc)
-    sized.join(dfc, "gram")
-      .withColumn("pos", row_number().over(w))
-  }
-
-  /** Exact intersection counts for a candidate pair list —
-    * pair-bounded work (Σ_cand n_a probe rows), never an open gram
-    * self-join. Inner joins are safe: every candidate shares ≥ 1
-    * gram by construction. */
-  private def verifyPairs(cand: DataFrame, sized: DataFrame): DataFrame = {
-    val s = cand.sparkSession
-    import s.implicits._
-    cand
-      .join(sized.select($"doc_id".as("doc_a"), $"gram"), "doc_a")
-      .join(sized.select($"doc_id".as("doc_b2"), $"gram".as("gram2")),
-        $"doc_b" === $"doc_b2" && $"gram" === $"gram2")
-      .groupBy($"doc_a", $"doc_b", $"na", $"nb")
-      .agg(count(lit(1)).as("n_inter"))
-  }
-
-  /** Regime switch for the exact gram-pair evals. BOTH shapes are
-    * exact — the switch never changes results, so it needs no oracle
-    * mirror (RegimeEquivalenceSpec proves frame equality on the real
-    * corpus).
-    *
-    * MEASURED OFF (round 10): the PPJoin-style prefix shape was
-    * built on round-9's stall-contaminated 43 s sf1 reading of the
-    * open join; a clean back-to-back sf1 A/B has the open join at
-    * 15.2 s (ngram) / 9.8 s (containment) vs 58.4 s / 18.2 s prefix-
-    * filtered. On this corpus the trigram space is far from
-    * saturated, so the open join's collision mass stays moderate
-    * while the prefix shape pays ~4 extra full-index shuffles (the
-    * global-df join, the per-doc ranking window, the candidate
-    * distinct, the two-sided verify join). The prefix machinery and
-    * its equivalence spec stay as the documented escape hatch for a
-    * genuinely saturated gram space, but no scale this engine can
-    * measure favors it — honest revert per guide §1.1
-    * (measure → change → re-measure → keep the winner). */
-  private def prefixRegime(s: SparkSession, d: String): Boolean = false
-
-  /** dedup_ngram_jaccard body (registry + RegimeEquivalenceSpec).
-    * Jaccard ≥ 1/2 facts used by the prefix shape: prefix length =
-    * n − ceil(n/2) + 1 = n div 2 + 1, and sizes must satisfy
-    * max(na,nb) ≤ 2·min(na,nb) (J ≥ t bounds the size ratio by
-    * 1/t). */
-  private[ext] def ngramJaccardFrame(sized: DataFrame,
-                                     prefixFiltered: Boolean): DataFrame = {
-    val s = sized.sparkSession
-    import s.implicits._
-    val counts =
-      if (!prefixFiltered) gramPairCountsOpen(sized)
-      else {
-        val p = prefixRanked(sized)
-          .filter($"pos" <= expr("n div 2 + 1"))
-          .select($"doc_id", $"gram", $"n")
-        val cand = p.as("a").join(p.as("b"),
-            $"a.gram" === $"b.gram" && $"a.doc_id" < $"b.doc_id" &&
-            $"a.n" <= $"b.n" * 2 && $"b.n" <= $"a.n" * 2)
-          .select($"a.doc_id".as("doc_a"), $"b.doc_id".as("doc_b"),
-            $"a.n".as("na"), $"b.n".as("nb"))
-          .distinct()
-        verifyPairs(cand, sized)
-      }
-    counts
+    gramPairCounts(sized)
       .withColumn("jaccard", $"n_inter".cast("double") /
         ($"na" + $"nb" - $"n_inter").cast("double"))
       .filter($"jaccard" >= 0.5)
       .select($"doc_a", $"doc_b", $"jaccard")
   }
 
-  /** dedup_containment body (registry + RegimeEquivalenceSpec).
-    * Containment ≥ 4/5 facts used by the prefix shape: only the
-    * SMALLER doc's prefix is bounded (I ≥ t·min(na,nb) says nothing
-    * useful from the larger side), so candidates join the smaller
-    * side's prefix (length n − ceil(4n/5) + 1) against the FULL
-    * index; equal sizes take the lower-id doc as "smaller". */
-  private[ext] def containmentFrame(sized: DataFrame,
-                                    prefixFiltered: Boolean): DataFrame = {
+  /** dedup_containment body (registry + RegimeEquivalenceSpec). */
+  private[ext] def containmentFrame(sized: DataFrame): DataFrame = {
     val s = sized.sparkSession
     import s.implicits._
-    val counts =
-      if (!prefixFiltered) gramPairCountsOpen(sized)
-      else {
-        val p = prefixRanked(sized)
-          .filter($"pos" <= $"n" - expr("(4 * n + 4) div 5") + 1)
-          .select($"doc_id", $"gram", $"n")
-        val cand = p.as("a").join(sized.as("b"),
-            $"a.gram" === $"b.gram" &&
-            ($"a.n" < $"b.n" ||
-             ($"a.n" === $"b.n" && $"a.doc_id" < $"b.doc_id")))
-          .select(
-            least($"a.doc_id", $"b.doc_id").as("doc_a"),
-            greatest($"a.doc_id", $"b.doc_id").as("doc_b"),
-            when($"a.doc_id" < $"b.doc_id", $"a.n").otherwise($"b.n")
-              .as("na"),
-            when($"a.doc_id" < $"b.doc_id", $"b.n").otherwise($"a.n")
-              .as("nb"))
-          .distinct()
-        verifyPairs(cand, sized)
-      }
-    counts
+    gramPairCounts(sized)
       .withColumn("containment",
         $"n_inter".cast("double") / least($"na", $"nb").cast("double"))
       .filter($"containment" >= 0.8)
@@ -577,11 +478,9 @@ object Dedup {
         import s.implicits._
         // The gram inverted index (with per-doc counts carried on
         // every row) comes from the persisted DedupIndex — only the
-        // pair generation runs per query. Beyond the prefix-regime
-        // cap the exact PPJoin-style shape replaces the open gram
-        // self-join (identical results — see ngramJaccardFrame).
-        val sized = DedupIndex.grams3(s, d).select($"doc_id", $"gram", $"n")
-        ngramJaccardFrame(sized, prefixRegime(s, d))
+        // pair generation runs per query.
+        ngramJaccardFrame(
+          DedupIndex.grams3(s, d).select($"doc_id", $"gram", $"n"))
       },
       Some(s"""WITH $corpusSql,
         grams AS (
@@ -947,12 +846,8 @@ object Dedup {
         // Sub-3-token docs are excluded via the stored ge3 flag (a
         // ge3 doc's stored gram set and count are exactly the
         // complete-trigram set this query derived inline before).
-        // Beyond the prefix-regime cap the exact smaller-side-prefix
-        // shape replaces the open gram self-join (identical results
-        // — see containmentFrame).
-        val sized = DedupIndex.grams3(s, d)
-          .filter($"ge3").select($"doc_id", $"gram", $"n")
-        containmentFrame(sized, prefixRegime(s, d))
+        containmentFrame(DedupIndex.grams3(s, d)
+          .filter($"ge3").select($"doc_id", $"gram", $"n"))
       },
       Some(s"""WITH $corpusSql,
         grams AS (

@@ -60,8 +60,7 @@ import graft.Tables
   * are the GraphIndex mechanics: the directory is keyed by an md5
   * fingerprint of documents.parquet (path, length, mtime) plus a
   * format version; builds write to a unique tmp dir and rename into
-  * place, marker file last. `SPARK_GRAFT_NO_DEDUP_INDEX=1` bypasses
-  * the layout entirely (in-session builds, for A/B attribution).
+  * place, marker file last.
   */
 object DedupIndex {
 
@@ -92,9 +91,6 @@ object DedupIndex {
 
   private[ext] def indexDir(sfDir: String): File =
     new File(root, s"dedup-${fingerprint(sfDir)}")
-
-  private def disabled: Boolean =
-    sys.env.contains("SPARK_GRAFT_NO_DEDUP_INDEX")
 
   /** Normalized text for shingling — must stay bit-identical to
     * [[Dedup]]'s norm (the oracles recompute it in DuckDB). */
@@ -214,32 +210,29 @@ object DedupIndex {
 
   /** Build all frames under a fresh tmp dir, then atomically rename
     * into place ([[IndexUtil.install]] — marker last, race losers and
-    * failed builds deleted). Write parallelism from
-    * `spark.graft.index.writePartitions` ([[IndexUtil.writeParts]]). */
+    * failed builds deleted). */
   private def ensure(s: SparkSession, sfDir: String): File = synchronized {
     IndexUtil.install(new File(root), indexDir(sfDir), { tmp =>
-      val p = IndexUtil.writeParts(s, 8)
-      val pSmall = IndexUtil.writeParts(s, 4)
       buildSignatures(s, sfDir)
-        .repartition(pSmall, col("doc_id")).sortWithinPartitions("doc_id")
+        .repartition(4, col("doc_id")).sortWithinPartitions("doc_id")
         .write.mode("overwrite").parquet(s"$tmp/signatures")
       // Candidates derive from the just-written signatures (one read,
       // not a second MinHash pass).
       Dedup.lshCandidates(s.read.parquet(s"$tmp/signatures")
           .select("doc_id", "h1", "h2", "h3", "h4"))
-        .repartition(pSmall, col("doc_a")).sortWithinPartitions("doc_a", "doc_b")
+        .repartition(4, col("doc_a")).sortWithinPartitions("doc_a", "doc_b")
         .write.mode("overwrite").parquet(s"$tmp/candidates")
       buildHgrams5(s, sfDir)
-        .repartition(p, col("h")).sortWithinPartitions("h", "doc_id")
+        .repartition(8, col("h")).sortWithinPartitions("h", "doc_id")
         .write.mode("overwrite").parquet(s"$tmp/hgrams5")
       buildGrams3(s, sfDir)
-        .repartition(p, col("gram")).sortWithinPartitions("gram", "doc_id")
+        .repartition(8, col("gram")).sortWithinPartitions("gram", "doc_id")
         .write.mode("overwrite").parquet(s"$tmp/grams3")
       buildSpans(s, sfDir)
-        .repartition(p, col("doc_id")).sortWithinPartitions("doc_id", "i")
+        .repartition(8, col("doc_id")).sortWithinPartitions("doc_id", "i")
         .write.mode("overwrite").parquet(s"$tmp/spans")
       buildToks16(s, sfDir)
-        .repartition(pSmall, col("doc_id")).sortWithinPartitions("doc_id", "v16")
+        .repartition(4, col("doc_id")).sortWithinPartitions("doc_id", "v16")
         .write.mode("overwrite").parquet(s"$tmp/toks16")
     })
   }
@@ -250,32 +243,26 @@ object DedupIndex {
     * consumers that don't project it never read its bytes
     * (columnar). */
   def signatures(s: SparkSession, sfDir: String): DataFrame =
-    if (disabled) buildSignatures(s, sfDir)
-    else s.read.parquet(s"${ensure(s, sfDir)}/signatures")
+    s.read.parquet(s"${ensure(s, sfDir)}/signatures")
 
   /** The stored distinct-token 16-bit hash stream (doc_id, v16) —
     * one row per distinct (doc, token). */
   def toks16(s: SparkSession, sfDir: String): DataFrame =
-    if (disabled) buildToks16(s, sfDir)
-    else s.read.parquet(s"${ensure(s, sfDir)}/toks16")
+    s.read.parquet(s"${ensure(s, sfDir)}/toks16")
 
   /** The stored distinct LSH candidate pairs (doc_a, doc_b). */
   def candidates(s: SparkSession, sfDir: String): DataFrame =
-    if (disabled) buildCandidates(s, sfDir)
-    else s.read.parquet(s"${ensure(s, sfDir)}/candidates")
+    s.read.parquet(s"${ensure(s, sfDir)}/candidates")
 
   /** The stored distinct 5-gram hash universe (doc_id, h, n). */
   def hgrams5(s: SparkSession, sfDir: String): DataFrame =
-    if (disabled) buildHgrams5(s, sfDir)
-    else s.read.parquet(s"${ensure(s, sfDir)}/hgrams5")
+    s.read.parquet(s"${ensure(s, sfDir)}/hgrams5")
 
   /** The stored distinct word-trigram index (doc_id, gram, n, ge3). */
   def grams3(s: SparkSession, sfDir: String): DataFrame =
-    if (disabled) buildGrams3(s, sfDir)
-    else s.read.parquet(s"${ensure(s, sfDir)}/grams3")
+    s.read.parquet(s"${ensure(s, sfDir)}/grams3")
 
   /** The stored positional span-hash stream (doc_id, i, h, cross). */
   def spans(s: SparkSession, sfDir: String): DataFrame =
-    if (disabled) buildSpans(s, sfDir)
-    else s.read.parquet(s"${ensure(s, sfDir)}/spans")
+    s.read.parquet(s"${ensure(s, sfDir)}/spans")
 }

@@ -40,8 +40,6 @@ import graft.Tables
   * reads a stale index, it builds a sibling directory. Builds are
   * atomic (write to a unique tmp dir, rename into place, marker file
   * written last); a lost rename race falls back to the winner's dir.
-  * `SPARK_GRAFT_NO_GRAPH_INDEX=1` bypasses the layout entirely
-  * (in-session builds, for A/B attribution).
   */
 object GraphIndex {
 
@@ -74,9 +72,6 @@ object GraphIndex {
   private[ext] def indexDir(sfDir: String): File =
     new File(root, fingerprint(sfDir))
 
-  private def disabled: Boolean =
-    sys.env.contains("SPARK_GRAFT_NO_GRAPH_INDEX")
-
   /** In-session build of the (a, b, w) co-purchase frame — also the
     * write source. The one big shuffle of the family. */
   private[ext] def buildCopurchase(s: SparkSession, d: String): DataFrame = {
@@ -104,18 +99,14 @@ object GraphIndex {
     * into place ([[IndexUtil.install]] — marker last, race losers and
     * failed builds deleted). Synchronized: queries run sequentially
     * in this engine's drivers, but a stray concurrent caller must not
-    * race the same JVM; cross-JVM races resolve via the rename. Write
-    * parallelism comes from `spark.graft.index.writePartitions`
-    * ([[IndexUtil.writeParts]]) so a big build is not pinned to the
-    * local default. */
+    * race the same JVM; cross-JVM races resolve via the rename. */
   private def ensure(s: SparkSession, sfDir: String): File = synchronized {
     IndexUtil.install(new File(root), indexDir(sfDir), { tmp =>
-      val p = IndexUtil.writeParts(s, 8)
       buildCopurchase(s, sfDir)
-        .repartition(p, col("a")).sortWithinPartitions("a", "b")
+        .repartition(8, col("a")).sortWithinPartitions("a", "b")
         .write.mode("overwrite").parquet(s"$tmp/copurchase")
       buildInteraction(s, sfDir)
-        .repartition(p, col("c")).sortWithinPartitions("c", "s")
+        .repartition(8, col("c")).sortWithinPartitions("c", "s")
         .write.mode("overwrite").parquet(s"$tmp/interaction")
     })
   }
@@ -123,11 +114,9 @@ object GraphIndex {
   /** The stored (a, b, w) co-purchase frame (a < b, w = support >= 2),
     * read from the persisted layout (built on first use). */
   def copurchase(s: SparkSession, sfDir: String): DataFrame =
-    if (disabled) buildCopurchase(s, sfDir)
-    else s.read.parquet(s"${ensure(s, sfDir)}/copurchase")
+    s.read.parquet(s"${ensure(s, sfDir)}/copurchase")
 
   /** The stored distinct (c, s) customer–supplier pairs. */
   def interaction(s: SparkSession, sfDir: String): DataFrame =
-    if (disabled) buildInteraction(s, sfDir)
-    else s.read.parquet(s"${ensure(s, sfDir)}/interaction")
+    s.read.parquet(s"${ensure(s, sfDir)}/interaction")
 }

@@ -2,8 +2,6 @@ package graft.ext
 
 import java.io.File
 
-import org.apache.spark.sql.SparkSession
-
 /** Shared install mechanics for the persisted index layouts
   * ([[GraphIndex]] / [[DedupIndex]] / [[TextIndex]] / [[MmIndex]]):
   * build under a unique tmp dir, atomically rename into place with
@@ -15,18 +13,6 @@ import org.apache.spark.sql.SparkSession
   * run, unbounded across runs under contention.)
   */
 private[ext] object IndexUtil {
-
-  /** Write parallelism for persisted index frames. The per-frame
-    * defaults are sized for the local sf0.1/sf1 stores; the conf
-    * lifts ALL of them for a big build without a code change — at
-    * 100 TB the index build is a scheduled job whose output
-    * partitioning must track input size, not a constant. (On a real
-    * cluster the same frames would be written `bucketBy` on the
-    * leading key — see each index's scaladoc; the conf keeps the
-    * local path honest too.) */
-  def writeParts(s: SparkSession, default: Int): Int =
-    s.conf.getOption("spark.graft.index.writePartitions")
-      .map(_.trim.toInt).getOrElse(default)
 
   private[ext] def rm(f: File): Unit = {
     if (f.isDirectory) {

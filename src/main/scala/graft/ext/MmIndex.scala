@@ -37,8 +37,7 @@ import org.apache.spark.sql.functions.col
   * ~1 row per document, the pair frame candidate-sized. Freshness and
   * atomicity are the shared [[IndexUtil]] mechanics (md5 fingerprint
   * of documents.parquet + format version; atomic tmp-dir install,
-  * race losers deleted). `SPARK_GRAFT_NO_MM_INDEX=1` bypasses the
-  * layout entirely (in-session builds, for A/B attribution).
+  * race losers deleted).
   */
 object MmIndex {
 
@@ -76,9 +75,6 @@ object MmIndex {
   private[ext] def indexDir(sfDir: String): File =
     new File(root, s"mm-${fingerprint(sfDir)}")
 
-  private def disabled: Boolean =
-    sys.env.contains("SPARK_GRAFT_NO_MM_INDEX")
-
   /** In-session build of the decoded-feature frame — also the write
     * source. One corpus pass through the batched stub decode. */
   private[ext] def buildFeatures(s: SparkSession, d: String): DataFrame =
@@ -95,16 +91,14 @@ object MmIndex {
   }
 
   /** Build both frames under a fresh tmp dir, then atomically rename
-    * into place ([[IndexUtil.install]]). Write parallelism from
-    * `spark.graft.index.writePartitions`. */
+    * into place ([[IndexUtil.install]]). */
   private def ensure(s: SparkSession, sfDir: String): File = synchronized {
     IndexUtil.install(new File(root), indexDir(sfDir), { tmp =>
-      val p = IndexUtil.writeParts(s, 4)
       buildFeatures(s, sfDir)
-        .repartition(p, col("doc_id")).sortWithinPartitions("doc_id")
+        .repartition(4, col("doc_id")).sortWithinPartitions("doc_id")
         .write.mode("overwrite").parquet(s"$tmp/features")
       buildPhPairs(s, sfDir)
-        .repartition(p, col("doc_a")).sortWithinPartitions("doc_a", "doc_b")
+        .repartition(4, col("doc_a")).sortWithinPartitions("doc_a", "doc_b")
         .write.mode("overwrite").parquet(s"$tmp/phpairs")
     })
   }
@@ -113,12 +107,10 @@ object MmIndex {
     * height, n_frames, checksum), read from the persisted layout
     * (built on first use). */
   def features(s: SparkSession, sfDir: String): DataFrame =
-    if (disabled) buildFeatures(s, sfDir)
-    else s.read.parquet(s"${ensure(s, sfDir)}/features")
+    s.read.parquet(s"${ensure(s, sfDir)}/features")
 
   /** The stored verified pHash near-dup pairs (doc_a, doc_b, ph_a,
     * ph_b, hamming <= 3), within modality, doc_a < doc_b. */
   def phpairs(s: SparkSession, sfDir: String): DataFrame =
-    if (disabled) buildPhPairs(s, sfDir)
-    else s.read.parquet(s"${ensure(s, sfDir)}/phpairs")
+    s.read.parquet(s"${ensure(s, sfDir)}/phpairs")
 }

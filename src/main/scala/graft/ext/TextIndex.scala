@@ -51,9 +51,7 @@ import graft.Tables
   * and atomicity are the GraphIndex mechanics: the directory is keyed
   * by an md5 fingerprint of documents.parquet (path, length, mtime)
   * plus a format version; builds write to a unique tmp dir and rename
-  * into place, marker file last. `SPARK_GRAFT_NO_TEXT_INDEX=1`
-  * bypasses the layout entirely (in-session builds, for A/B
-  * attribution).
+  * into place, marker file last.
   */
 object TextIndex {
 
@@ -84,9 +82,6 @@ object TextIndex {
 
   private[ext] def indexDir(sfDir: String): File =
     new File(root, s"text-${fingerprint(sfDir)}")
-
-  private def disabled: Boolean =
-    sys.env.contains("SPARK_GRAFT_NO_TEXT_INDEX")
 
   /** In-session build of the positional token stream. Zero-token
     * docs are dropped FIRST: Spark's `sequence(1, 0)` counts DOWN to
@@ -189,25 +184,23 @@ object TextIndex {
 
   /** Build all five frames under a fresh tmp dir, then atomically
     * rename into place ([[IndexUtil.install]] — marker last, race
-    * losers and failed builds deleted). Write parallelism from
-    * `spark.graft.index.writePartitions` ([[IndexUtil.writeParts]]). */
+    * losers and failed builds deleted). */
   private def ensure(s: SparkSession, sfDir: String): File = synchronized {
     IndexUtil.install(new File(root), indexDir(sfDir), { tmp =>
-      val p = IndexUtil.writeParts(s, 8)
       buildTokens(s, sfDir)
-        .repartition(p, col("doc_id")).sortWithinPartitions("doc_id", "pos")
+        .repartition(8, col("doc_id")).sortWithinPartitions("doc_id", "pos")
         .write.mode("overwrite").parquet(s"$tmp/tokens")
       buildBigrams(s, sfDir)
-        .repartition(p, col("doc_id")).sortWithinPartitions("doc_id", "i")
+        .repartition(8, col("doc_id")).sortWithinPartitions("doc_id", "i")
         .write.mode("overwrite").parquet(s"$tmp/bigrams")
       buildGrams3(s, sfDir)
-        .repartition(p, col("gram")).sortWithinPartitions("gram", "doc_id")
+        .repartition(8, col("gram")).sortWithinPartitions("gram", "doc_id")
         .write.mode("overwrite").parquet(s"$tmp/grams3")
       buildHgrams8(s, sfDir)
-        .repartition(p, col("g")).sortWithinPartitions("g", "doc_id")
+        .repartition(8, col("g")).sortWithinPartitions("g", "doc_id")
         .write.mode("overwrite").parquet(s"$tmp/hgrams8")
       buildDocstats(s, sfDir)
-        .repartition(IndexUtil.writeParts(s, 4), col("doc_id"))
+        .repartition(4, col("doc_id"))
         .sortWithinPartitions("doc_id")
         .write.mode("overwrite").parquet(s"$tmp/docstats")
     })
@@ -217,27 +210,22 @@ object TextIndex {
     * n_toks, pos, tok), read from the persisted layout (built on
     * first use). */
   def tokens(s: SparkSession, sfDir: String): DataFrame =
-    if (disabled) buildTokens(s, sfDir)
-    else s.read.parquet(s"${ensure(s, sfDir)}/tokens")
+    s.read.parquet(s"${ensure(s, sfDir)}/tokens")
 
   /** The stored positional bigram stream (doc_id, lang, source,
     * n_toks, i, w1, w2 — w2 NULL on a one-token doc's fallback row). */
   def bigrams(s: SparkSession, sfDir: String): DataFrame =
-    if (disabled) buildBigrams(s, sfDir)
-    else s.read.parquet(s"${ensure(s, sfDir)}/bigrams")
+    s.read.parquet(s"${ensure(s, sfDir)}/bigrams")
 
   /** The stored distinct token-3-gram frame (doc_id, gram). */
   def grams3(s: SparkSession, sfDir: String): DataFrame =
-    if (disabled) buildGrams3(s, sfDir)
-    else s.read.parquet(s"${ensure(s, sfDir)}/grams3")
+    s.read.parquet(s"${ensure(s, sfDir)}/grams3")
 
   /** The stored distinct md5'd 8-token-shingle frame (doc_id, g). */
   def hgrams8(s: SparkSession, sfDir: String): DataFrame =
-    if (disabled) buildHgrams8(s, sfDir)
-    else s.read.parquet(s"${ensure(s, sfDir)}/hgrams8")
+    s.read.parquet(s"${ensure(s, sfDir)}/hgrams8")
 
   /** The stored per-doc scalar profile. */
   def docstats(s: SparkSession, sfDir: String): DataFrame =
-    if (disabled) buildDocstats(s, sfDir)
-    else s.read.parquet(s"${ensure(s, sfDir)}/docstats")
+    s.read.parquet(s"${ensure(s, sfDir)}/docstats")
 }

@@ -1,0 +1,60 @@
+package graft
+
+import java.nio.charset.StandardCharsets
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
+
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Guards the one-engine rule: the shared test session is the engine
+  * the mains verify and time, whichever suite happens to create it,
+  * and no other code under src/ builds a session of its own.
+  */
+class GraftSessionSpec extends AnyFunSuite with SharedSpark {
+
+  test("the shared session carries the GraftExtensions functions and rules") {
+    assert(spark.catalog.functionExists("farm_starts_with_name_native"))
+    assert(spark.catalog.functionExists("farm_is_numeric_token_native"))
+    // The planning tracker records every rule the optimizer ran.
+    val qe = spark.range(1).toDF("id").queryExecution
+    qe.optimizedPlan
+    val ran = qe.tracker.rules.keySet
+    for (rule <- Seq("graft.plans.RangeBinJoinRule",
+                     "graft.plans.LevenshteinThresholdRule"))
+      assert(ran.contains(rule), s"$rule is not installed")
+  }
+
+  test("GraftSession.create sets the engine conf the benchmark expects") {
+    val conf = spark.sparkContext.getConf.getAll.toMap ++ spark.conf.getAll
+    val expected = Map(
+      "spark.master" -> "local[4]",
+      "spark.sql.shuffle.partitions" -> "4",
+      "spark.sql.adaptive.enabled" -> "true",
+      "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "64k",
+      "spark.sql.codegen.cache.maxEntries" -> "5000",
+      "spark.ui.enabled" -> "false",
+      "spark.network.timeout" -> "600s",
+      "spark.executor.heartbeatInterval" -> "60s",
+      "spark.sql.session.timeZone" -> "UTC",
+      "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS")
+    val diff = expected.filter { case (k, v) => !conf.get(k).contains(v) }
+      .map { case (k, v) => s"$k: want $v, got ${conf.get(k)}" }
+    assert(diff.isEmpty, diff.mkString("; "))
+  }
+
+  test("no source file outside GraftSession.scala builds a SparkSession") {
+    val needle = "SparkSession" + ".builder"
+    val stream = Files.walk(Paths.get("src"))
+    val offenders =
+      try stream.iterator().asScala
+        .filter(p => p.toString.endsWith(".scala") &&
+          p.getFileName.toString != "GraftSession.scala")
+        .filter(p => new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
+          .contains(needle))
+        .map(_.toString).toSeq.sorted
+      finally stream.close()
+    assert(offenders.isEmpty,
+      s"build the session with GraftSession.create instead: ${offenders.mkString(", ")}")
+  }
+}

@@ -3,7 +3,6 @@ package graft
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Registry-completeness gate for the plan-review artifacts (round-4
@@ -17,14 +16,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * subset: each plan must build, and none may contain a bare
   * (non-broadcast) cartesian product.
   */
-class PlanCoverageSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+class PlanCoverageSpec extends AnyFunSuite with SharedSpark {
 
   private val sf = "/root/testdata/sf0.001"
 

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.QueryExecution
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -11,14 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * narrow stages, and no cartesian products outside the explicitly
   * broadcast query sets.
   */
-class PlanSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+class PlanSpec extends AnyFunSuite with SharedSpark {
 
   private val sf = "/root/testdata/sf0.001"
 
@@ -49,21 +41,19 @@ class PlanSpec extends AnyFunSuite {
     // pin): clip bounds must come from the mergeable
     // approx_percentile sketch — the exact `percentile` aggregate
     // buffers every group value per task, a per-task OOM at 100x.
-    spark.conf.set("spark.graft.winsorize.exactMaxRows", "0")
-    try {
+    val approx = withConf("spark.graft.winsorize.exactMaxRows" -> "0") {
       val p = plan("rel_winsorized_stats")
       assert(p.contains("approx_percentile"), p.take(600))
       assert(!p.replace("approx_percentile", "§").contains("percentile("),
         "exact percentile (full per-group value buffering) planned " +
           "above the threshold")
       // both regimes agree on group structure and clip-window width
-      val approx = SparkEntry.queries("rel_winsorized_stats")(spark, sf)
+      SparkEntry.queries("rel_winsorized_stats")(spark, sf)
         .collect().map(r => r.getString(0) -> r.getAs[Long]("n_rows")).toMap
-      spark.conf.unset("spark.graft.winsorize.exactMaxRows")
-      val exact = SparkEntry.queries("rel_winsorized_stats")(spark, sf)
-        .collect().map(r => r.getString(0) -> r.getAs[Long]("n_rows")).toMap
-      assert(approx == exact)
-    } finally spark.conf.unset("spark.graft.winsorize.exactMaxRows")
+    }
+    val exact = SparkEntry.queries("rel_winsorized_stats")(spark, sf)
+      .collect().map(r => r.getString(0) -> r.getAs[Long]("n_rows")).toMap
+    assert(approx == exact)
   }
 
   test("median-abs-deviation above the exact-row threshold buffers no " +
@@ -72,21 +62,19 @@ class PlanSpec extends AnyFunSuite {
     // percentile passes (group median + deviation median) must come
     // from the mergeable approx_percentile sketch — the exact
     // `percentile` aggregate buffers every group value per task.
-    spark.conf.set("spark.graft.mad.exactMaxRows", "0")
-    try {
+    val approx = withConf("spark.graft.mad.exactMaxRows" -> "0") {
       val p = plan("rel_median_abs_deviation")
       assert(p.contains("approx_percentile"), p.take(600))
       assert(!p.replace("approx_percentile", "§").contains("percentile("),
         "exact percentile (full per-group value buffering) planned " +
           "above the threshold")
       // both regimes agree on group structure
-      val approx = SparkEntry.queries("rel_median_abs_deviation")(spark, sf)
+      SparkEntry.queries("rel_median_abs_deviation")(spark, sf)
         .collect().map(r => r.getString(0) -> r.getAs[Long]("n_rows")).toMap
-      spark.conf.unset("spark.graft.mad.exactMaxRows")
-      val exact = SparkEntry.queries("rel_median_abs_deviation")(spark, sf)
-        .collect().map(r => r.getString(0) -> r.getAs[Long]("n_rows")).toMap
-      assert(approx == exact)
-    } finally spark.conf.unset("spark.graft.mad.exactMaxRows")
+    }
+    val exact = SparkEntry.queries("rel_median_abs_deviation")(spark, sf)
+      .collect().map(r => r.getString(0) -> r.getAs[Long]("n_rows")).toMap
+    assert(approx == exact)
   }
 
   test("as-of join is the joinless window-carry form") {

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.window.WindowExec
@@ -24,7 +23,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * cumulative frame IS corpus-sized (one row per doc), was moved off
   * WindowExec onto Ranking.runningSums for exactly this reason.
   */
-class WindowAuditSpec extends AnyFunSuite {
+class WindowAuditSpec extends AnyFunSuite with SharedSpark {
 
   private val allowlist = Set(
     "dedup_split_leakage",        // ≤ |splits|² cells
@@ -44,12 +43,6 @@ class WindowAuditSpec extends AnyFunSuite {
 
   test("no query outside the documented-tiny allowlist plans an " +
        "unpartitioned WindowExec") {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new functions.GraftExtensions)
-      .getOrCreate()
     val sfDir = "/root/testdata/sf0.001"
     def unpartitioned(p: SparkPlan): Boolean = p.collectFirst {
       case w: WindowExec if w.partitionSpec.isEmpty => true

@@ -2,9 +2,10 @@ package graft.core
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** Adaptive Query Execution behaviors the 100 TB posture leans on,
   * pinned on constructed data: runtime skew-join splitting (the
@@ -12,14 +13,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * coalescing (keeps task count proportional to data, not to the
   * static shuffle.partitions).
   */
-class AqeSpec extends AnyFunSuite {
+class AqeSpec extends AnyFunSuite with SharedSpark {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", 8)
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+  /** Every shape here runs through an 8-partition shuffle. */
+  private val Parts8 = "spark.sql.shuffle.partitions" -> "8"
 
   private def finalPlan(df: org.apache.spark.sql.DataFrame): String = {
     df.collect()
@@ -49,16 +46,13 @@ class AqeSpec extends AnyFunSuite {
     spark.range(0, 66L).select($"id".as("k"), ($"id" * 10).as("attr"))
       .write.mode("overwrite").parquet(dimDir)
 
-    val confs = Seq(
+    withConf(Parts8,
       "spark.sql.adaptive.enabled" -> "true",
       "spark.sql.adaptive.skewJoin.enabled" -> "true",
       "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2",
       "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "64KB",
       "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "64KB",
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-    val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       // Global aggregate, NOT groupBy(k): a regrouping on the join key
       // would need the join's hash partitioning, and the skew rule
       // refuses splits that force an extra downstream shuffle.
@@ -68,23 +62,22 @@ class AqeSpec extends AnyFunSuite {
       val plan = finalPlan(joined)
       assert(plan.contains("skew=true") || plan.contains("skewed"),
         s"expected a skew-split join in the final adaptive plan:\n$plan")
-    } finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
     }
   }
 
   test("AQE coalesces near-empty shuffle partitions") {
     import spark.implicits._
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
-    // 100 tiny groups through an 8-partition shuffle: AQE folds the
-    // near-empty outputs together instead of launching 8 reduce tasks.
-    val tiny = spark.range(0, 100L)
-      .groupBy(($"id" % 100).as("g")).agg(count(lit(1)).as("n"))
-    val plan = finalPlan(tiny)
-    assert(plan.contains("coalesced") || plan.contains("AQEShuffleRead"),
-      s"expected a coalesced AQE shuffle read:\n$plan")
+    withConf(Parts8,
+      "spark.sql.adaptive.enabled" -> "true",
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "true") {
+      // 100 tiny groups through an 8-partition shuffle: AQE folds the
+      // near-empty outputs together instead of launching 8 reduce tasks.
+      val tiny = spark.range(0, 100L)
+        .groupBy(($"id" % 100).as("g")).agg(count(lit(1)).as("n"))
+      val plan = finalPlan(tiny)
+      assert(plan.contains("coalesced") || plan.contains("AQEShuffleRead"),
+        s"expected a coalesced AQE shuffle read:\n$plan")
+    }
   }
 
   test("AQE upgrades a sort-merge join to broadcast at runtime") {
@@ -102,13 +95,10 @@ class AqeSpec extends AnyFunSuite {
     spark.range(0, 200000L)
       .select($"id".as("k"), md5($"id".cast("string")).as("attr"))
       .write.mode("overwrite").parquet(dimDir)
-    val confs = Seq(
+    withConf(Parts8,
       "spark.sql.adaptive.enabled" -> "true",
       // Small static threshold so the STATIC plan picks sort-merge...
-      "spark.sql.autoBroadcastJoinThreshold" -> "32KB")
-    val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
+      "spark.sql.autoBroadcastJoinThreshold" -> "32KB") {
       // ...the dim side shrinks through an aggregation (its output
       // stats become known when the stage finishes), and AQE replans
       // the join as broadcast.
@@ -121,9 +111,6 @@ class AqeSpec extends AnyFunSuite {
       val plan = finalPlan(joined)
       assert(plan.contains("BroadcastHashJoin"),
         s"expected a runtime broadcast upgrade:\n$plan")
-    } finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
     }
   }
 }

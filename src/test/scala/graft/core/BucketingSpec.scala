@@ -2,22 +2,11 @@ package graft.core
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.Tables
+import graft.{SharedSpark, Tables}
 
-class BucketingSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = {
-    val wh = Files.createTempDirectory("warehouse").toString
-    SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.warehouse.dir", wh)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-  }
+class BucketingSpec extends AnyFunSuite with SharedSpark {
 
   private def rmrf(f: java.io.File): Unit = {
     if (f.isDirectory) f.listFiles().foreach(rmrf)
@@ -42,22 +31,22 @@ class BucketingSpec extends AnyFunSuite {
     Bucketing.writeBucketed(
       Tables.lineitem(spark, sf).withColumnRenamed("l_orderkey", "orderkey"),
       "lineitem_b", "orderkey", buckets = 4)
-    // forbid broadcast so the zero-exchange claim is proven on the
-    // sort-merge path (broadcast would trivially skip the shuffle)
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", -1)
     val joined = Bucketing.bucketedJoin(spark, "lineitem_b", "orders_b", "orderkey")
       .groupBy($"o_orderpriority")
       .agg(org.apache.spark.sql.functions.count(
         org.apache.spark.sql.functions.lit(1)).as("n"))
-    joined.collect()
-    val plan = joined.queryExecution.executedPlan.toString
-    // the join itself must not shuffle: the only exchange allowed is
-    // the final aggregation's
-    val joinSection = plan.split("HashAggregate").last
-    assert(!joinSection.contains("Exchange hashpartitioning(orderkey"),
-      s"bucketed join should not re-shuffle on the bucket key:\n$plan")
-    assert(plan.contains("SortMergeJoin"), plan)
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10MB")
+    // forbid broadcast so the zero-exchange claim is proven on the
+    // sort-merge path (broadcast would trivially skip the shuffle)
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+      joined.collect()
+      val plan = joined.queryExecution.executedPlan.toString
+      // the join itself must not shuffle: the only exchange allowed is
+      // the final aggregation's
+      val joinSection = plan.split("HashAggregate").last
+      assert(!joinSection.contains("Exchange hashpartitioning(orderkey"),
+        s"bucketed join should not re-shuffle on the bucket key:\n$plan")
+      assert(plan.contains("SortMergeJoin"), plan)
+    }
     // correctness: equals the unbucketed join
     val expected = Tables.lineitem(spark, sf)
       .join(Tables.orders(spark, sf), $"l_orderkey" === $"o_orderkey")
@@ -234,9 +223,7 @@ class BucketingSpec extends AnyFunSuite {
     // whole table root — the classic data-loss misconfiguration).
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("dpo").toString
-    val saved = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try {
+    withConf("spark.sql.sources.partitionOverwriteMode" -> "dynamic") {
       Seq((1L, "2024-01-01"), (2L, "2024-01-02"))
         .toDF("v", "day")
         .write.partitionBy("day").mode("overwrite").parquet(dir)
@@ -248,9 +235,6 @@ class BucketingSpec extends AnyFunSuite {
         .collect().map(r => r.get(1).toString -> r.getLong(0)).toMap
       assert(got == Map("2024-01-01" -> 1L, "2024-01-02" -> 20L),
         s"sibling partition must survive: $got")
-    } finally saved match {
-      case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
     }
   }
 }

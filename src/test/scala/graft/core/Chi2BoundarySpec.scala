@@ -1,8 +1,9 @@
 package graft.core
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** Overflow-boundary pin for rel_chi2_independence's per-cell term
   * (ADVICE round 4): the registered expression squares o·n − r·c,
@@ -12,14 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * breaking point, and must agree with the int64 form inside its
   * old safe range.
   */
-class Chi2BoundarySpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+class Chi2BoundarySpec extends AnyFunSuite with SharedSpark {
 
   /** The registered cell expression, evaluated over literal margins. */
   private def sparkTerms(cells: Seq[(Long, Long, Long, Long)]): Seq[Long] = {

@@ -1,17 +1,12 @@
 package graft.core
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** Par.fan contract: repartition ONLY when the source is
   * split-starved, identity otherwise, values unchanged either way. */
-class ParSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ParSpec extends AnyFunSuite with SharedSpark {
 
   test("fan repartitions a split-starved frame to default parallelism") {
     import spark.implicits._

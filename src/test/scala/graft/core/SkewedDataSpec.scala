@@ -2,9 +2,11 @@ package graft.core
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** Round-4 verdict item 7: the driver testdata is uniform, so the
   * skew machinery (Joins.saltedJoin, AQE skew-join) existed but
@@ -14,14 +16,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * identical to the plain join — mitigation must never change
   * semantics.
   */
-class SkewedDataSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", 8)
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+class SkewedDataSpec extends AnyFunSuite with SharedSpark {
 
   /** Skewed corpus: sf 0.02, 30% of o_custkey / l_suppkey /
     * events.user_id on hot key 0 (orders=30k so the hot shuffle
@@ -86,13 +81,13 @@ class SkewedDataSpec extends AnyFunSuite {
   test("AQE splits the hot partition of the skewed sort-merge join " +
        "at runtime, result identical to the static plan") {
     val confs = Seq(
+      "spark.sql.shuffle.partitions" -> "8",
       "spark.sql.adaptive.enabled" -> "true",
       "spark.sql.adaptive.skewJoin.enabled" -> "true",
       "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2",
       "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "64KB",
       "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "64KB",
       "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-    val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
     def run(): (String, (Long, java.math.BigDecimal)) = {
       // global aggregate (no regroup on the join key) so the skew
       // rule is free to split — same shape AqeSpec documents.
@@ -111,18 +106,13 @@ class SkewedDataSpec extends AnyFunSuite {
       }
       (plan, (rows.getLong(0), rows.getDecimal(1)))
     }
-    try {
-      confs.foreach { case (k, v) => spark.conf.set(k, v) }
-      val (skewPlan, skewResult) = run()
-      assert(skewPlan.contains("skew=true") || skewPlan.contains("skewed"),
-        s"AQE did not split the hot partition:\n${skewPlan.take(1200)}")
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      val (_, plainResult) = run()
-      assert(skewResult == plainResult,
-        "skew split changed the join result")
-    } finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
+    val (skewPlan, skewResult) = withConf(confs: _*)(run())
+    assert(skewPlan.contains("skew=true") || skewPlan.contains("skewed"),
+      s"AQE did not split the hot partition:\n${skewPlan.take(1200)}")
+    val (_, plainResult) = withConf(confs: _*) {
+      withConf("spark.sql.adaptive.enabled" -> "false")(run())
     }
+    assert(skewResult == plainResult,
+      "skew split changed the join result")
   }
 }

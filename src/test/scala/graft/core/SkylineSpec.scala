@@ -1,22 +1,17 @@
 package graft.core
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** The two-level skyline: the local strict-dominance pre-filter must
   * never change the answer (dominance is transitive, so locally-
   * dominated ⇒ globally dominated) while shrinking the set the
   * global window sees.
   */
-class SkylineSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class SkylineSpec extends AnyFunSuite with SharedSpark {
 
   /** The direct single-window formulation as the reference. */
   private def direct(points: org.apache.spark.sql.DataFrame) = {

@@ -1,9 +1,8 @@
 package graft.core
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SparkEntry
+import graft.{SharedSpark, SparkEntry}
 
 /** The closing TPC-H wave (Q7/Q8/Q14/Q15/adapted Q22): result
   * invariants plus the plan shapes that matter at 100 TB — every dim
@@ -11,14 +10,7 @@ import graft.SparkEntry
   * (never collected), no accidental cartesian beyond the explicit
   * 1-row threshold cross joins.
   */
-class TpchFinalSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+class TpchFinalSpec extends AnyFunSuite with SharedSpark {
 
   private val sf = "/root/testdata/sf0.001"
 

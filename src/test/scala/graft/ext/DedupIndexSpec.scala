@@ -3,8 +3,9 @@ package graft.ext
 import java.io.File
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** The persisted dedup layout: every stored frame must equal its
   * in-session build row-for-row (the dedup_ oracles recompute those
@@ -12,13 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * gate), a second read must NOT rebuild, and the fingerprint must
   * change when documents.parquet changes.
   */
-class DedupIndexSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class DedupIndexSpec extends AnyFunSuite with SharedSpark {
 
   private val sf = "/root/testdata/sf0.001"
 

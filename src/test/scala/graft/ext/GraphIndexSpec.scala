@@ -3,8 +3,9 @@ package graft.ext
 import java.io.File
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** The persisted graph layout (round-6 verdict item 3): the stored
   * copurchase/interaction frames must equal the in-session builds
@@ -12,13 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * any divergence would go hash-red), a second read must NOT rebuild,
   * and the fingerprint must change when an input file changes.
   */
-class GraphIndexSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class GraphIndexSpec extends AnyFunSuite with SharedSpark {
 
   private val sf = "/root/testdata/sf0.001"
 

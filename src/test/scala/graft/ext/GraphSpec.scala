@@ -1,20 +1,15 @@
 package graft.ext
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** Pins the graph operators' exact semantics on constructed graphs
   * where the integer arithmetic can be verified by hand — the oracle
   * queries then check the same operators end-to-end on the testdata
   * graphs.
   */
-class GraphSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class GraphSpec extends AnyFunSuite with SharedSpark {
 
   private def sym(pairs: (Long, Long)*) = {
     import spark.implicits._

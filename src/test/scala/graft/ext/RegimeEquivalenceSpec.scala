@@ -1,16 +1,19 @@
 package graft.ext
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** Round-10 optimization guards: the scale regimes introduced for the
   * superlinear pair evals must be RESULT-NEUTRAL where they claim to
   * be.
   *
-  *  - dedup_ngram_jaccard / dedup_containment: the prefix-filtered
-  *    (PPJoin-style) big-corpus shape is exact — same rows as the
-  *    open gram self-join on the REAL corpus index at two SFs.
+  *  - dedup_ngram_jaccard / dedup_containment: the gram self-join
+  *    returns exactly the pairs a brute-force all-pairs comparison of
+  *    the collected gram sets finds, on the REAL corpus index at two
+  *    SFs (sf0.01 has 500 documents, ~125k pairs).
   *  - dedup_lsh_recall_curve / dedup_shingle_sweep: the 16-bit
   *    hex-threshold sample predicate at threshold 2048 must select
   *    exactly the docs the original two-hex-char predicate selected
@@ -20,43 +23,49 @@ import org.scalatest.funsuite.AnyFunSuite
   *    (bounded join never engages at oracle SFs); the shard key is
   *    stable and in [0, nSplits).
   */
-class RegimeEquivalenceSpec extends AnyFunSuite {
+class RegimeEquivalenceSpec extends AnyFunSuite with SharedSpark {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  private def rows(df: org.apache.spark.sql.DataFrame): Set[String] =
+  private def rows(df: DataFrame): Set[String] =
     df.collect().map(_.mkString("|")).toSet
 
-  private def gramsJ(sf: String) = {
-    import spark.implicits._
-    DedupIndex.grams3(spark, sf).select($"doc_id", $"gram", $"n")
-  }
+  /** doc_id → distinct gram set, collected to the driver. */
+  private def gramSets(grams: DataFrame): Map[Long, Set[String]] =
+    grams.select("doc_id", "gram").collect()
+      .groupBy(_.getLong(0)).map { case (d, rs) => d -> rs.map(_.getString(1)).toSet }
 
-  private def gramsC(sf: String) = {
-    import spark.implicits._
-    DedupIndex.grams3(spark, sf).filter($"ge3")
-      .select($"doc_id", $"gram", $"n")
+  /** Every doc pair a < b sharing a gram: (a, b, |A∩B|, |A|, |B|). */
+  private def bruteForcePairs(sets: Map[Long, Set[String]]) = {
+    val docs = sets.keys.toSeq.sorted
+    for {
+      (a, i) <- docs.zipWithIndex; b <- docs.drop(i + 1)
+      inter = sets(a).intersect(sets(b)).size.toLong if inter > 0
+    } yield (a, b, inter, sets(a).size.toLong, sets(b).size.toLong)
   }
 
   for (sf <- Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01")) {
-    test(s"ngram_jaccard prefix shape is exact at $sf") {
-      val sized = gramsJ(sf)
-      val open = rows(Dedup.ngramJaccardFrame(sized, prefixFiltered = false))
-      val pref = rows(Dedup.ngramJaccardFrame(sized, prefixFiltered = true))
-      assert(open.nonEmpty, "planted twins must produce pairs")
-      assert(pref == open)
+    test(s"ngram_jaccard equals brute-force Jaccard at $sf") {
+      val grams = DedupIndex.grams3(spark, sf).select("doc_id", "gram", "n")
+      val got = Dedup.ngramJaccardFrame(grams).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+      val want = bruteForcePairs(gramSets(grams)).map {
+        case (a, b, i, na, nb) => (a, b, i.toDouble / (na + nb - i).toDouble)
+      }.filter(_._3 >= 0.5).toSet
+      assert(want.nonEmpty, "planted twins must produce pairs")
+      assert(got == want)
     }
 
-    test(s"containment prefix shape is exact at $sf") {
-      val sized = gramsC(sf)
-      val open = rows(Dedup.containmentFrame(sized, prefixFiltered = false))
-      val pref = rows(Dedup.containmentFrame(sized, prefixFiltered = true))
-      assert(open.nonEmpty, "planted twins must produce pairs")
-      assert(pref == open)
+    test(s"containment equals brute-force containment at $sf") {
+      val grams = DedupIndex.grams3(spark, sf).filter("ge3")
+        .select("doc_id", "gram", "n")
+      val got = Dedup.containmentFrame(grams).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
+          r.getLong(4), r.getDouble(5))).toSet
+      val want = bruteForcePairs(gramSets(grams)).map {
+        case (a, b, i, na, nb) =>
+          (a, b, i, na, nb, i.toDouble / math.min(na, nb).toDouble)
+      }.filter(_._6 >= 0.8).toSet
+      assert(want.nonEmpty, "planted twins must produce pairs")
+      assert(got == want)
     }
   }
 

@@ -1,23 +1,15 @@
 package graft.ext
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SparkEntry
+import graft.{SharedSpark, SparkEntry}
 
 /** Semantic pins + partition-count invariance for the round-5
   * pipeline wave (ev_srm_check, sim_rrf_fusion, txt_dsir_weights,
   * dedup_semdedup, sim_ivf_imbalance, gr_resource_allocation).
   */
-class Round10Spec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+class Round10Spec extends AnyFunSuite with SharedSpark {
 
   private val sf001 = "/root/testdata/sf0.001"
   private val sf01 = "/root/testdata/sf0.01"
@@ -288,16 +280,6 @@ class Round10Spec extends AnyFunSuite {
       "ev_cuped" -> sf001, "ev_diff_in_diff" -> sf001,
       "sim_embedding_drift" -> sf001, "mm_modality_pack" -> sf001,
       "sim_mips_topk" -> sf001)
-    def snapshot(name: String, d: String): Seq[String] =
-      run(name, d).collect().map(_.toString).sorted.toSeq
-    for ((name, d) <- queries) {
-      spark.conf.set("spark.sql.shuffle.partitions", 4)
-      val a = snapshot(name, d)
-      spark.conf.set("spark.sql.shuffle.partitions", 7)
-      val b = snapshot(name, d)
-      spark.conf.set("spark.sql.shuffle.partitions", 4)
-      assert(a == b, s"$name varies with partition count")
-      assert(a.nonEmpty, s"$name returned no rows at $d")
-    }
+    assertPartitionInvariant(queries)
   }
 }

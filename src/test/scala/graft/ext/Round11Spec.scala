@@ -1,23 +1,15 @@
 package graft.ext
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SparkEntry
+import graft.{SharedSpark, SparkEntry}
 
 /** Semantic pins + partition-count invariance for the round-5
   * layout-and-planning wave (rel_compaction_plan, rel_zorder_layout,
   * ev_power_analysis, gr_sssp).
   */
-class Round11Spec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+class Round11Spec extends AnyFunSuite with SharedSpark {
 
   private val sf001 = "/root/testdata/sf0.001"
   private val sf01 = "/root/testdata/sf0.01"
@@ -138,16 +130,6 @@ class Round11Spec extends AnyFunSuite {
     val queries = Seq("rel_compaction_plan" -> sf001,
       "rel_zorder_layout" -> sf001, "ev_power_analysis" -> sf001,
       "gr_sssp" -> sf001)
-    def snapshot(name: String, d: String): Seq[String] =
-      run(name, d).collect().map(_.toString).sorted.toSeq
-    for ((name, d) <- queries) {
-      spark.conf.set("spark.sql.shuffle.partitions", 4)
-      val a = snapshot(name, d)
-      spark.conf.set("spark.sql.shuffle.partitions", 7)
-      val b = snapshot(name, d)
-      spark.conf.set("spark.sql.shuffle.partitions", 4)
-      assert(a == b, s"$name varies with partition count")
-      assert(a.nonEmpty, s"$name returned no rows at $d")
-    }
+    assertPartitionInvariant(queries)
   }
 }

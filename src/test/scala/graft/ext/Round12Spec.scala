@@ -1,22 +1,14 @@
 package graft.ext
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SparkEntry
+import graft.{SharedSpark, SparkEntry}
 
 /** Semantic pins + partition-count invariance for the round-5
   * incremental/measurement wave (dedup_incremental,
   * rel_zone_map_prune, ev_factorial_interaction).
   */
-class Round12Spec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+class Round12Spec extends AnyFunSuite with SharedSpark {
 
   private val sf001 = "/root/testdata/sf0.001"
   private val sf01 = "/root/testdata/sf0.01"
@@ -106,16 +98,6 @@ class Round12Spec extends AnyFunSuite {
        "and 7 shuffle partitions") {
     val queries = Seq("dedup_incremental" -> sf001,
       "rel_zone_map_prune" -> sf001, "ev_factorial_interaction" -> sf001)
-    def snapshot(name: String, d: String): Seq[String] =
-      run(name, d).collect().map(_.toString).sorted.toSeq
-    for ((name, d) <- queries) {
-      spark.conf.set("spark.sql.shuffle.partitions", 4)
-      val a = snapshot(name, d)
-      spark.conf.set("spark.sql.shuffle.partitions", 7)
-      val b = snapshot(name, d)
-      spark.conf.set("spark.sql.shuffle.partitions", 4)
-      assert(a == b, s"$name varies with partition count")
-      assert(a.nonEmpty, s"$name returned no rows at $d")
-    }
+    assertPartitionInvariant(queries)
   }
 }

@@ -1,22 +1,14 @@
 package graft.ext
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SparkEntry
+import graft.{SharedSpark, SparkEntry}
 
 /** Semantic pins + partition-count invariance for the round-5
   * statistics/layout wave (gr_jaccard_linkpred,
   * rel_histogram_equidepth, rel_encoding_advisor).
   */
-class Round14Spec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+class Round14Spec extends AnyFunSuite with SharedSpark {
 
   private val sf001 = "/root/testdata/sf0.001"
   private val sf01 = "/root/testdata/sf0.01"
@@ -126,16 +118,6 @@ class Round14Spec extends AnyFunSuite {
        "shuffle partitions") {
     val queries = Seq("gr_jaccard_linkpred" -> sf001,
       "rel_histogram_equidepth" -> sf001, "rel_encoding_advisor" -> sf001)
-    def snapshot(name: String, d: String): Seq[String] =
-      run(name, d).collect().map(_.toString).sorted.toSeq
-    for ((name, d) <- queries) {
-      spark.conf.set("spark.sql.shuffle.partitions", 4)
-      val a = snapshot(name, d)
-      spark.conf.set("spark.sql.shuffle.partitions", 7)
-      val b = snapshot(name, d)
-      spark.conf.set("spark.sql.shuffle.partitions", 4)
-      assert(a == b, s"$name varies with partition count")
-      assert(a.nonEmpty, s"$name returned no rows at $d")
-    }
+    assertPartitionInvariant(queries)
   }
 }

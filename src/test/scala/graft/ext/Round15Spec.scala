@@ -1,22 +1,14 @@
 package graft.ext
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SparkEntry
+import graft.{SharedSpark, SparkEntry}
 
 /** Semantic pins + partition-count invariance for the round-5
   * alignment/rewrite wave (mm_av_align, rel_view_answer,
   * ev_funnel_windows).
   */
-class Round15Spec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+class Round15Spec extends AnyFunSuite with SharedSpark {
 
   private val sf001 = "/root/testdata/sf0.001"
   private val sf01 = "/root/testdata/sf0.01"
@@ -110,16 +102,6 @@ class Round15Spec extends AnyFunSuite {
        "and 7 shuffle partitions") {
     val queries = Seq("mm_av_align" -> sf001,
       "rel_view_answer" -> sf001, "ev_funnel_windows" -> sf001)
-    def snapshot(name: String, d: String): Seq[String] =
-      run(name, d).collect().map(_.toString).sorted.toSeq
-    for ((name, d) <- queries) {
-      spark.conf.set("spark.sql.shuffle.partitions", 4)
-      val a = snapshot(name, d)
-      spark.conf.set("spark.sql.shuffle.partitions", 7)
-      val b = snapshot(name, d)
-      spark.conf.set("spark.sql.shuffle.partitions", 4)
-      assert(a == b, s"$name varies with partition count")
-      assert(a.nonEmpty, s"$name returned no rows at $d")
-    }
+    assertPartitionInvariant(queries)
   }
 }

@@ -1,10 +1,10 @@
 package graft.ext
 
-import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.{SparkEntry, Tables}
+import graft.{SharedSpark, SparkEntry, Tables}
 import graft.core.Joins
 
 /** Targeted semantics for the round-3 operators, beyond the DuckDB
@@ -13,14 +13,7 @@ import graft.core.Joins
   * rules, session-window accounting, BPE piece boundaries, and IVF
   * assignment fixpoints.
   */
-class Round3Spec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+class Round3Spec extends AnyFunSuite with SharedSpark {
 
   private val sf = "/root/testdata/sf0.001"
 

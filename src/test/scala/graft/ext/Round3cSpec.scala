@@ -1,23 +1,15 @@
 package graft.ext
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.{SparkEntry, Tables}
+import graft.{SharedSpark, SparkEntry, Tables}
 
 /** Targeted semantics for the round-3 third wave, beyond the DuckDB
   * hash gate: anomaly-window accounting, conversion-lag arithmetic,
   * SCD2 run structure, bigram-LM ranking, and k-NN graph shape.
   */
-class Round3cSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+class Round3cSpec extends AnyFunSuite with SharedSpark {
 
   private val sf = "/root/testdata/sf0.001"
 

@@ -1,9 +1,8 @@
 package graft.ext
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SparkEntry
+import graft.SharedSpark
 
 /** Partition-count invariance for the continuation-session queries:
   * every result must be IDENTICAL (row multiset, exact values) under
@@ -12,14 +11,7 @@ import graft.SparkEntry
   * built on integer/decimal arithmetic or selected (not computed)
   * floats must not vary by a bit.
   */
-class Round4InvarianceSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+class Round4InvarianceSpec extends AnyFunSuite with SharedSpark {
 
   private val sf = "/root/testdata/sf0.001"
 
@@ -34,17 +26,6 @@ class Round4InvarianceSpec extends AnyFunSuite {
     "sim_threshold_sweep", "rel_window_semantics")
 
   test("results are bit-identical under 4 and 7 shuffle partitions") {
-    def snapshot(name: String): Seq[String] =
-      SparkEntry.queries(name)(spark, sf).collect()
-        .map(_.toString).sorted.toSeq
-    for (name <- queries) {
-      spark.conf.set("spark.sql.shuffle.partitions", 4)
-      val a = snapshot(name)
-      spark.conf.set("spark.sql.shuffle.partitions", 7)
-      val b = snapshot(name)
-      spark.conf.set("spark.sql.shuffle.partitions", 4)
-      assert(a == b, s"$name varies with partition count")
-      assert(a.nonEmpty, s"$name returned no rows at sf0.001")
-    }
+    assertPartitionInvariant(queries.map(_ -> sf))
   }
 }

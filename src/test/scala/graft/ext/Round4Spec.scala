@@ -1,23 +1,15 @@
 package graft.ext
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SparkEntry
+import graft.{SharedSpark, SparkEntry}
 
 /** Targeted semantics for the round-3 fourth wave, beyond the DuckDB
   * hash gate: weighted-sample determinism, PMI margin accounting, and
   * the integer readability formula.
   */
-class Round4Spec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+class Round4Spec extends AnyFunSuite with SharedSpark {
 
   private val sf = "/root/testdata/sf0.001"
 

@@ -1,10 +1,9 @@
 package graft.ext
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SparkEntry
+import graft.SharedSpark
 
 /** Round-6 invariance pins. Same contract as the earlier
   * *InvarianceSpec suites: identical row multisets under different
@@ -14,14 +13,7 @@ import graft.SparkEntry
   * costs, inner-asof alignment, explicit one-row broadcasts) and the
   * new distributed prefix-sum path under txt_vocab_growth.
   */
-class Round6InvarianceSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+class Round6InvarianceSpec extends AnyFunSuite with SharedSpark {
 
   private val sf = "/root/testdata/sf0.001"
 
@@ -32,18 +24,7 @@ class Round6InvarianceSpec extends AnyFunSuite {
 
   test("round-6-touched results are bit-identical under 4 and 7 " +
        "shuffle partitions") {
-    def snapshot(name: String): Seq[String] =
-      SparkEntry.queries(name)(spark, sf).collect()
-        .map(_.toString).sorted.toSeq
-    for (name <- queries) {
-      spark.conf.set("spark.sql.shuffle.partitions", 4)
-      val a = snapshot(name)
-      spark.conf.set("spark.sql.shuffle.partitions", 7)
-      val b = snapshot(name)
-      spark.conf.set("spark.sql.shuffle.partitions", 4)
-      assert(a == b, s"$name varies with partition count")
-      assert(a.nonEmpty, s"$name returned no rows at sf0.001")
-    }
+    assertPartitionInvariant(queries.map(_ -> sf))
   }
 
   test("Ranking.runningSums equals the single-partition window on a " +

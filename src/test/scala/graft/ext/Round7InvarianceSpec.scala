@@ -1,10 +1,9 @@
 package graft.ext
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SparkEntry
+import graft.SharedSpark
 
 /** Partition-count invariance + semantic pins for the round-4
   * additions (same contract as [[Session4InvarianceSpec]]), plus the
@@ -12,14 +11,7 @@ import graft.SparkEntry
   * scan — the one property sf-dir testdata cannot exercise (its keys
   * all land in bucket 0).
   */
-class Round7InvarianceSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+class Round7InvarianceSpec extends AnyFunSuite with SharedSpark {
 
   private val sf = "/root/testdata/sf0.001"
 
@@ -29,22 +21,11 @@ class Round7InvarianceSpec extends AnyFunSuite {
     "mm_decode_features", "rel_price_deciles")
 
   test("results are bit-identical under 4 and 7 shuffle partitions") {
-    def snapshot(name: String): Seq[String] =
-      SparkEntry.queries(name)(spark, sf).collect()
-        .map(_.toString).sorted.toSeq
-    for (name <- queries) {
-      spark.conf.set("spark.sql.shuffle.partitions", 4)
-      val a = snapshot(name)
-      spark.conf.set("spark.sql.shuffle.partitions", 7)
-      val b = snapshot(name)
-      spark.conf.set("spark.sql.shuffle.partitions", 4)
-      assert(a == b, s"$name varies with partition count")
-      // rel_sequence_gaps is legitimately empty at sf0.001 (no
-      // orderkeys in its sampled slice); its content is pinned by the
-      // synthetic bucket-boundary test below.
-      if (name != "rel_sequence_gaps")
-        assert(a.nonEmpty, s"$name returned no rows at sf0.001")
-    }
+    // rel_sequence_gaps is legitimately empty at sf0.001 (no
+    // orderkeys in its sampled slice); its content is pinned by the
+    // synthetic bucket-boundary test below.
+    assertPartitionInvariant(queries.map(_ -> sf),
+      mayBeEmpty = Set("rel_sequence_gaps"))
   }
 
   test("bucketed sequence gaps equal the naive global lead across " +

@@ -3,7 +3,7 @@ package graft.ext
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SparkEntry
+import graft.{SharedSpark, SparkEntry}
 
 /** Partition-count invariance + semantic pins for the round-4 second
   * wave (multimodal dedup verdict, SQ8 recall, cleaning funnel, Q2
@@ -12,14 +12,7 @@ import graft.SparkEntry
   * counts, plus the hand-checkable properties the sf-dir oracles
   * cannot pin on their own.
   */
-class Round9Spec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+class Round9Spec extends AnyFunSuite with SharedSpark {
 
   private val sf = "/root/testdata/sf0.001"
 
@@ -43,18 +36,7 @@ class Round9Spec extends AnyFunSuite {
     "rel_keep_last_n", "dedup_cluster_purity")
 
   test("results are bit-identical under 4 and 7 shuffle partitions") {
-    def snapshot(name: String): Seq[String] =
-      SparkEntry.queries(name)(spark, sf).collect()
-        .map(_.toString).sorted.toSeq
-    for (name <- queries) {
-      spark.conf.set("spark.sql.shuffle.partitions", 4)
-      val a = snapshot(name)
-      spark.conf.set("spark.sql.shuffle.partitions", 7)
-      val b = snapshot(name)
-      spark.conf.set("spark.sql.shuffle.partitions", 4)
-      assert(a == b, s"$name varies with partition count")
-      assert(a.nonEmpty, s"$name returned no rows at sf0.001")
-    }
+    assertPartitionInvariant(queries.map(_ -> sf))
   }
 
   test("multimodal verdict keeps exactly one doc per cluster and " +

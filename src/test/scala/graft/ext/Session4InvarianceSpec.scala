@@ -1,9 +1,8 @@
 package graft.ext
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SparkEntry
+import graft.{SharedSpark, SparkEntry}
 
 /** Partition-count invariance + semantic pins for the session-4
   * additions. Same contract as [[Round4InvarianceSpec]] /
@@ -11,14 +10,7 @@ import graft.SparkEntry
   * shuffle-partition counts — the determinism the DuckDB oracle gate
   * cannot see (it runs one configuration).
   */
-class Session4InvarianceSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+class Session4InvarianceSpec extends AnyFunSuite with SharedSpark {
 
   private val sf = "/root/testdata/sf0.001"
 
@@ -31,18 +23,7 @@ class Session4InvarianceSpec extends AnyFunSuite {
     "ev_forecast_backtest")
 
   test("results are bit-identical under 4 and 7 shuffle partitions") {
-    def snapshot(name: String): Seq[String] =
-      SparkEntry.queries(name)(spark, sf).collect()
-        .map(_.toString).sorted.toSeq
-    for (name <- queries) {
-      spark.conf.set("spark.sql.shuffle.partitions", 4)
-      val a = snapshot(name)
-      spark.conf.set("spark.sql.shuffle.partitions", 7)
-      val b = snapshot(name)
-      spark.conf.set("spark.sql.shuffle.partitions", 4)
-      assert(a == b, s"$name varies with partition count")
-      assert(a.nonEmpty, s"$name returned no rows at sf0.001")
-    }
+    assertPartitionInvariant(queries.map(_ -> sf))
   }
 
   test("fingerprint is order-free: identical over a reshuffled input") {

@@ -2,24 +2,17 @@ package graft.ext
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SparkEntry
+import graft.{SharedSpark, SparkEntry}
 
 /** The persisted IVF layout: probing must (a) return exactly what the
   * in-session sim_ann_ivf pipeline computes on the same corpus, and
   * (b) physically read only the probed cell directories — ANN
   * candidate generation as partition pruning.
   */
-class SimilarityIndexSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class SimilarityIndexSpec extends AnyFunSuite with SharedSpark {
 
   private val sf = "/root/testdata/sf0.001"
 

@@ -1,31 +1,16 @@
 package graft.functions
 
 import com.fasterxml.jackson.databind.ObjectMapper
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.explode
 import org.scalatest.funsuite.AnyFunSuite
 
 import scala.jdk.CollectionConverters._
 
+import graft.SharedSpark
 import graft.parity.{ColumnStructure, FarmPipeline, RefText}
 import graft.sources.BlockSource
 
-class NativeFunctionsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = {
-    // withExtensions only applies when this builder creates the
-    // session; under sbt the suites share one JVM and getOrCreate may
-    // return an earlier suite's session — register on it explicitly
-    // (the same call a non-extensions deployment uses).
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    NativeFunctions.register(s)
-    s
-  }
+class NativeFunctionsSpec extends AnyFunSuite with SharedSpark {
 
   private val mapper = new ObjectMapper()
 
@@ -130,7 +115,9 @@ class NativeFunctionsSpec extends AnyFunSuite {
         s"parts=$parts")
     }
     // all-null group → null result; SQL registration path works
+    // (mode_det is registered, not injected by GraftExtensions)
     rows.toDF("k", "v").createOrReplaceTempView("modetest")
+    NativeFunctions.register(spark)
     val viaSql = spark.sql(
       "SELECT k, mode_det(v) AS m FROM modetest WHERE v IS NULL GROUP BY k")
       .collect()

@@ -1,25 +1,18 @@
 package graft.parity
 
 import com.fasterxml.jackson.databind.ObjectMapper
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import scala.jdk.CollectionConverters._
 
+import graft.SharedSpark
 import graft.sources.{BlockSource, TextractConnector}
 
 /** End-to-end: the distributed Spark pipeline must reproduce the
   * reference's CSV output byte-for-byte on the golden fixtures
   * (including the randomized 3-page two-column document).
   */
-class PipelineSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+class PipelineSpec extends AnyFunSuite with SharedSpark {
 
   private val mapper = new ObjectMapper()
 

@@ -1,33 +1,17 @@
 package graft.plans
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** RangeBinJoinRule: a natural BETWEEN join plans as a binned hash
   * join (no nested-loop operator), the rewrite preserves semantics
   * exactly (bounds, nulls, inverted intervals), and out-of-scope
   * shapes are left alone.
   */
-class RangeBinJoinSpec extends AnyFunSuite {
-
-  // getOrCreate may return a session another suite built WITHOUT
-  // GraftExtensions (extensions bind at session creation), so the
-  // rule is attached via experimental.extraOptimizations — the
-  // injection path for live sessions. GraftExtensions wiring itself
-  // is covered by the Verify-session oracle run (rel_range_join_auto).
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    if (!s.experimental.extraOptimizations.contains(RangeBinJoinRule))
-      s.experimental.extraOptimizations =
-        s.experimental.extraOptimizations :+ RangeBinJoinRule
-    s
-  }
+class RangeBinJoinSpec extends AnyFunSuite with SharedSpark {
 
   // Parquet-backed so ConvertToLocalRelation can't fold the join away.
   private lazy val (pointsPath, intervalsPath) = {
@@ -134,11 +118,10 @@ class RangeBinJoinSpec extends AnyFunSuite {
   }
 
   test("bin width conf is honored") {
-    spark.conf.set("spark.graft.rangeJoin.binWidth", "64")
-    try {
+    withConf("spark.graft.rangeJoin.binWidth" -> "64") {
       val got = naturalJoin().select(col("p"), col("ival_id")).collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(got == expected())
-    } finally spark.conf.unset("spark.graft.rangeJoin.binWidth")
+    }
   }
 }

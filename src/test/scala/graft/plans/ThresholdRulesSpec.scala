@@ -1,22 +1,16 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.expr
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** The levenshtein-threshold optimizer rule: every comparison
   * direction rewrites to the banded three-argument form, the rewrite
   * is semantics-preserving (incl. nulls), and guarded thresholds are
   * left alone.
   */
-class ThresholdRulesSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+class ThresholdRulesSpec extends AnyFunSuite with SharedSpark {
 
   // (a, b, distance); one null row exercises null-intolerance.
   // Parquet-backed (not a LocalRelation): ConvertToLocalRelation would
@@ -59,23 +53,21 @@ class ThresholdRulesSpec extends AnyFunSuite {
   }
 
   test("rewrite is semantics-preserving through the optimizer") {
-    spark.experimental.extraOptimizations = Seq(LevenshteinThresholdRule)
-    try {
-      for ((pred, keep) <- Seq(
-          ("levenshtein(a, b) <= 2", (d: Int) => d <= 2),
-          ("levenshtein(a, b) < 3", (d: Int) => d < 3),
-          ("levenshtein(a, b) > 2", (d: Int) => d > 2),
-          ("levenshtein(a, b) >= 2", (d: Int) => d >= 2))) {
-        val got = pairs.filter(expr(pred))
-          .select("a", "b").collect().map(r => (r.getString(0), r.getString(1))).toSet
-        val want = pairs.collect()
-          .filter(r => !r.isNullAt(0) && keep(r.getInt(2)))
-          .map(r => (r.getString(0), r.getString(1))).toSet
-        assert(got === want, pred)
-        // And the optimized plan really took the banded form.
-        val opt = pairs.filter(expr(pred)).queryExecution.optimizedPlan.toString
-        assert(opt.matches("(?s).*levenshtein\\(.*Some\\(\\d+\\)\\).*"), opt)
-      }
-    } finally spark.experimental.extraOptimizations = Nil
+    // The session installs the rule through GraftExtensions.
+    for ((pred, keep) <- Seq(
+        ("levenshtein(a, b) <= 2", (d: Int) => d <= 2),
+        ("levenshtein(a, b) < 3", (d: Int) => d < 3),
+        ("levenshtein(a, b) > 2", (d: Int) => d > 2),
+        ("levenshtein(a, b) >= 2", (d: Int) => d >= 2))) {
+      val got = pairs.filter(expr(pred))
+        .select("a", "b").collect().map(r => (r.getString(0), r.getString(1))).toSet
+      val want = pairs.collect()
+        .filter(r => !r.isNullAt(0) && keep(r.getInt(2)))
+        .map(r => (r.getString(0), r.getString(1))).toSet
+      assert(got === want, pred)
+      // And the optimized plan really took the banded form.
+      val opt = pairs.filter(expr(pred)).queryExecution.optimizedPlan.toString
+      assert(opt.matches("(?s).*levenshtein\\(.*Some\\(\\d+\\)\\).*"), opt)
+    }
   }
 }

@@ -2,8 +2,9 @@ package graft.sources
 
 import java.time.Instant
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** The production AWS binding, driven entirely offline:
   *
@@ -20,16 +21,10 @@ import org.scalatest.funsuite.AnyFunSuite
   *    as `missing-key:` — a different failure class from a FAILED
   *    OCR job (round-4 verdict item 1).
   */
-class AwsOcrClientSpec extends AnyFunSuite {
+class AwsOcrClientSpec extends AnyFunSuite with SharedSpark {
 
   private val AK = "AKIDEXAMPLE"
   private val SK = "wJalrXUtnFEMI/K7MDENG+bPxRfiCYEXAMPLEKEY"
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   // ------------------------------------------------------------- sigv4 kat
 

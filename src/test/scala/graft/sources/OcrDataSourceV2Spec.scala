@@ -1,8 +1,9 @@
 package graft.sources
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** No-arg failing client, loadable by FQCN via the `client` option. */
 class FailingOcrClient extends TextractConnector.OcrClient {
@@ -15,13 +16,7 @@ class FailingOcrClient extends TextractConnector.OcrClient {
 
 /** The DSv2 OCR source: shortname registration, per-document
   * partitions, BlockType pushdown, column pruning, quarantine. */
-class OcrDataSourceV2Spec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class OcrDataSourceV2Spec extends AnyFunSuite with SharedSpark {
 
   private def read(keys: String, extra: (String, String)*) = {
     val r = spark.read.format("graft-ocr").option("keys", keys)

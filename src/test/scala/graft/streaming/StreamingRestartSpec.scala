@@ -2,10 +2,12 @@ package graft.streaming
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** Crash-replay matrix (round-4 verdict item 8): every stateful
   * streaming op must survive a forced stop + restart from its
@@ -23,14 +25,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * shared checkpoint: batch 1 → hard stop mid-state → batch 2 →
   * fresh query, same checkpoint.
   */
-class StreamingRestartSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+class StreamingRestartSpec extends AnyFunSuite with SharedSpark {
 
   private def tmp(p: String) = Files.createTempDirectory(p).toString
 
