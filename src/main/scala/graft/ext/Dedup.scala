@@ -103,26 +103,6 @@ object Dedup {
   private val normSql =
     "trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))"
 
-  /** 4-seed MinHash signature per doc over 5-char shingles, fused
-    * into the one-pass [[graft.functions.MinHashSig]] rolling-hash
-    * expression: signature computation is a pure narrow map — no
-    * shingle explode, no per-shingle md5, no shuffle at all. The
-    * earlier explode→4×md5→groupBy formulation allocated ~4 strings
-    * per character of corpus text and collapsed under concurrent GC
-    * pressure at high task parallelism; this form reads each document
-    * once and writes one 4-long row. Docs shorter than one shingle
-    * (norm < k code points) get a null signature — mirrored by the
-    * oracle's CASE guard — and null band hashes never join. */
-  def minhashSignatures(df: DataFrame, k: Int = 5): DataFrame = {
-    val s = df.sparkSession
-    import s.implicits._
-    df.select($"doc_id",
-        graft.functions.NativeFunctions.minHashSig(norm($"text"), k).as("sig"))
-      .select($"doc_id",
-        $"sig".getItem(0).as("h1"), $"sig".getItem(1).as("h2"),
-        $"sig".getItem(2).as("h3"), $"sig".getItem(3).as("h4"))
-  }
-
   /** Oracle mirror of [[graft.functions.MinHashSig]] for k=5: the
     * k-gram polynomial hash recomputed the quadratic way (31-base
     * positional sum mod 1e9+7), then the per-seed affine min. Seeds

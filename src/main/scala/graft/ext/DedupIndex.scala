@@ -1,8 +1,5 @@
 package graft.ext
 
-import java.io.File
-import java.security.MessageDigest
-
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -56,41 +53,29 @@ import graft.Tables
   * to the text), and the gram/shingle stores are corpus-sized but
   * amortized across every eval plus the incremental pipeline; on a
   * real cluster they'd be written `bucketBy(doc_id)` (grams by gram)
-  * so downstream joins read co-located runs. Freshness/atomicity
-  * are the GraphIndex mechanics: the directory is keyed by an md5
-  * fingerprint of documents.parquet (path, length, mtime) plus a
-  * format version; builds write to a unique tmp dir and rename into
-  * place, marker file last.
+  * so downstream joins read co-located runs. Freshness and atomicity
+  * are the shared [[Store]] mechanics (fingerprint of
+  * documents.parquet).
   */
 object DedupIndex {
 
-  /** Bumped whenever the stored schema/derivation changes. */
-  private val FormatVersion = 3
-
-  private def root: String = sys.env.getOrElse("SPARK_GRAFT_INDEX_DIR",
-    s"${sys.props("java.io.tmpdir")}/graft-dedup-index")
-
-  /** md5 over (relative path, length, mtime) of every file under
-    * documents.parquet — any regeneration changes it. Visible for
-    * the spec. The "dedup-v" prefix keeps the namespace disjoint
-    * from GraphIndex when both share SPARK_GRAFT_INDEX_DIR. */
-  private[ext] def fingerprint(sfDir: String): String = {
-    val md = MessageDigest.getInstance("MD5")
-    md.update(s"dedup-v$FormatVersion".getBytes("UTF-8"))
-    def walk(f: File, rel: String): Unit =
-      if (f.isDirectory)
-        f.listFiles().sortBy(_.getName)
-          .foreach(c => walk(c, s"$rel/${c.getName}"))
-      else
-        md.update(s"$rel:${f.length}:${f.lastModified}".getBytes("UTF-8"))
-    val f = new File(sfDir, "documents.parquet")
-    md.update("documents.parquet".getBytes("UTF-8"))
-    if (f.exists()) walk(f, "documents.parquet")
-    md.digest().map("%02x".format(_)).mkString
-  }
-
-  private[ext] def indexDir(sfDir: String): File =
-    new File(root, s"dedup-${fingerprint(sfDir)}")
+  private[ext] val store = new Store("dedup", version = 3,
+    Seq("documents.parquet"), Seq(
+      Frame("signatures", 4, "doc_id", Seq("doc_id"),
+        (s, d, _) => buildSignatures(s, d)),
+      // Candidates derive from the just-written signatures (one read,
+      // not a second MinHash pass).
+      Frame("candidates", 4, "doc_a", Seq("doc_a", "doc_b"),
+        (s, _, tmp) => Dedup.lshCandidates(s.read.parquet(s"$tmp/signatures")
+          .select("doc_id", "h1", "h2", "h3", "h4"))),
+      Frame("hgrams5", 8, "h", Seq("h", "doc_id"),
+        (s, d, _) => buildHgrams5(s, d)),
+      Frame("grams3", 8, "gram", Seq("gram", "doc_id"),
+        (s, d, _) => buildGrams3(s, d)),
+      Frame("spans", 8, "doc_id", Seq("doc_id", "i"),
+        (s, d, _) => buildSpans(s, d)),
+      Frame("toks16", 4, "doc_id", Seq("doc_id", "v16"),
+        (s, d, _) => buildToks16(s, d))))
 
   /** Normalized text for shingling — must stay bit-identical to
     * [[Dedup]]'s norm (the oracles recompute it in DuckDB). */
@@ -208,61 +193,32 @@ object DedupIndex {
         min($"doc_id").over(wSpan) =!= max($"doc_id").over(wSpan))
   }
 
-  /** Build all frames under a fresh tmp dir, then atomically rename
-    * into place ([[IndexUtil.install]] — marker last, race losers and
-    * failed builds deleted). */
-  private def ensure(s: SparkSession, sfDir: String): File = synchronized {
-    IndexUtil.install(new File(root), indexDir(sfDir), { tmp =>
-      buildSignatures(s, sfDir)
-        .repartition(4, col("doc_id")).sortWithinPartitions("doc_id")
-        .write.mode("overwrite").parquet(s"$tmp/signatures")
-      // Candidates derive from the just-written signatures (one read,
-      // not a second MinHash pass).
-      Dedup.lshCandidates(s.read.parquet(s"$tmp/signatures")
-          .select("doc_id", "h1", "h2", "h3", "h4"))
-        .repartition(4, col("doc_a")).sortWithinPartitions("doc_a", "doc_b")
-        .write.mode("overwrite").parquet(s"$tmp/candidates")
-      buildHgrams5(s, sfDir)
-        .repartition(8, col("h")).sortWithinPartitions("h", "doc_id")
-        .write.mode("overwrite").parquet(s"$tmp/hgrams5")
-      buildGrams3(s, sfDir)
-        .repartition(8, col("gram")).sortWithinPartitions("gram", "doc_id")
-        .write.mode("overwrite").parquet(s"$tmp/grams3")
-      buildSpans(s, sfDir)
-        .repartition(8, col("doc_id")).sortWithinPartitions("doc_id", "i")
-        .write.mode("overwrite").parquet(s"$tmp/spans")
-      buildToks16(s, sfDir)
-        .repartition(4, col("doc_id")).sortWithinPartitions("doc_id", "v16")
-        .write.mode("overwrite").parquet(s"$tmp/toks16")
-    })
-  }
-
   /** The stored signature frame (doc_id, base, content_hash, nrm,
     * len, h1..h4) over the planted-dup corpus, read from the
     * persisted layout (built on first use). `nrm` is corpus-sized —
     * consumers that don't project it never read its bytes
     * (columnar). */
   def signatures(s: SparkSession, sfDir: String): DataFrame =
-    s.read.parquet(s"${ensure(s, sfDir)}/signatures")
+    store.read(s, sfDir, "signatures")
 
   /** The stored distinct-token 16-bit hash stream (doc_id, v16) —
     * one row per distinct (doc, token). */
   def toks16(s: SparkSession, sfDir: String): DataFrame =
-    s.read.parquet(s"${ensure(s, sfDir)}/toks16")
+    store.read(s, sfDir, "toks16")
 
   /** The stored distinct LSH candidate pairs (doc_a, doc_b). */
   def candidates(s: SparkSession, sfDir: String): DataFrame =
-    s.read.parquet(s"${ensure(s, sfDir)}/candidates")
+    store.read(s, sfDir, "candidates")
 
   /** The stored distinct 5-gram hash universe (doc_id, h, n). */
   def hgrams5(s: SparkSession, sfDir: String): DataFrame =
-    s.read.parquet(s"${ensure(s, sfDir)}/hgrams5")
+    store.read(s, sfDir, "hgrams5")
 
   /** The stored distinct word-trigram index (doc_id, gram, n, ge3). */
   def grams3(s: SparkSession, sfDir: String): DataFrame =
-    s.read.parquet(s"${ensure(s, sfDir)}/grams3")
+    store.read(s, sfDir, "grams3")
 
   /** The stored positional span-hash stream (doc_id, i, h, cross). */
   def spans(s: SparkSession, sfDir: String): DataFrame =
-    s.read.parquet(s"${ensure(s, sfDir)}/spans")
+    store.read(s, sfDir, "spans")
 }

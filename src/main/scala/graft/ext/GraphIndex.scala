@@ -1,8 +1,5 @@
 package graft.ext
 
-import java.io.File
-import java.security.MessageDigest
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -34,43 +31,17 @@ import graft.Tables
   * frames would be written `bucketBy(src)` (core.Bucketing's layout)
   * so per-round join exchanges vanish entirely.
   *
-  * Freshness: the index directory is keyed by an md5 fingerprint of
-  * the INPUT files (path, length, mtime, recursively) plus a format
-  * version — a regenerated testdata dir or a changed build never
-  * reads a stale index, it builds a sibling directory. Builds are
-  * atomic (write to a unique tmp dir, rename into place, marker file
-  * written last); a lost rename race falls back to the winner's dir.
+  * Freshness and atomicity are the shared [[Store]] mechanics
+  * (fingerprint of lineitem.parquet + orders.parquet).
   */
 object GraphIndex {
 
-  /** Bumped whenever the stored schema/derivation changes. */
-  private val FormatVersion = 1
-
-  private def root: String = sys.env.getOrElse("SPARK_GRAFT_INDEX_DIR",
-    s"${sys.props("java.io.tmpdir")}/graft-graph-index")
-
-  /** md5 over (relative path, length, mtime) of every file under the
-    * inputs — any regeneration of the testdata changes it. Visible
-    * for the spec. */
-  private[ext] def fingerprint(sfDir: String): String = {
-    val md = MessageDigest.getInstance("MD5")
-    md.update(s"v$FormatVersion".getBytes("UTF-8"))
-    def walk(f: File, rel: String): Unit =
-      if (f.isDirectory)
-        f.listFiles().sortBy(_.getName)
-          .foreach(c => walk(c, s"$rel/${c.getName}"))
-      else
-        md.update(s"$rel:${f.length}:${f.lastModified}".getBytes("UTF-8"))
-    Seq("lineitem.parquet", "orders.parquet").foreach { n =>
-      val f = new File(sfDir, n)
-      md.update(n.getBytes("UTF-8"))
-      if (f.exists()) walk(f, n)
-    }
-    md.digest().map("%02x".format(_)).mkString
-  }
-
-  private[ext] def indexDir(sfDir: String): File =
-    new File(root, fingerprint(sfDir))
+  private[ext] val store = new Store("graph", version = 1,
+    Seq("lineitem.parquet", "orders.parquet"), Seq(
+      Frame("copurchase", 8, "a", Seq("a", "b"),
+        (s, d, _) => buildCopurchase(s, d)),
+      Frame("interaction", 8, "c", Seq("c", "s"),
+        (s, d, _) => buildInteraction(s, d))))
 
   /** In-session build of the (a, b, w) co-purchase frame — also the
     * write source. The one big shuffle of the family. */
@@ -95,28 +66,12 @@ object GraphIndex {
       .distinct()
   }
 
-  /** Build both frames under a fresh tmp dir, then atomically rename
-    * into place ([[IndexUtil.install]] — marker last, race losers and
-    * failed builds deleted). Synchronized: queries run sequentially
-    * in this engine's drivers, but a stray concurrent caller must not
-    * race the same JVM; cross-JVM races resolve via the rename. */
-  private def ensure(s: SparkSession, sfDir: String): File = synchronized {
-    IndexUtil.install(new File(root), indexDir(sfDir), { tmp =>
-      buildCopurchase(s, sfDir)
-        .repartition(8, col("a")).sortWithinPartitions("a", "b")
-        .write.mode("overwrite").parquet(s"$tmp/copurchase")
-      buildInteraction(s, sfDir)
-        .repartition(8, col("c")).sortWithinPartitions("c", "s")
-        .write.mode("overwrite").parquet(s"$tmp/interaction")
-    })
-  }
-
   /** The stored (a, b, w) co-purchase frame (a < b, w = support >= 2),
     * read from the persisted layout (built on first use). */
   def copurchase(s: SparkSession, sfDir: String): DataFrame =
-    s.read.parquet(s"${ensure(s, sfDir)}/copurchase")
+    store.read(s, sfDir, "copurchase")
 
   /** The stored distinct (c, s) customer–supplier pairs. */
   def interaction(s: SparkSession, sfDir: String): DataFrame =
-    s.read.parquet(s"${ensure(s, sfDir)}/interaction")
+    store.read(s, sfDir, "interaction")
 }

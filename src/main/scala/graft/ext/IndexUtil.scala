@@ -1,6 +1,10 @@
 package graft.ext
 
 import java.io.File
+import java.security.MessageDigest
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 
 /** Shared install mechanics for the persisted index layouts
   * ([[GraphIndex]] / [[DedupIndex]] / [[TextIndex]] / [[MmIndex]]):
@@ -13,6 +17,11 @@ import java.io.File
   * run, unbounded across runs under contention.)
   */
 private[ext] object IndexUtil {
+
+  /** The one index root every [[Store]] installs under:
+    * `SPARK_GRAFT_INDEX_DIR`, else `<java.io.tmpdir>/graft-index`. */
+  def root: File = new File(sys.env.getOrElse("SPARK_GRAFT_INDEX_DIR",
+    s"${sys.props("java.io.tmpdir")}/graft-index"))
 
   private[ext] def rm(f: File): Unit = {
     if (f.isDirectory) {
@@ -63,4 +72,67 @@ private[ext] object IndexUtil {
       case e: Throwable => rm(tmp); throw e
     }
   }
+}
+
+/** One persisted frame of a [[Store]], written
+  * `repartition(parts, key).sortWithinPartitions(sort*)` so downstream
+  * joins read co-located, sorted runs. `build` receives the install's
+  * tmp dir so a frame can derive from a frame written before it. */
+private[ext] final case class Frame(
+    name: String, parts: Int, key: String, sort: Seq[String],
+    build: (SparkSession, String, File) => DataFrame)
+
+/** A persisted index family: its frames are written ONCE per testdata
+  * fingerprint into `<root>/<tag>-<fingerprint>` and read by every
+  * query after.
+  *
+  * Freshness: the fingerprint is an md5 over `<tag>-v<version>` and
+  * (relative path, length, mtime) of every file under `inputs`,
+  * recursively — a regenerated testdata dir or a changed build never
+  * reads a stale index, it builds a sibling directory. `inputs` must
+  * name every table any frame reads, and `version` is bumped whenever
+  * a stored schema or derivation changes. Atomicity is
+  * [[IndexUtil.install]]'s.
+  */
+private[ext] final class Store(tag: String, version: Int,
+    inputs: Seq[String], frames: Seq[Frame]) {
+
+  def fingerprint(sfDir: String): String = {
+    val md = MessageDigest.getInstance("MD5")
+    def add(s: String): Unit = md.update(s.getBytes("UTF-8"))
+    def walk(f: File, rel: String): Unit =
+      if (f.isDirectory)
+        f.listFiles().sortBy(_.getName)
+          .foreach(c => walk(c, s"$rel/${c.getName}"))
+      else add(s"$rel:${f.length}:${f.lastModified}")
+    add(s"$tag-v$version")
+    inputs.foreach { n =>
+      add(n)
+      val f = new File(sfDir, n)
+      if (f.exists()) walk(f, n)
+    }
+    md.digest().map("%02x".format(_)).mkString
+  }
+
+  def dir(sfDir: String): File =
+    new File(IndexUtil.root, s"$tag-${fingerprint(sfDir)}")
+
+  /** Builds every frame on first use. Synchronized: queries run
+    * sequentially in this engine's drivers, but a stray concurrent
+    * caller must not race the same JVM; cross-JVM races resolve via
+    * the rename. */
+  private def ensure(s: SparkSession, sfDir: String): File = synchronized {
+    IndexUtil.install(IndexUtil.root, dir(sfDir), { tmp =>
+      frames.foreach { f =>
+        f.build(s, sfDir, tmp)
+          .repartition(f.parts, col(f.key))
+          .sortWithinPartitions(f.sort.map(col): _*)
+          .write.mode("overwrite").parquet(s"$tmp/${f.name}")
+      }
+    })
+  }
+
+  /** The stored frame `name`, read from the persisted layout. */
+  def read(s: SparkSession, sfDir: String, name: String): DataFrame =
+    s.read.parquet(s"${ensure(s, sfDir)}/$name")
 }

@@ -1,10 +1,6 @@
 package graft.ext
 
-import java.io.File
-import java.security.MessageDigest
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.col
 
 /** A PERSISTED multimodal-features layout — the [[GraphIndex]] /
   * [[DedupIndex]] / [[TextIndex]] pattern applied to the mm_ family's
@@ -35,45 +31,17 @@ import org.apache.spark.sql.functions.col
   *
   * Payload BYTES are never stored or shuffled — the feature frame is
   * ~1 row per document, the pair frame candidate-sized. Freshness and
-  * atomicity are the shared [[IndexUtil]] mechanics (md5 fingerprint
-  * of documents.parquet + format version; atomic tmp-dir install,
-  * race losers deleted).
+  * atomicity are the shared [[Store]] mechanics (fingerprint of
+  * documents.parquet).
   */
 object MmIndex {
 
-  /** Bumped whenever the stored schema/derivation changes. */
-  private val FormatVersion = 2
-
-  private def root: String = sys.env.getOrElse("SPARK_GRAFT_INDEX_DIR",
-    s"${sys.props("java.io.tmpdir")}/graft-mm-index")
-
-  /** md5 over (relative path, length, mtime) of every file under
-    * documents.parquet — any regeneration changes it. The "mm-v"
-    * prefix keeps the namespace disjoint from the other index
-    * families when they share SPARK_GRAFT_INDEX_DIR.
-    *
-    * SCOPE: deliberately walks ONLY documents.parquet, because every
-    * frame this index stores (decode features, verified pHash pairs)
-    * derives from `documents` alone. If a future mm frame ever reads
-    * another table, that table MUST be added to this walk or its
-    * regeneration would silently reuse a stale index. */
-  private[ext] def fingerprint(sfDir: String): String = {
-    val md = MessageDigest.getInstance("MD5")
-    md.update(s"mm-v$FormatVersion".getBytes("UTF-8"))
-    def walk(f: File, rel: String): Unit =
-      if (f.isDirectory)
-        f.listFiles().sortBy(_.getName)
-          .foreach(c => walk(c, s"$rel/${c.getName}"))
-      else
-        md.update(s"$rel:${f.length}:${f.lastModified}".getBytes("UTF-8"))
-    val f = new File(sfDir, "documents.parquet")
-    md.update("documents.parquet".getBytes("UTF-8"))
-    if (f.exists()) walk(f, "documents.parquet")
-    md.digest().map("%02x".format(_)).mkString
-  }
-
-  private[ext] def indexDir(sfDir: String): File =
-    new File(root, s"mm-${fingerprint(sfDir)}")
+  private[ext] val store = new Store("mm", version = 2,
+    Seq("documents.parquet"), Seq(
+      Frame("features", 4, "doc_id", Seq("doc_id"),
+        (s, d, _) => buildFeatures(s, d)),
+      Frame("phpairs", 4, "doc_a", Seq("doc_a", "doc_b"),
+        (s, d, _) => buildPhPairs(s, d))))
 
   /** In-session build of the decoded-feature frame — also the write
     * source. One corpus pass through the batched stub decode. */
@@ -90,27 +58,14 @@ object MmIndex {
       .filter(expr("hamming <= 3"))
   }
 
-  /** Build both frames under a fresh tmp dir, then atomically rename
-    * into place ([[IndexUtil.install]]). */
-  private def ensure(s: SparkSession, sfDir: String): File = synchronized {
-    IndexUtil.install(new File(root), indexDir(sfDir), { tmp =>
-      buildFeatures(s, sfDir)
-        .repartition(4, col("doc_id")).sortWithinPartitions("doc_id")
-        .write.mode("overwrite").parquet(s"$tmp/features")
-      buildPhPairs(s, sfDir)
-        .repartition(4, col("doc_a")).sortWithinPartitions("doc_a", "doc_b")
-        .write.mode("overwrite").parquet(s"$tmp/phpairs")
-    })
-  }
-
   /** The stored decoded-feature frame (doc_id, kind, byte_len, width,
     * height, n_frames, checksum), read from the persisted layout
     * (built on first use). */
   def features(s: SparkSession, sfDir: String): DataFrame =
-    s.read.parquet(s"${ensure(s, sfDir)}/features")
+    store.read(s, sfDir, "features")
 
   /** The stored verified pHash near-dup pairs (doc_a, doc_b, ph_a,
     * ph_b, hamming <= 3), within modality, doc_a < doc_b. */
   def phpairs(s: SparkSession, sfDir: String): DataFrame =
-    s.read.parquet(s"${ensure(s, sfDir)}/phpairs")
+    store.read(s, sfDir, "phpairs")
 }

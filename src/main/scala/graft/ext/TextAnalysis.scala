@@ -2231,13 +2231,6 @@ object TextAnalysis {
       s"(instr('0123456789abcdef', substr($h, ${i + 1}, 1)) - 1) * ${1 << (4 * (2 - i))}"
     }.mkString("(", " + ", ")")
 
-  /** Library form of the quality/stat projections for reuse. */
-  def withTextStats(docs: DataFrame, textCol: String = "text"): DataFrame = {
-    val t = col(textCol)
-    docs.withColumn("n_tokens", size(tokens(t)))
-      .withColumn("len_chars", length(t))
-  }
-
   /** Per-document bigram-predictability scores under the corpus' own
     * per-language bigram model — shared by `txt_bigram_surprisal` and
     * `txt_quality_buckets`. One explode + aggregation builds the

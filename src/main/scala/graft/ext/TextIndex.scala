@@ -1,8 +1,5 @@
 package graft.ext
 
-import java.io.File
-import java.security.MessageDigest
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -48,40 +45,23 @@ import graft.Tables
   * At 100 TB the token and bigram stores are the corpus re-expressed
   * row-per-token (the layout a real pipeline shards by doc_id so the
   * explode never re-runs); docstats is ~1 row per document. Freshness
-  * and atomicity are the GraphIndex mechanics: the directory is keyed
-  * by an md5 fingerprint of documents.parquet (path, length, mtime)
-  * plus a format version; builds write to a unique tmp dir and rename
-  * into place, marker file last.
+  * and atomicity are the shared [[Store]] mechanics (fingerprint of
+  * documents.parquet).
   */
 object TextIndex {
 
-  /** Bumped whenever the stored schema/derivation changes. */
-  private val FormatVersion = 2
-
-  private def root: String = sys.env.getOrElse("SPARK_GRAFT_INDEX_DIR",
-    s"${sys.props("java.io.tmpdir")}/graft-text-index")
-
-  /** md5 over (relative path, length, mtime) of every file under
-    * documents.parquet — any regeneration changes it. The "text-v"
-    * prefix keeps the namespace disjoint from the other index
-    * families when they share SPARK_GRAFT_INDEX_DIR. */
-  private[ext] def fingerprint(sfDir: String): String = {
-    val md = MessageDigest.getInstance("MD5")
-    md.update(s"text-v$FormatVersion".getBytes("UTF-8"))
-    def walk(f: File, rel: String): Unit =
-      if (f.isDirectory)
-        f.listFiles().sortBy(_.getName)
-          .foreach(c => walk(c, s"$rel/${c.getName}"))
-      else
-        md.update(s"$rel:${f.length}:${f.lastModified}".getBytes("UTF-8"))
-    val f = new File(sfDir, "documents.parquet")
-    md.update("documents.parquet".getBytes("UTF-8"))
-    if (f.exists()) walk(f, "documents.parquet")
-    md.digest().map("%02x".format(_)).mkString
-  }
-
-  private[ext] def indexDir(sfDir: String): File =
-    new File(root, s"text-${fingerprint(sfDir)}")
+  private[ext] val store = new Store("text", version = 2,
+    Seq("documents.parquet"), Seq(
+      Frame("tokens", 8, "doc_id", Seq("doc_id", "pos"),
+        (s, d, _) => buildTokens(s, d)),
+      Frame("bigrams", 8, "doc_id", Seq("doc_id", "i"),
+        (s, d, _) => buildBigrams(s, d)),
+      Frame("grams3", 8, "gram", Seq("gram", "doc_id"),
+        (s, d, _) => buildGrams3(s, d)),
+      Frame("hgrams8", 8, "g", Seq("g", "doc_id"),
+        (s, d, _) => buildHgrams8(s, d)),
+      Frame("docstats", 4, "doc_id", Seq("doc_id"),
+        (s, d, _) => buildDocstats(s, d))))
 
   /** In-session build of the positional token stream. Zero-token
     * docs are dropped FIRST: Spark's `sequence(1, 0)` counts DOWN to
@@ -182,50 +162,26 @@ object TextIndex {
         md5($"text").as("content_hash"))
   }
 
-  /** Build all five frames under a fresh tmp dir, then atomically
-    * rename into place ([[IndexUtil.install]] — marker last, race
-    * losers and failed builds deleted). */
-  private def ensure(s: SparkSession, sfDir: String): File = synchronized {
-    IndexUtil.install(new File(root), indexDir(sfDir), { tmp =>
-      buildTokens(s, sfDir)
-        .repartition(8, col("doc_id")).sortWithinPartitions("doc_id", "pos")
-        .write.mode("overwrite").parquet(s"$tmp/tokens")
-      buildBigrams(s, sfDir)
-        .repartition(8, col("doc_id")).sortWithinPartitions("doc_id", "i")
-        .write.mode("overwrite").parquet(s"$tmp/bigrams")
-      buildGrams3(s, sfDir)
-        .repartition(8, col("gram")).sortWithinPartitions("gram", "doc_id")
-        .write.mode("overwrite").parquet(s"$tmp/grams3")
-      buildHgrams8(s, sfDir)
-        .repartition(8, col("g")).sortWithinPartitions("g", "doc_id")
-        .write.mode("overwrite").parquet(s"$tmp/hgrams8")
-      buildDocstats(s, sfDir)
-        .repartition(4, col("doc_id"))
-        .sortWithinPartitions("doc_id")
-        .write.mode("overwrite").parquet(s"$tmp/docstats")
-    })
-  }
-
   /** The stored positional token stream (doc_id, lang, source,
     * n_toks, pos, tok), read from the persisted layout (built on
     * first use). */
   def tokens(s: SparkSession, sfDir: String): DataFrame =
-    s.read.parquet(s"${ensure(s, sfDir)}/tokens")
+    store.read(s, sfDir, "tokens")
 
   /** The stored positional bigram stream (doc_id, lang, source,
     * n_toks, i, w1, w2 — w2 NULL on a one-token doc's fallback row). */
   def bigrams(s: SparkSession, sfDir: String): DataFrame =
-    s.read.parquet(s"${ensure(s, sfDir)}/bigrams")
+    store.read(s, sfDir, "bigrams")
 
   /** The stored distinct token-3-gram frame (doc_id, gram). */
   def grams3(s: SparkSession, sfDir: String): DataFrame =
-    s.read.parquet(s"${ensure(s, sfDir)}/grams3")
+    store.read(s, sfDir, "grams3")
 
   /** The stored distinct md5'd 8-token-shingle frame (doc_id, g). */
   def hgrams8(s: SparkSession, sfDir: String): DataFrame =
-    s.read.parquet(s"${ensure(s, sfDir)}/hgrams8")
+    store.read(s, sfDir, "hgrams8")
 
   /** The stored per-doc scalar profile. */
   def docstats(s: SparkSession, sfDir: String): DataFrame =
-    s.read.parquet(s"${ensure(s, sfDir)}/docstats")
+    store.read(s, sfDir, "docstats")
 }

@@ -1,6 +1,6 @@
 package graft.parity
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions._
 
@@ -9,6 +9,8 @@ import org.apache.spark.sql.functions._
   * predicates expressible as Catalyst built-ins are plain `Column`
   * functions (codegen'd, pushdown-friendly); the genuinely procedural
   * parsers are Scala UDFs delegating to the golden-tested [[RefText]].
+  * The two hot predicates, is_numeric_token and starts_with_name, are
+  * codegen'd Catalyst expressions in [[graft.functions.NativeFunctions]].
   */
 object FarmFunctions {
 
@@ -22,26 +24,15 @@ object FarmFunctions {
       .map(p => lower(text).contains(lit(p)))
       .reduce(_ || _)
 
-  /** Whitespace normalization (:264). */
-  def normalizeWs(text: Column): Column =
-    trim(regexp_replace(text, "\\s+", " "))
-
-  /** Em/en-dash unification (:165 et al.). */
-  def normalizeDashes(text: Column): Column =
-    translate(text, "—–", "--")
-
   /** extract_alternate_name (:711-715): first parenthetical, trimmed. */
   def alternateName(name: Column): Column =
     trim(regexp_extract(name, "\\(([^)]+)\\)", 1))
 
-  /** Numeric-token cleanup (:167,321,339): strip commas and dollars. */
-  def cleanNumeric(tok: Column): Column =
-    trim(translate(tok, ",$", ""))
-
   /** The structural part of is_continuation_line (:239-251) as native
     * expressions: text reduced by digit-runs and separators leaves ≤1
     * char, or ≤2 alphabetic chars total. The full reference predicate
-    * additionally requires !starts_with_name — see [[isContinuationUdf]]. */
+    * additionally requires !starts_with_name — see
+    * [[RefText.isContinuationLine]]. */
   def continuationShape(text: Column): Column = {
     val t = trim(text)
     val stripped = regexp_replace(regexp_replace(t, "\\d+", ""),
@@ -52,15 +43,6 @@ object FarmFunctions {
 
   // ---------------------------------------------------------------
   // Procedural parsers as UDFs over the golden-tested port
-
-  val isNumericTokenUdf: UserDefinedFunction =
-    udf((t: String) => RefText.isNumericToken(if (t == null) "" else t))
-
-  val startsWithNameUdf: UserDefinedFunction =
-    udf((t: String) => RefText.startsWithName(if (t == null) "" else t))
-
-  val isContinuationUdf: UserDefinedFunction =
-    udf((t: String) => RefText.isContinuationLine(if (t == null) "" else t))
 
   /** (name, numbers[5]) struct from a structured name line. */
   val parseLineUdf: UserDefinedFunction =
@@ -76,14 +58,4 @@ object FarmFunctions {
   /** (surname, given, suffix) struct. */
   val splitNameUdf: UserDefinedFunction =
     udf((t: String) => RefText.splitName(if (t == null) "" else t))
-
-  /** Register the SQL-callable names. */
-  def registerAll(spark: SparkSession): Unit = {
-    spark.udf.register("farm_is_numeric_token", isNumericTokenUdf)
-    spark.udf.register("farm_starts_with_name", startsWithNameUdf)
-    spark.udf.register("farm_is_continuation", isContinuationUdf)
-    spark.udf.register("farm_parse_line", parseLineUdf)
-    spark.udf.register("farm_extract_continuation", extractContinuationUdf)
-    spark.udf.register("farm_split_name", splitNameUdf)
-  }
 }

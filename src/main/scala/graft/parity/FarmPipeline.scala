@@ -117,22 +117,13 @@ object FarmPipeline {
       .csv(outPath)
 }
 
-/** Window-function formulations of the reference's two hand-rolled
-  * ordered computations (SURVEY.md §2.5) — the declarative
-  * equivalents of what [[RecordFold]] does inside a group. Exposed as
-  * first-class operators so users can run the banding/sequencing
-  * logic over arbitrary line tables without the fold.
+/** Window-function formulation of the reference's hand-rolled
+  * page-line banding (SURVEY.md §2.5) — the declarative equivalent of
+  * what [[RecordFold]] does inside a group. Exposed as a first-class
+  * operator so users can run the banding logic over arbitrary line
+  * tables without the fold.
   */
 object Layout {
-
-  /** Stable scan position within (doc, page, side): row_number over
-    * (top, seq) — the explicit-tiebreaker form of Python's stable
-    * sort (:601-602; SURVEY.md §7.4-1). */
-  def withLinePos(lines: DataFrame): DataFrame = {
-    val w = Window.partitionBy(col("doc"), col("page"), col("side"))
-      .orderBy(col("top"), col("seq"))
-    lines.withColumn("line_pos", row_number().over(w))
-  }
 
   /** Gap-based page-line banding (:605-652): among name lines of a
     * column ordered by (top, seq), a new band opens when the gap to
@@ -141,7 +132,7 @@ object Layout {
     * taking the max band within (column, top); non-name lines get 1.
     */
   def withPageLine(lines: DataFrame, tolerance: Double = 0.01): DataFrame = {
-    val isName = FarmFunctions.startsWithNameUdf(col("text"))
+    val isName = graft.functions.NativeFunctions.startsWithName(col("text"))
     val wCol = Window.partitionBy(col("doc"), col("page"), col("side"))
       .orderBy(col("top"), col("seq"))
     val gap = abs(col("top") - lag(col("top"), 1).over(wCol))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
 import graft.{Q, Tables}
+import graft.functions.NativeFunctions
 
 /** Reference-parity operators re-hosted over the driver testdata so
   * the DuckDB gate can hash-verify them (FIXTURES.md §B: parity
@@ -52,7 +53,7 @@ object ParityQueries {
                   lit("—"), lit("12.5"), concat(lit("-"), $"doc_id"),
                   concat($"doc_id", lit("x")))))
         docs.select($"doc_id", explode($"toks").as("tok"))
-          .withColumn("is_num", FarmFunctions.isNumericTokenUdf($"tok"))
+          .withColumn("is_num", NativeFunctions.isNumericToken($"tok"))
           .groupBy($"doc_id")
           .agg(count(lit(1)).as("n_tokens"),
                sum(when($"is_num", 1L).otherwise(0L)).as("n_numeric"))

@@ -29,19 +29,6 @@ object BlockSource {
         StructField("Width", DoubleType),
         StructField("Height", DoubleType)))))))))
 
-  /** Read JSON block dumps (JSON-lines, one block per line; one file
-    * per document). `seq` is derived from in-file order: JSON files
-    * are read in order within a split, and a per-document dump is a
-    * single small file (one scanned document ≪ one split), so
-    * monotonically_increasing_id is order-faithful per document. For
-    * multi-split inputs use a connector that materializes `seq`
-    * explicitly (see [[TextractConnector]]).
-    */
-  def readJsonDumps(spark: SparkSession, path: String): DataFrame =
-    spark.read.schema(blockSchema).json(path)
-      .withColumn("doc", input_file_name())
-      .withColumn("seq", monotonically_increasing_id())
-
   /** Build a blocks DataFrame from in-memory rows (tests, connector). */
   def fromRows(spark: SparkSession,
                rows: Seq[(String, Long, String, String, Int, Double, Double)])

@@ -20,17 +20,16 @@ import graft.sources.TextractConnector.OcrClient
   * formalize as TableProvider"): `spark.read.format("graft-ocr")
   * .option("keys", "a.png,b.png").load()`.
   *
-  * Relative to the `mapPartitions` connector, the DSv2 surface buys
-  * planner integration: one [[InputPartition]] per document (a
-  * 1000-executor cluster runs 1000 concurrent OCR jobs with no
-  * repartition step), column pruning (unrequested fields are never
+  * The DSv2 surface buys planner integration: one [[InputPartition]]
+  * per document (a 1000-executor cluster runs 1000 concurrent OCR
+  * jobs with no repartition step), column pruning (unrequested fields are never
   * materialized per block), and `BlockType = <v>` filter pushdown
   * (non-matching blocks are skipped inside the reader, before any row
   * is built — at 100 TB the LINE filter drops most of Textract's
-  * WORD/PAGE blocks at the source). Failure quarantine matches the
-  * connector: a document whose job fails yields one `error` row, so
-  * pruning `error` out also prunes the quarantine channel — callers
-  * that want the dead-letter path must select the column.
+  * WORD/PAGE blocks at the source). Failure quarantine: a document
+  * whose job fails yields one `error` row, so pruning `error` out also
+  * prunes the quarantine channel — callers that want the dead-letter
+  * path must select the column.
   *
   * Options: `keys` (comma-separated document keys, required);
   * `client` — "stub" (default, deterministic offline fake) or the

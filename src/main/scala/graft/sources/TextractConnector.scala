@@ -1,31 +1,19 @@
 package graft.sources
 
-import scala.annotation.tailrec
-
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-
-/** Distributed OCR-ingest connector shaped after the reference's
-  * Textract client flow (/root/reference/lambda_function.py:47-79):
-  * start job → poll until terminal → paginate blocks. One *task* per
-  * batch of documents; one *job* per document; a lazy page iterator
-  * so a task never materializes more than one result page
-  * (constant memory per document, unlike the reference's
-  * accumulate-all list, :72-79).
+/** The OCR service boundary of the ingest, shaped after the
+  * reference's Textract client flow (lambda_function.py:47-79):
+  * start job → poll until terminal → paginate blocks. The fetch loop
+  * itself — one job per document, lazy pagination with a per-document
+  * `seq`, per-document quarantine — is the `graft-ocr` DataSourceV2
+  * reader ([[OcrDataSourceV2]]).
   *
   * The AWS transport is abstracted behind [[OcrClient]] so the
-  * connector's distribution, ordering, retry/quarantine, and
-  * pagination logic are all testable offline (this container has no
-  * network); [[OcrClient.stub]] is the deterministic fake used in
-  * tests. A real deployment supplies an implementation backed by the
-  * public Textract SDK.
+  * reader's ordering, quarantine and pagination logic are testable
+  * offline; [[stub]] is the deterministic fake used in tests. A real
+  * deployment supplies an implementation backed by the public
+  * Textract API ([[AwsHttpOcrClient]]).
   */
 object TextractConnector {
-
-  /** One fetched block, already carrying the order tiebreaker. */
-  final case class FetchedBlock(doc: String, seq: Long, blockType: String,
-                                text: String, page: Int,
-                                left: Double, top: Double,
-                                error: String)
 
   /** Minimal OCR service interface (public Textract API shape). */
   trait OcrClient extends Serializable {
@@ -36,121 +24,6 @@ object TextractConnector {
     /** Fetch one result page: (blocks, nextToken). */
     def fetchPage(jobId: String, token: Option[String])
         : (Seq[(String, String, Int, Double, Double)], Option[String])
-  }
-
-  /** Poll loop (:57-67): reference-parity fixed delay at
-    * backoffFactor=1.0, geometric growth to maxDelayMs otherwise
-    * (1000 concurrent jobs on a fixed 2 s poll is 500 rps against a
-    * throttled API), hard deadline, then fail. */
-  @tailrec
-  private def waitForJob(client: OcrClient, jobId: String,
-                         delayMs: Long, deadlineNanos: Long,
-                         backoffFactor: Double = 1.0,
-                         maxDelayMs: Long = 30000L): String = {
-    val st = client.jobStatus(jobId)
-    if (st == "SUCCEEDED" || st == "FAILED" || st == "PARTIAL_SUCCESS") st
-    else if (System.nanoTime() > deadlineNanos)
-      throw new RuntimeException(s"OCR job $jobId timed out")
-    else {
-      Thread.sleep(delayMs)
-      val next = math.min(
-        math.max((delayMs * backoffFactor).toLong, delayMs), maxDelayMs)
-      waitForJob(client, jobId, next, deadlineNanos, backoffFactor,
-        maxDelayMs)
-    }
-  }
-
-  /** Lazy page-following block iterator (:72-79), with a running
-    * per-document sequence number. */
-  private def blockIterator(client: OcrClient, doc: String, jobId: String)
-      : Iterator[FetchedBlock] = {
-    val pages = Iterator.iterate(
-      Option(client.fetchPage(jobId, None))) {
-        case Some((_, Some(tok))) => Some(client.fetchPage(jobId, Some(tok)))
-        case _ => None
-      }.takeWhile(_.isDefined).map(_.get._1)
-    var seq = -1L
-    pages.flatten.map { case (bt, text, page, left, top) =>
-      seq += 1
-      FetchedBlock(doc, seq, bt, text, page, left, top, error = null)
-    }
-  }
-
-  private def errorRow(doc: String, e: Throwable): FetchedBlock =
-    FetchedBlock(doc, -1L, null, null, 0, 0, 0,
-      error = String.valueOf(e.getMessage))
-
-  /** Wraps the lazy block iterator so an exception thrown while a
-    * downstream consumer pulls page 2+ (i.e. *outside* the try in
-    * [[fetchBlocks]], because [[blockIterator]] is lazy) is still
-    * converted into a quarantine `error` row for this document
-    * instead of failing the whole task. Emits the error row once,
-    * then terminates the document's stream. */
-  private def quarantined(doc: String, it: Iterator[FetchedBlock])
-      : Iterator[FetchedBlock] = new Iterator[FetchedBlock] {
-    private var pendingError: FetchedBlock = _
-    private var dead = false
-    def hasNext: Boolean =
-      if (dead) false
-      else if (pendingError != null) true
-      else try it.hasNext catch {
-        case e: Exception => pendingError = errorRow(doc, e); true
-      }
-    def next(): FetchedBlock =
-      if (pendingError != null) {
-        dead = true; val r = pendingError; pendingError = null; r
-      } else try it.next() catch {
-        case e: Exception => dead = true; errorRow(doc, e)
-      }
-  }
-
-  /** Distributed fetch: one OCR job per document key, documents
-    * spread across tasks. Per-document failures are quarantined as an
-    * `error` row rather than failing the task (the reference's
-    * per-file try/except, :796-817 — here a dead-letter column the
-    * caller filters into a quarantine sink).
-    *
-    * Scale posture: repartition by document so a 1000-executor
-    * cluster runs 1000 concurrent OCR jobs; `maxWaitMs` bounds each
-    * task. Disable speculation for this stage — a speculative copy
-    * would start a duplicate OCR job (SURVEY.md §7.4-6).
-    */
-  def fetchBlocks(keys: Dataset[String], client: OcrClient,
-                  parallelism: Int = 0,
-                  pollDelayMs: Long = 2000, maxWaitMs: Long = 900000L,
-                  pollBackoffFactor: Double = 1.0,
-                  maxPollDelayMs: Long = 30000L)
-      : Dataset[FetchedBlock] = {
-    import keys.sparkSession.implicits._
-    val repartitioned =
-      if (parallelism > 0) keys.repartition(parallelism) else keys
-    repartitioned.mapPartitions { docs =>
-      docs.flatMap { doc =>
-        try {
-          val jobId = client.startJob(doc)
-          val deadline = System.nanoTime() + maxWaitMs * 1000000L
-          val status = waitForJob(client, jobId, pollDelayMs, deadline,
-            pollBackoffFactor, maxPollDelayMs)
-          if (status != "SUCCEEDED")
-            throw new RuntimeException(s"OCR failed with status: $status")
-          quarantined(doc, blockIterator(client, doc, jobId))
-        } catch {
-          case e: Exception => Iterator.single(errorRow(doc, e))
-        }
-      }
-    }
-  }
-
-  /** Blocks-DataFrame view matching [[BlockSource.blockSchema]] + doc/seq. */
-  def toBlocksDF(fetched: Dataset[FetchedBlock]): DataFrame = {
-    import org.apache.spark.sql.functions._
-    fetched.filter(col("error").isNull).toDF()
-      .select(col("doc"), col("seq"),
-        col("blockType").as("BlockType"), col("text").as("Text"),
-        col("page").as("Page"),
-        struct(struct(col("left").as("Left"), col("top").as("Top"),
-          lit(0.0).as("Width"), lit(0.0).as("Height")).as("BoundingBox"))
-          .as("Geometry"))
   }
 
   /** Deterministic offline stub: synthesizes a two-page, two-column

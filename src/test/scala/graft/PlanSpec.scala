@@ -115,7 +115,7 @@ class PlanSpec extends AnyFunSuite with SharedSpark {
     assert(!p.contains("Join"), p.take(400))
     assert(p.sliding("Generate".length).count(_ == "Generate") == 0,
       "the stored bigram stream replaces the corpus explode\n" + p.take(400))
-    assert(p.contains("graft-text-index") || p.contains("text-"),
+    assert(p.contains("text-"),
       "must scan the persisted bigram frame\n" + p.take(400))
   }
 

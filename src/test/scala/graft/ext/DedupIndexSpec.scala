@@ -83,7 +83,7 @@ class DedupIndexSpec extends AnyFunSuite with SharedSpark {
   }
 
   test("second read reuses the installed index (no rebuild)") {
-    val dir = DedupIndex.indexDir(sf)
+    val dir = DedupIndex.store.dir(sf)
     assert(new File(dir, "_GRAFT_OK").exists(),
       "first read must have installed the index")
     val before = new File(dir, "_GRAFT_OK").lastModified()
@@ -97,15 +97,15 @@ class DedupIndexSpec extends AnyFunSuite with SharedSpark {
     val tmp = Files.createTempDirectory("didx_fp").toFile
     val doc = new File(tmp, "documents.parquet")
     Files.write(doc.toPath, "aaaa".getBytes)
-    val f1 = DedupIndex.fingerprint(tmp.toString)
-    assert(f1 == DedupIndex.fingerprint(tmp.toString),
+    val f1 = DedupIndex.store.fingerprint(tmp.toString)
+    assert(f1 == DedupIndex.store.fingerprint(tmp.toString),
       "fingerprint must be deterministic")
     Files.write(doc.toPath, "aaaaa".getBytes)
-    val f2 = DedupIndex.fingerprint(tmp.toString)
+    val f2 = DedupIndex.store.fingerprint(tmp.toString)
     assert(f1 != f2, "a changed input must change the fingerprint " +
       "(a regenerated testdata dir must never read a stale index)")
     doc.setLastModified(doc.lastModified() + 12345)
-    assert(DedupIndex.fingerprint(tmp.toString) != f2,
+    assert(DedupIndex.store.fingerprint(tmp.toString) != f2,
       "an mtime change must change the fingerprint")
   }
 }

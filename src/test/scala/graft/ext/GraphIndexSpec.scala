@@ -49,7 +49,7 @@ class GraphIndexSpec extends AnyFunSuite with SharedSpark {
   }
 
   test("second read reuses the installed index (no rebuild)") {
-    val dir = GraphIndex.indexDir(sf)
+    val dir = GraphIndex.store.dir(sf)
     assert(new File(dir, "_GRAFT_OK").exists(),
       "first read must have installed the index")
     val before = new File(dir, "_GRAFT_OK").lastModified()
@@ -65,15 +65,15 @@ class GraphIndexSpec extends AnyFunSuite with SharedSpark {
     val or = new File(tmp, "orders.parquet")
     Files.write(li.toPath, "aaaa".getBytes)
     Files.write(or.toPath, "bbbb".getBytes)
-    val f1 = GraphIndex.fingerprint(tmp.toString)
-    assert(f1 == GraphIndex.fingerprint(tmp.toString),
+    val f1 = GraphIndex.store.fingerprint(tmp.toString)
+    assert(f1 == GraphIndex.store.fingerprint(tmp.toString),
       "fingerprint must be deterministic")
     Files.write(li.toPath, "aaaaa".getBytes) // length change
-    val f2 = GraphIndex.fingerprint(tmp.toString)
+    val f2 = GraphIndex.store.fingerprint(tmp.toString)
     assert(f1 != f2, "a changed input must change the fingerprint " +
       "(a regenerated testdata dir must never read a stale index)")
     li.setLastModified(li.lastModified() + 12345)
-    assert(GraphIndex.fingerprint(tmp.toString) != f2,
+    assert(GraphIndex.store.fingerprint(tmp.toString) != f2,
       "an mtime change must change the fingerprint")
   }
 }

@@ -87,4 +87,16 @@ class IndexUtilSpec extends AnyFunSuite {
     assert(tmpSiblings(root).isEmpty,
       "a failed build must not leak its partial tmp tree")
   }
+
+  test("the four index stores resolve to distinct dirs under one root") {
+    val sf = freshRoot().toString
+    val dirs = Seq("graph" -> GraphIndex.store, "dedup" -> DedupIndex.store,
+      "text" -> TextIndex.store, "mm" -> MmIndex.store)
+      .map { case (tag, st) => tag -> st.dir(sf) }
+    assert(dirs.map(_._2).distinct.size == 4)
+    for ((tag, d) <- dirs) {
+      assert(d.getParentFile == IndexUtil.root, s"$tag: $d")
+      assert(d.getName.startsWith(s"$tag-"), s"$tag: $d")
+    }
+  }
 }

@@ -1,12 +1,39 @@
 package graft.parity
 
 import com.fasterxml.jackson.databind.ObjectMapper
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.functions.{lit, struct}
 import org.scalatest.funsuite.AnyFunSuite
 
 import scala.jdk.CollectionConverters._
 
 import graft.SharedSpark
 import graft.sources.{BlockSource, TextractConnector}
+
+/** OCR client whose job never succeeds: `startJob` throws for the
+  * `b` document, every other job polls FAILED. */
+class StartFailingOcrClient extends TextractConnector.OcrClient {
+  def startJob(doc: String): String =
+    if (doc.contains("b")) throw new RuntimeException("boom") else s"job-$doc"
+  def jobStatus(jobId: String): String = "FAILED"
+  def fetchPage(jobId: String, token: Option[String])
+      : (Seq[(String, String, Int, Double, Double)], Option[String]) =
+    (Seq.empty, None)
+}
+
+/** The stub client, except that fetching page 2 of a `bad` document
+  * throws. */
+class Page2FailingOcrClient extends TextractConnector.OcrClient {
+  private val inner = TextractConnector.stub()
+  def startJob(doc: String): String = inner.startJob(doc)
+  def jobStatus(jobId: String): String = inner.jobStatus(jobId)
+  def fetchPage(jobId: String, token: Option[String])
+      : (Seq[(String, String, Int, Double, Double)], Option[String]) = {
+    if (token.isDefined && jobId.contains("bad"))
+      throw new RuntimeException("page-2 fetch exploded")
+    inner.fetchPage(jobId, token)
+  }
+}
 
 /** End-to-end: the distributed Spark pipeline must reproduce the
   * reference's CSV output byte-for-byte on the golden fixtures
@@ -74,11 +101,20 @@ class PipelineSpec extends AnyFunSuite with SharedSpark {
     }
   }
 
+  /** One `graft-ocr` scan of `keys` through the named no-arg client. */
+  private def ocr(keys: Seq[String], client: String): DataFrame =
+    spark.read.format("graft-ocr").option("keys", keys.mkString(","))
+      .option("pollDelayMs", "1").option("client", client).load()
+
   test("Textract connector: pagination, ordering, quarantine") {
     import spark.implicits._
-    val keys = Seq("rawfarmdata/a.png", "rawfarmdata/b.png").toDS()
-    val fetched = TextractConnector.fetchBlocks(keys, TextractConnector.stub())
-    val blocks = TextractConnector.toBlocksDF(fetched)
+    val keys = Seq("rawfarmdata/a.png", "rawfarmdata/b.png")
+    // Re-nest the flat scan schema into the Textract block shape
+    val blocks = ocr(keys, "stub").filter($"error".isNull).select(
+      $"doc", $"seq", $"BlockType", $"Text", $"Page",
+      struct(struct($"left".as("Left"), $"top".as("Top"),
+        lit(0.0).as("Width"), lit(0.0).as("Height")).as("BoundingBox"))
+        .as("Geometry"))
     // 6 blocks per doc from the stub, seq strictly increasing per doc
     val perDoc = blocks.groupBy($"doc").count().collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -90,41 +126,25 @@ class PipelineSpec extends AnyFunSuite with SharedSpark {
     val out = FarmPipeline.run(blocks)
     assert(out.count() > 0)
     // A failing client quarantines, not fails
-    val bad = new TextractConnector.OcrClient {
-      def startJob(doc: String): String =
-        if (doc.contains("b")) throw new RuntimeException("boom") else s"job-$doc"
-      def jobStatus(jobId: String): String = "FAILED"
-      def fetchPage(jobId: String, token: Option[String]) = (Seq(), None)
-    }
-    val quarantined = TextractConnector.fetchBlocks(keys, bad)
-      .filter(_.error != null).collect()
+    val quarantined = ocr(keys, classOf[StartFailingOcrClient].getName)
+      .filter($"error".isNotNull).collect()
     assert(quarantined.length == 2)
   }
 
   test("Textract connector: page-2 fetch failure quarantines mid-stream") {
-    import spark.implicits._
     // fetchPage succeeds for page 1 but throws when the lazy iterator
     // pulls page 2 — i.e. during downstream consumption, outside the
     // per-document try. Must yield page-1 blocks + one error row for
     // the failing doc, and leave the healthy doc untouched.
-    val flaky = new TextractConnector.OcrClient {
-      private val inner = TextractConnector.stub()
-      def startJob(doc: String): String = inner.startJob(doc)
-      def jobStatus(jobId: String): String = inner.jobStatus(jobId)
-      def fetchPage(jobId: String, token: Option[String]) = {
-        if (token.isDefined && jobId.contains("bad"))
-          throw new RuntimeException("page-2 fetch exploded")
-        inner.fetchPage(jobId, token)
-      }
-    }
-    val keys = Seq("rawfarmdata/bad.png", "rawfarmdata/ok.png").toDS()
-    val rows = TextractConnector.fetchBlocks(keys, flaky).collect()
-    val byDoc = rows.groupBy(_.doc)
+    val keys = Seq("rawfarmdata/bad.png", "rawfarmdata/ok.png")
+    val rows = ocr(keys, classOf[Page2FailingOcrClient].getName).collect()
+    val byDoc = rows.groupBy(_.getAs[String]("doc"))
+    def error(r: Row) = r.getAs[String]("error")
     val badRows = byDoc("rawfarmdata/bad.png")
-    assert(badRows.count(_.error != null) == 1, "one quarantine row")
-    assert(badRows.count(_.error == null) == 4, "page-1 blocks preserved")
-    assert(badRows.last.error != null, "error row terminates the doc stream")
-    assert(byDoc("rawfarmdata/ok.png").forall(_.error == null))
+    assert(badRows.count(error(_) != null) == 1, "one quarantine row")
+    assert(badRows.count(error(_) == null) == 4, "page-1 blocks preserved")
+    assert(error(badRows.last) != null, "error row terminates the doc stream")
+    assert(byDoc("rawfarmdata/ok.png").forall(error(_) == null))
     assert(byDoc("rawfarmdata/ok.png").length == 6)
   }
 
