@@ -1685,7 +1685,7 @@ object Dedup {
     //   exact_dup  — its content hash exists in history (one
     //                hash-keyed semi-ish join; at scale the history
     //                hash set is a maintained index, the same storage
-    //                posture as ext.SimilarityIndex);
+    //                posture as the ext/ index stores);
     //   near_dup   — it shares a MinHash LSH band bucket with a
     //                history doc (batch bands ⋈ history bands on the
     //                band key — collision-sized, exactly the

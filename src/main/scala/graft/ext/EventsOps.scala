@@ -859,8 +859,7 @@ object EventsOps {
         ORDER BY est DESC, value ASC LIMIT 3""")),
 
     // ------------------------------------------------------------------
-    // Sliding-window counts (1 h window, 15 min slide) — the batch
-    // twin of StreamingOps.windowedCounts' tumbling form: Spark's
+    // Sliding-window counts (1 h window, 15 min slide): Spark's
     // native `window()` generator replicates each event into its 4
     // covering windows (a narrow Expand — rows × windows/slide, no
     // shuffle), then one hash aggregation with map-side partials.

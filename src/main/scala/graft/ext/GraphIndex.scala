@@ -5,9 +5,9 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 
-/** A PERSISTED graph layout — the [[SimilarityIndex]] pattern applied
-  * to the gr_ family's shared edge builds. The two expensive
-  * post-shuffle frames are written ONCE per testdata fingerprint:
+/** A PERSISTED graph layout — an [[IndexUtil]] `Store` for the gr_
+  * family's shared edge builds. The two expensive post-shuffle
+  * frames are written ONCE per testdata fingerprint:
   *
   *   - `copurchase/`  (a, b, w): support-thresholded part co-purchase
   *     pairs — the lineitem self-join on l_orderkey, grouped on the

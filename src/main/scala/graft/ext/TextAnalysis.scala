@@ -928,11 +928,10 @@ object TextAnalysis {
         FROM per_doc p LEFT JOIN new_terms n ON p.doc_id = n.doc_id"""))
   )
 
-  /** Priority-sampling projection shared by `txt_weighted_sample` and
-    * `StreamingOps.prioritySampleStream`: (doc_id, weight, prio) with
-    * prio = h div weight, h a 32-bit salted md5 of the doc id and
-    * weight its token count (>= 1). Bottom-k by (prio, doc_id) is the
-    * deterministic weight-biased sample. */
+  /** Priority-sampling projection of `txt_weighted_sample`: (doc_id,
+    * weight, prio) with prio = h div weight, h a 32-bit salted md5 of
+    * the doc id and weight its token count (>= 1). Bottom-k by
+    * (prio, doc_id) is the deterministic weight-biased sample. */
   def withSamplePriority(docs: DataFrame): DataFrame =
     docs
       .select(col("doc_id"),

@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.parity.FarmPipeline
 import graft.sources.BlockSource
@@ -16,10 +16,7 @@ import graft.sources.BlockSource
   * a quarantine improving on the reference's log-and-skip.
   *
   * Documents are atomic (no cross-document state), so the farm stream
-  * needs no watermark or state store — per SURVEY.md §2.10 the
-  * stateful operators below (windowed aggregation, session windows,
-  * custom mapGroupsWithState sessionization) are the north-star event
-  * operators, not reference parity.
+  * needs no watermark or state store.
   */
 object StreamingOps {
 
@@ -43,494 +40,5 @@ object StreamingOps {
         FarmPipeline.writeCsv(result, s"$outDir/batch_$batchId")
       }
       .start()
-  }
-
-  /** Watermarked tumbling-window aggregation over an event stream. */
-  def windowedCounts(events: DataFrame,
-                     window_ : String = "1 hour",
-                     watermark: String = "2 hours"): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), window_), col("event_type"))
-      .agg(count(lit(1)).as("n_events"),
-        sum(col("value")).as("sum_value"))
-      .select(col("window.start").as("window_start"),
-        col("event_type"), col("n_events"), col("sum_value"))
-
-  /** Streaming M4 downsample — the live twin of `ev_m4_downsample`:
-    * per (series, tumbling window), first/last/min/max of the value
-    * stream, emitted on window close. first/last selected by min/max
-    * over (us, event_id, value) structs — a total order, so the
-    * result is micro-batch-arrival-order-proof and equals the batch
-    * M4 over the union of all batches (spec-pinned). State per open
-    * window is four scalars + two structs, never the row set — the
-    * dashboard-feed reduction that holds at any ingest rate.
-    */
-  def m4Stream(events: DataFrame, window_ : String = "1 hour",
-               watermark: String = "2 hours"): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .withColumn("us", unix_micros(col("ts")))
-      .groupBy(window(col("ts"), window_), col("event_type"))
-      .agg(count(lit(1)).as("n_points"),
-        min(struct(col("us"), col("event_id"), col("value"))).as("f"),
-        max(struct(col("us"), col("event_id"), col("value"))).as("l"),
-        min(col("value")).as("min_val"),
-        max(col("value")).as("max_val"))
-      .select(col("window.start").as("window_start"), col("event_type"),
-        col("n_points"), col("f.value").as("first_val"),
-        col("l.value").as("last_val"), col("min_val"), col("max_val"))
-
-  /** Streaming heavy hitters: the custom SpaceSaving aggregate
-    * ([[graft.functions.ApproxTopK]]) inside a watermarked tumbling
-    * window — per-window top-k values in bounded state. The state
-    * store carries one serialized fixed-size sketch per open window
-    * (TypedImperativeAggregate buffers serialize into the aggregation
-    * state row), so memory is windows × capacity regardless of value
-    * cardinality — the streaming form of the wide-domain top-k that
-    * an exact count+sort cannot provide unbounded.
-    */
-  def windowedHeavyHitters(events: DataFrame, k: Int = 3,
-                           capacity: Int = 64,
-                           window_ : String = "1 hour",
-                           watermark: String = "2 hours"): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), window_))
-      .agg(graft.functions.NativeFunctions
-        .approxTopK(col("event_type"), k, capacity).as("top"))
-      .select(col("window.start").as("window_start"), col("top"))
-
-  /** Exact per-window top-k rows via the TopKRows heap aggregate:
-    * like [[windowedHeavyHitters]], the TypedImperativeAggregate
-    * buffer serializes into the streaming state row, so state per
-    * window is k pairs — never the window's row set. Emits on window
-    * close (append mode). */
-  def windowedTopK(events: DataFrame, k: Int = 3,
-                   window_ : String = "1 hour",
-                   watermark: String = "2 hours"): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), window_))
-      .agg(graft.functions.NativeFunctions
-        .topKPairs(col("ord"), col("value"), k).as("top"))
-      .select(col("window.start").as("window_start"), col("top"))
-
-  /** Streaming weighted sample: the deterministic priority sample
-    * (`txt_weighted_sample`'s key — see
-    * [[graft.ext.TextAnalysis.withSamplePriority]]) maintained as a
-    * running bottom-k over everything ingested so far. TopKRows on
-    * ord = −prio keeps the k smallest priorities with the ascending
-    * doc_id tie preference, so after ANY sequence of micro-batches
-    * the state — k (prio, doc_id) pairs, never the corpus — equals
-    * the batch query over the union of the batches (spec-pinned).
-    * Update/complete output mode; no watermark, the sample covers
-    * the full stream history.
-    */
-  def prioritySampleStream(docs: DataFrame, k: Int = 100): DataFrame =
-    graft.ext.TextAnalysis.withSamplePriority(docs)
-      .groupBy()
-      .agg(graft.functions.NativeFunctions
-        .topKPairs(-col("prio"), col("doc_id"), k).as("sample"))
-      .select(explode(col("sample")).as("s"))
-      .select((-col("s.ord")).as("prio"), col("s.value").as("doc_id"))
-
-  /** Streaming content fingerprint — the incremental twin of
-    * `rel_table_fingerprint`: per-group running row count and SUM of
-    * a 32-bit md5 prefix of each row's canonical string. Addition is
-    * commutative and associative, so the checksum state is ONE pair
-    * of numbers per group regardless of history size, every
-    * micro-batch folds in with a map-side-combined partial, and
-    * after any sequence of batches the state equals the batch
-    * checksum over their union (spec-pinned) — continuous
-    * replication verification without ever rescanning the ingested
-    * table. Update/complete output mode; no watermark (the
-    * fingerprint covers full history).
-    *
-    * @param keyCols  canonical textual columns (caller pre-casts
-    *                 doubles/timestamps to engine-stable forms, as
-    *                 rel_table_fingerprint does)
-    */
-  def fingerprintStream(rows: DataFrame, groupCols: Seq[String],
-                        keyCols: Seq[String]): DataFrame =
-    rows
-      .withColumn("__h",
-        conv(substring(md5(concat_ws("|", keyCols.map(col): _*)), 1, 8),
-          16, 10).cast("long"))
-      .groupBy(groupCols.map(col): _*)
-      .agg(count(lit(1)).as("n_rows"),
-        sum(col("__h").cast(org.apache.spark.sql.types.DecimalType(38, 0)))
-          .as("fingerprint"))
-
-  /** Built-in session windows (gap-close semantics). */
-  def sessionWindows(events: DataFrame, gap: String = "30 minutes"): DataFrame =
-    events
-      .withWatermark("ts", "2 hours")
-      .groupBy(session_window(col("ts"), gap), col("user_id"))
-      .agg(count(lit(1)).as("n_events"))
-      .select(col("session_window.start").as("session_start"),
-        col("session_window.end").as("session_end"),
-        col("user_id"), col("n_events"))
-
-  // ------------------------------------------------------------------
-  // Custom stateful sessionization via mapGroupsWithState — the
-  // streaming twin of the batch ev_sessionize operator.
-
-  final case class Event(user_id: Long, ts: java.sql.Timestamp, value: Double)
-  final case class SessionState(sessionId: Long, lastTsMicros: Long,
-                                nEvents: Long, sumValue: Double)
-  final case class SessionUpdate(user_id: Long, session_id: Long,
-                                 n_events: Long, sum_value: Double)
-
-  /** Per-user running sessionization: a new session opens when the
-    * gap to the previous event exceeds `gapSeconds`. Emits the
-    * current session aggregate on every update (OutputMode.Update).
-    * State is O(1) per user — the shape that scales to any stream. */
-  def sessionize(events: Dataset[Event], gapSeconds: Long = 1800)
-      : Dataset[SessionUpdate] = {
-    import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .mapGroupsWithState[SessionState, SessionUpdate](
-        GroupStateTimeout.NoTimeout()) {
-        (userId: Long, batch: Iterator[Event], state: GroupState[SessionState]) =>
-          var st = state.getOption.getOrElse(SessionState(0L, Long.MinValue, 0L, 0.0))
-          for (e <- batch.toSeq.sortBy(e => (e.ts.getTime, e.value))) {
-            val micros = e.ts.getTime * 1000L
-            val isNew = st.lastTsMicros == Long.MinValue ||
-              micros - st.lastTsMicros > gapSeconds * 1000000L
-            st =
-              if (isNew) SessionState(st.sessionId + 1, micros, 1L, e.value)
-              else st.copy(lastTsMicros = micros, nEvents = st.nEvents + 1,
-                sumValue = st.sumValue + e.value)
-          }
-          state.update(st)
-          SessionUpdate(userId, st.sessionId, st.nEvents, st.sumValue)
-      }
-  }
-
-  /** Streaming exact dedup — the streaming twin of `dedup_exact` /
-    * `ev_first_seen`. `dropDuplicatesWithinWatermark` keys state on the
-    * id column but evicts entries once the watermark passes, so state
-    * is bounded by the duplicate-arrival horizon instead of growing
-    * with the full stream history (a plain `dropDuplicates` on an
-    * unbounded stream never frees state — unusable at 100 TB/day). */
-  def dedupStream(events: DataFrame, idCol: String,
-                  watermark: String = "1 hour"): DataFrame =
-    events.withWatermark("ts", watermark)
-      .dropDuplicatesWithinWatermark(idCol)
-
-  /** Stream-static enrichment join: each micro-batch of the stream
-    * joins a bounded dimension table (user/device/geo attributes).
-    * The static side is broadcast — no shuffle touches the stream,
-    * no state store is involved (unlike a stream-stream join), and
-    * the dimension is re-resolved per micro-batch, so a dimension
-    * backed by a table that is replaced between batches is picked up
-    * without restarting the query. Left join keeps events whose key
-    * has no dimension row (the telemetry-before-registration case).
-    */
-  def enrichStream(events: DataFrame, dim: DataFrame,
-                   key: String): DataFrame =
-    events.join(broadcast(dim), Seq(key), "left")
-
-  /** Stream-stream interval join — the streaming twin of the batch
-    * `ev_session_attribution`: each purchase joins the clicks of the
-    * same user in the preceding `horizonMinutes`. Both sides carry
-    * watermarks and the join condition bounds event-time distance, so
-    * each side's buffered state is evicted as the watermark advances —
-    * the only stream-stream join shape that runs unbounded. */
-  def clickAttribution(clicks: DataFrame, purchases: DataFrame,
-                       horizonMinutes: Int = 30): DataFrame = {
-    val c = clicks.withWatermark("ts", "1 hour").as("c")
-    val p = purchases.withWatermark("ts", "1 hour").as("p")
-    p.join(c,
-      expr(s"""c.user_id = p.user_id AND
-               c.ts <= p.ts AND
-               c.ts >= p.ts - INTERVAL $horizonMinutes MINUTES"""))
-      .select(col("p.user_id").as("user_id"),
-        col("p.ts").as("purchase_ts"), col("p.value").as("amount"),
-        col("c.ts").as("click_ts"))
-  }
-
-  /** LEFT OUTER variant of [[clickAttribution]]: purchases with no
-    * click in the horizon are still emitted — with a null click_ts —
-    * but only once the click-side watermark has passed the end of
-    * their match window, i.e. once no future click can still join.
-    * That deferred null-wing emission is the semantic difference
-    * from a batch left join (which knows the click side is complete);
-    * the state bound is the same as the inner form: both sides evict
-    * as watermarks advance. The unmatched output IS the "organic
-    * purchase" stream an attribution pipeline routes separately.
-    */
-  def clickAttributionOuter(clicks: DataFrame, purchases: DataFrame,
-                            horizonMinutes: Int = 30): DataFrame = {
-    val c = clicks.withWatermark("ts", "1 hour").as("c")
-    val p = purchases.withWatermark("ts", "1 hour").as("p")
-    p.join(c,
-      expr(s"""c.user_id = p.user_id AND
-               c.ts <= p.ts AND
-               c.ts >= p.ts - INTERVAL $horizonMinutes MINUTES"""),
-      "leftOuter")
-      .select(col("p.user_id").as("user_id"),
-        col("p.ts").as("purchase_ts"), col("p.value").as("amount"),
-        col("c.ts").as("click_ts"))
-  }
-
-  final case class ClosedSession(user_id: Long, start_micros: Long,
-                                 end_micros: Long, n_events: Long,
-                                 sum_value: Double)
-
-  /** Sessions emitted only when they CLOSE (append mode), via
-    * `flatMapGroupsWithState` + event-time timeout: state buffers the
-    * open session; when the watermark passes last-event + gap the
-    * timeout fires and the finished session is emitted (0 or 1 rows
-    * per invocation — the flatMap shape). Downstream consumers get
-    * each session exactly once, complete — the contract a training-
-    * data sessionizer needs, vs. `sessionize`'s running updates. */
-  def closedSessions(events: Dataset[Event], gapSeconds: Long = 1800)
-      : Dataset[ClosedSession] = {
-    import events.sparkSession.implicits._
-    events.withWatermark("ts", "0 seconds")
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[SessionBuf, ClosedSession](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        (userId: Long, batch: Iterator[Event], state: GroupState[SessionBuf]) =>
-          if (batch.isEmpty && state.hasTimedOut) {
-            // Watermark passed session end + gap: close and emit.
-            val st = state.get
-            state.remove()
-            Iterator.single(ClosedSession(userId, st.startMicros,
-              st.lastMicros, st.nEvents, st.sumValue))
-          } else {
-            val closed = Seq.newBuilder[ClosedSession]
-            var st = state.getOption.orNull
-            for (e <- batch.toSeq.sortBy(e => (e.ts.getTime, e.value))) {
-              val micros = e.ts.getTime * 1000L
-              if (st == null) st = SessionBuf(micros, micros, 1L, e.value)
-              else if (micros - st.lastMicros > gapSeconds * 1000000L) {
-                // Gap inside the stream itself closes the session
-                // immediately (no need to wait for the timeout).
-                closed += ClosedSession(userId, st.startMicros,
-                  st.lastMicros, st.nEvents, st.sumValue)
-                st = SessionBuf(micros, micros, 1L, e.value)
-              } else st = st.copy(lastMicros = micros,
-                nEvents = st.nEvents + 1, sumValue = st.sumValue + e.value)
-            }
-            state.update(st)
-            state.setTimeoutTimestamp(
-              st.lastMicros / 1000L + gapSeconds * 1000L)
-            closed.result().iterator
-          }
-      }
-  }
-
-  final case class SessionBuf(startMicros: Long, lastMicros: Long,
-                              nEvents: Long, sumValue: Double)
-
-  final case class AnomalousEvent(user_id: Long, ts_micros: Long,
-                                  value: Double, z: Double)
-  final case class RunningStats(n: Long, sum: Double, sumSq: Double)
-
-  final case class Observation(key: String, ts: java.sql.Timestamp, n: Long)
-  final case class EwmaFlag(key: String, ts_micros: Long, n: Long,
-                            ewma_q: Long, above_trend: Boolean)
-
-  /** Streaming EWMA trend — the streaming twin of the batch
-    * `ev_ewma_trend`, with the SAME exact-integer estimator: each
-    * observation is compared against the 8 prior observations'
-    * weighted sum under the rational weights 4^k·5^(7−k) (shared
-    * denominator 5⁸), so the above-trend test n·5⁸ > ewma_q is
-    * integer-exact and replay-deterministic. State per key is the
-    * ring of the last 8 LONG observations — bounded O(window), a
-    * different state shape from [[anomalyStream]]'s O(1) running
-    * sums: EWMA weights are position-dependent, so the history
-    * cannot collapse into moments. Warmup (fewer than 8 priors) is
-    * silent, mirroring the batch query's rn > 8; intra-batch fold
-    * order is pinned (ts, n) for exactly-once sinks.
-    */
-  def ewmaTrendStream(obs: Dataset[Observation], window: Int = 8)
-      : Dataset[EwmaFlag] = {
-    import obs.sparkSession.implicits._
-    val weights = (0 until window).map(k =>
-      math.pow(4, k).toLong * math.pow(5, window - 1 - k).toLong)
-    val denom = math.pow(5, window).toLong
-    obs.groupByKey(_.key)
-      .flatMapGroupsWithState[List[Long], EwmaFlag](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (key: String, batch: Iterator[Observation],
-         state: GroupState[List[Long]]) =>
-          var hist = state.getOption.getOrElse(Nil) // most recent first
-          val out = Seq.newBuilder[EwmaFlag]
-          for (o <- batch.toSeq.sortBy(o => (o.ts.getTime, o.n))) {
-            if (hist.size == window) {
-              val ewmaQ = hist.iterator.zipWithIndex
-                .map { case (x, k) => x * weights(k) }.sum
-              out += EwmaFlag(key, o.ts.getTime * 1000L, o.n, ewmaQ,
-                o.n * denom > ewmaQ)
-            }
-            hist = (o.n :: hist).take(window)
-          }
-          state.update(hist)
-          out.result().iterator
-      }
-  }
-
-  /** Streaming anomaly detection — the streaming twin of the batch
-    * `ev_anomaly_zscore`: per key, each value is z-scored against the
-    * running statistics of all PRIOR events (state carries only
-    * (n, Σx, Σx²) — O(1) per key, never the history), and anomalous
-    * events are emitted as they arrive. The fold order inside a
-    * micro-batch is pinned (ts, value), so re-execution after failure
-    * reproduces identical flags — required for exactly-once sinks.
-    * State never times out by design: the keys are a bounded set of
-    * entities (event types, tenants), not an unbounded id space; key
-    * by a bounded column or add a TTL before pointing this at one.
-    */
-  def anomalyStream(events: Dataset[Event], minN: Long = 12,
-                    threshold: Double = 3.0): Dataset[AnomalousEvent] = {
-    import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState[RunningStats, AnomalousEvent](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (key: Long, batch: Iterator[Event], state: GroupState[RunningStats]) =>
-          var st = state.getOption.getOrElse(RunningStats(0L, 0.0, 0.0))
-          val out = Seq.newBuilder[AnomalousEvent]
-          for (e <- batch.toSeq.sortBy(e => (e.ts.getTime, e.value))) {
-            if (st.n >= minN) {
-              val mean = st.sum / st.n
-              val variance =
-                (st.sumSq - st.sum * st.sum / st.n) / (st.n - 1)
-              if (variance > 0.0) {
-                val z = (e.value - mean) / math.sqrt(variance)
-                if (math.abs(z) > threshold)
-                  out += AnomalousEvent(key, e.ts.getTime * 1000L, e.value, z)
-              }
-            }
-            st = RunningStats(st.n + 1, st.sum + e.value,
-              st.sumSq + e.value * e.value)
-          }
-          state.update(st)
-          out.result().iterator
-      }
-  }
-
-  /** Incremental upsert sink: each micro-batch of change rows merges
-    * latest-wins into a versioned parquet snapshot — the streaming
-    * form of the batch `rel_merge_upsert` compaction, i.e. a CDC
-    * stream continuously maintaining a queryable table. Each batch
-    * writes a full new version directory `v=<batchId>` (read previous
-    * → union changes → keep max-`seqCol` row per `keyCol`); readers
-    * use [[latestSnapshot]]. Versioning by batchId makes retries
-    * idempotent (a replayed batch overwrites its own version, never a
-    * newer one), and writing a NEW directory — rather than
-    * overwriting the one being read — is what keeps the read-merge-
-    * write cycle safe without a transaction log. `seqCol` must be
-    * unique per key (a CDC LSN / event seq); production replaces the
-    * rewrite-everything snapshot with a transactional table format,
-    * but the merge semantics are exactly these.
-    */
-  def upsertStream(changes: DataFrame, keyCol: String, seqCol: String,
-                   snapshotDir: String, checkpointDir: String,
-                   trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    changes.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val merged = latestSnapshot(spark, snapshotDir) match {
-          case Some(prev) => prev.unionByName(batch)
-          case None => batch
-        }
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(col(keyCol)).orderBy(col(seqCol).desc)
-        merged
-          .withColumn("__rk", row_number().over(w))
-          .filter(col("__rk") === 1).drop("__rk")
-          .write.mode("overwrite").parquet(s"$snapshotDir/v=$batchId")
-        ()
-      }
-      .start()
-
-  /** The latest snapshot version written by [[upsertStream]], if any
-    * batch has committed yet. */
-  def latestSnapshot(spark: SparkSession, snapshotDir: String)
-      : Option[DataFrame] = {
-    val dir = new java.io.File(snapshotDir)
-    val versions = Option(dir.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isDirectory && f.getName.startsWith("v="))
-      .map(_.getName.stripPrefix("v=").toLong)
-    if (versions.isEmpty) None
-    else Some(spark.read.parquet(s"$snapshotDir/v=${versions.max}"))
-  }
-
-  final case class DocBand(doc_id: Long, ts: java.sql.Timestamp,
-                           band_idx: Int, band_hash: String)
-  final case class BandOwner(owner: Long, lastSeenMs: Long)
-  final case class BandHit(doc_id: Long, band_idx: Int, owner_id: Long,
-                           is_hit: Boolean)
-
-  /** Streaming near-duplicate suppression — the streaming twin of the
-    * batch `dedup_lsh_pairs`/`dedup_verdict` path. Each arriving
-    * document's fused MinHash signature (the same
-    * [[graft.functions.MinHashSig]] one-pass expression and the same
-    * band layout as [[graft.ext.Dedup.bandedKeys]] — batch and stream
-    * agree on candidates BY CONSTRUCTION) is split into LSH bands;
-    * state is keyed per (band_idx, band_hash) bucket and stores only
-    * the bucket's first-claiming doc_id — O(1) per bucket, not
-    * per-document history. A document landing in a bucket that an
-    * earlier document already claimed is flagged a near-dup suspect
-    * for that band (`is_hit`); callers roll suspect bands up per doc
-    * (any-hit = candidate, exactly the batch LSH candidate rule) and
-    * send hits to a verifier or quarantine sink.
-    *
-    * Within a micro-batch, rows are processed in (ts, doc_id) order,
-    * so ownership does not depend on arrival order inside the batch —
-    * replayed batches produce identical output (exactly-once safe).
-    * Buckets idle longer than `ownerTtlMs` past the watermark time
-    * out and evict, so state is bounded by the duplicate-arrival
-    * horizon — the same posture as `dropDuplicatesWithinWatermark`;
-    * an unbounded owner map would grow with corpus size and OOM the
-    * state store at 100 TB/day. Emitted per (doc, band) in Append
-    * mode: downstream aggregation belongs in `foreachBatch` (chaining
-    * a second stateful operator after flatMapGroupsWithState
-    * restricts output modes).
-    *
-    * Input columns: `doc_id` long, `ts` timestamp, `text` string.
-    */
-  def nearDupStream(docs: DataFrame, watermark: String = "1 hour",
-                    ownerTtlMs: Long = 3600000L): Dataset[BandHit] = {
-    val s = docs.sparkSession
-    import s.implicits._
-    val sigs = docs.withWatermark("ts", watermark)
-      .select(col("doc_id"), col("ts"),
-        graft.functions.NativeFunctions.minHashSig(
-          trim(regexp_replace(lower(col("text")), "\\s+", " "))).as("sig"))
-      .filter(col("sig").isNotNull)
-      .select(col("doc_id"), col("ts"),
-        col("sig").getItem(0).as("h1"), col("sig").getItem(1).as("h2"),
-        col("sig").getItem(2).as("h3"), col("sig").getItem(3).as("h4"))
-    graft.ext.Dedup.bandedKeys(sigs, carry = Seq("ts")).as[DocBand]
-      .groupByKey(b => (b.band_idx, b.band_hash))
-      .flatMapGroupsWithState[BandOwner, BandHit](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        (_: (Int, String), batch: Iterator[DocBand],
-         state: GroupState[BandOwner]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val rows = batch.toSeq.sortBy(b => (b.ts.getTime, b.doc_id))
-            var owner = state.getOption.map(_.owner).getOrElse(-1L)
-            val out = Seq.newBuilder[BandHit]
-            for (b <- rows) {
-              if (owner < 0) owner = b.doc_id
-              out += BandHit(b.doc_id, b.band_idx, owner,
-                owner != b.doc_id)
-            }
-            val lastMs = rows.map(_.ts.getTime).max
-            state.update(BandOwner(owner, lastMs))
-            state.setTimeoutTimestamp(lastMs + ownerTtlMs)
-            out.result().iterator
-          }
-      }
   }
 }

@@ -7,9 +7,9 @@ import org.scalatest.Suite
   * local[4], the engine the mains verify and time. All suites share
   * one forked test JVM and so one session; a spec that needs other
   * runtime confs sets them through [[withConf]], which puts the
-  * previous values back.
+  * previous values back. Scratch dirs come from [[TempDirs.tempDir]].
   */
-trait SharedSpark { this: Suite =>
+trait SharedSpark extends TempDirs { this: Suite =>
 
   lazy val spark: SparkSession = GraftSession.create(4)
 

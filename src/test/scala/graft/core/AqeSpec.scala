@@ -1,6 +1,5 @@
 package graft.core
 
-import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -29,8 +28,8 @@ class AqeSpec extends AnyFunSuite with SharedSpark {
 
   test("AQE splits a skewed sort-merge join partition at runtime") {
     import spark.implicits._
-    val skewDir = Files.createTempDirectory("aqe_skew").toString
-    val dimDir = Files.createTempDirectory("aqe_dim").toString
+    val skewDir = tempDir("aqe_skew").toString
+    val dimDir = tempDir("aqe_dim").toString
     // 200k rows on ONE key + a thin tail: one shuffle partition dwarfs
     // the median, the AQE skew rule splits it into parallel subtasks.
     // The md5 payload is incompressible and aggregated downstream, so
@@ -82,8 +81,8 @@ class AqeSpec extends AnyFunSuite with SharedSpark {
 
   test("AQE upgrades a sort-merge join to broadcast at runtime") {
     import spark.implicits._
-    val factDir = Files.createTempDirectory("aqe_fact").toString
-    val dimDir = Files.createTempDirectory("aqe_dim2").toString
+    val factDir = tempDir("aqe_fact").toString
+    val dimDir = tempDir("aqe_dim2").toString
     spark.range(0, 50000L)
       .select(($"id" % 1000).as("k"), md5($"id".cast("string")).as("payload"))
       .write.mode("overwrite").parquet(factDir)

@@ -1,6 +1,5 @@
 package graft.core
 
-import java.nio.file.Files
 
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -60,7 +59,7 @@ class BucketingSpec extends AnyFunSuite with SharedSpark {
     import org.apache.spark.sql.functions._
     import spark.implicits._
     val sf = "/root/testdata/sf0.001"
-    val out = Files.createTempDirectory("clustered").toString + "/li"
+    val out = tempDir("clustered").toString + "/li"
     Bucketing.writeRangeClustered(
       Tables.lineitem(spark, sf), out, "l_shipdate", partitions = 4)
     // per-file min/max ranges must not overlap (modulo boundary ties:
@@ -90,7 +89,7 @@ class BucketingSpec extends AnyFunSuite with SharedSpark {
     import org.apache.spark.sql.functions._
     import spark.implicits._
     val sf = "/root/testdata/sf0.001"
-    val out = java.nio.file.Files.createTempDirectory("part").toString
+    val out = tempDir("part").toString
     Bucketing.writePartitioned(Tables.documents(spark, sf), out, "lang")
     val read = spark.read.parquet(out).filter($"lang" === "en")
     val formatted = read.queryExecution.explainString(
@@ -113,7 +112,7 @@ class BucketingSpec extends AnyFunSuite with SharedSpark {
     import org.apache.spark.sql.functions._
     import spark.implicits._
     val sf = "/root/testdata/sf0.001"
-    val out = Files.createTempDirectory("dpp").toString
+    val out = tempDir("dpp").toString
     Bucketing.writePartitioned(Tables.lineitem(spark, sf), out,
       "l_returnflag")
     // Join on the PARTITION column against a dim filtered on a
@@ -125,7 +124,7 @@ class BucketingSpec extends AnyFunSuite with SharedSpark {
     // filtered date dim.
     // Parquet-backed dim: a LocalRelation would constant-fold the
     // filter away and DPP requires a surviving selective predicate.
-    val dimPath = Files.createTempDirectory("dpp_dim").toString + "/dim"
+    val dimPath = tempDir("dpp_dim").toString + "/dim"
     Seq(("R", "returned"), ("A", "accepted"), ("N", "none"))
       .toDF("flag", "label").write.mode("overwrite").parquet(dimPath)
     // No input_file_name() here: it is nondeterministic and would
@@ -161,7 +160,7 @@ class BucketingSpec extends AnyFunSuite with SharedSpark {
   test("z-ordered write concentrates range filters on BOTH dimensions") {
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    val out = Files.createTempDirectory("zorder").toString + "/grid"
+    val out = tempDir("zorder").toString + "/grid"
     // 256×256 grid: every (x, y) pair once.
     val grid = spark.range(0, 65536L)
       .select(($"id" % 256).cast("int").as("x"),
@@ -203,7 +202,7 @@ class BucketingSpec extends AnyFunSuite with SharedSpark {
     // reads use the FIRST file's schema for speed — mergeSchema is
     // the documented opt-in.)
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("evolve").toString
+    val dir = tempDir("evolve").toString
     Seq((1L, "a"), (2L, "b")).toDF("id", "v")
       .write.mode("overwrite").parquet(s"$dir/vintage=1")
     Seq((3L, "c", 99L), (4L, "d", 100L)).toDF("id", "v", "score")
@@ -222,7 +221,7 @@ class BucketingSpec extends AnyFunSuite with SharedSpark {
     // must not clobber sibling partitions (static mode wipes the
     // whole table root — the classic data-loss misconfiguration).
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("dpo").toString
+    val dir = tempDir("dpo").toString
     withConf("spark.sql.sources.partitionOverwriteMode" -> "dynamic") {
       Seq((1L, "2024-01-01"), (2L, "2024-01-02"))
         .toDF("v", "day")

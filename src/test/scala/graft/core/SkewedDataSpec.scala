@@ -1,6 +1,5 @@
 package graft.core
 
-import java.nio.file.Files
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -22,7 +21,7 @@ class SkewedDataSpec extends AnyFunSuite with SharedSpark {
     * events.user_id on hot key 0 (orders=30k so the hot shuffle
     * partition clears AQE's byte threshold). */
   lazy val dir: String = {
-    val d = Files.createTempDirectory("skewed_sf").toString
+    val d = tempDir("skewed_sf").toString
     graft.SyntheticGen.generate(spark, d, 0.02, skewHot = 0.3)
     d
   }

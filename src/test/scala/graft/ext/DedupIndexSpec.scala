@@ -94,7 +94,7 @@ class DedupIndexSpec extends AnyFunSuite with SharedSpark {
   }
 
   test("fingerprint tracks documents.parquet changes (staleness guard)") {
-    val tmp = Files.createTempDirectory("didx_fp").toFile
+    val tmp = tempDir("didx_fp")
     val doc = new File(tmp, "documents.parquet")
     Files.write(doc.toPath, "aaaa".getBytes)
     val f1 = DedupIndex.store.fingerprint(tmp.toString)

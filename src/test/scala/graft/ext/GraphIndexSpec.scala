@@ -60,7 +60,7 @@ class GraphIndexSpec extends AnyFunSuite with SharedSpark {
   }
 
   test("fingerprint tracks input file changes (staleness guard)") {
-    val tmp = Files.createTempDirectory("gidx_fp").toFile
+    val tmp = tempDir("gidx_fp")
     val li = new File(tmp, "lineitem.parquet")
     val or = new File(tmp, "orders.parquet")
     Files.write(li.toPath, "aaaa".getBytes)

@@ -5,16 +5,18 @@ import java.nio.file.Files
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.TempDirs
+
 /** Install mechanics of the persisted index layouts: atomic rename,
   * marker-last ordering, and — the round-7 verdict nit — that NO
   * code path leaks a tmp tree under the shared index root (a lost
   * cross-process rename race previously orphaned the loser's
   * fully-built directory; unbounded across runs under contention).
   */
-class IndexUtilSpec extends AnyFunSuite {
+class IndexUtilSpec extends AnyFunSuite with TempDirs {
 
   private def freshRoot(): File =
-    Files.createTempDirectory("graft-indexutil-spec").toFile
+    tempDir("graft-indexutil-spec")
 
   private def write(dir: File, name: String, content: String): Unit = {
     dir.mkdirs()

@@ -26,19 +26,6 @@ class Session4InvarianceSpec extends AnyFunSuite with SharedSpark {
     assertPartitionInvariant(queries.map(_ -> sf))
   }
 
-  test("fingerprint is order-free: identical over a reshuffled input") {
-    import spark.implicits._
-    val rows = (1L to 500L).map(i => (s"g${i % 4}", i, s"p$i"))
-      .toDF("grp", "id", "payload")
-    def fp(df: org.apache.spark.sql.DataFrame): Seq[String] =
-      graft.streaming.StreamingOps
-        .fingerprintStream(df, Seq("grp"), Seq("id", "payload"))
-        .collect().map(_.toString).sorted.toSeq
-    // Same rows, radically different physical order/partitioning —
-    // the checksum must not notice.
-    assert(fp(rows) == fp(rows.repartition(13).sortWithinPartitions("payload")))
-  }
-
   test("minhash accuracy: estimate and truth are valid ppm, error consistent") {
     val rows = SparkEntry.queries("dedup_minhash_accuracy")(spark, sf)
       .collect()

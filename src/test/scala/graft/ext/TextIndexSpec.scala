@@ -94,7 +94,7 @@ class TextIndexSpec extends AnyFunSuite with SharedSpark {
   }
 
   test("fingerprint tracks documents.parquet changes (staleness guard)") {
-    val tmp = Files.createTempDirectory("tidx_fp").toFile
+    val tmp = tempDir("tidx_fp")
     val doc = new File(tmp, "documents.parquet")
     Files.write(doc.toPath, "aaaa".getBytes)
     val f1 = TextIndex.store.fingerprint(tmp.toString)

@@ -16,8 +16,8 @@ class RangeBinJoinSpec extends AnyFunSuite with SharedSpark {
   // Parquet-backed so ConvertToLocalRelation can't fold the join away.
   private lazy val (pointsPath, intervalsPath) = {
     import spark.implicits._
-    val pp = java.nio.file.Files.createTempDirectory("rb_points").toString
-    val ip = java.nio.file.Files.createTempDirectory("rb_ivals").toString
+    val pp = tempDir("rb_points").toString
+    val ip = tempDir("rb_ivals").toString
     (0L until 5000L).map(i => (i, i % 7)).toDF("p", "tag")
       .write.mode("overwrite").parquet(pp)
     // Overlapping intervals, one inverted (lo > hi), one null-bounded.
@@ -93,7 +93,7 @@ class RangeBinJoinSpec extends AnyFunSuite with SharedSpark {
   test("interval-overlap join rewrites to a binned hash join") {
     import spark.implicits._
     // second interval table with disjoint column names
-    val p2 = java.nio.file.Files.createTempDirectory("rb_iv2").toString
+    val p2 = tempDir("rb_iv2").toString
     (Seq((10L, 50L, 200L), (11L, 2400L, 2600L), (12L, 330L, 310L)) // 12 inverted
       .toDF("b_id", "b_lo", "b_hi"))
       .write.mode("overwrite").parquet(p2)

@@ -18,7 +18,7 @@ class ThresholdRulesSpec extends AnyFunSuite with SharedSpark {
   // no plan to inspect.
   private lazy val pairsPath: String = {
     import spark.implicits._
-    val p = java.nio.file.Files.createTempDirectory("lev_pairs").toString
+    val p = tempDir("lev_pairs").toString
     Seq(("kitten", "sitting", 3), ("abc", "abd", 1), ("abc", "abc", 0),
         ("abc", "xyz", 3), ("ab", "abcd", 2), ("", "abc", 3))
       .toDF("a", "b", "d")
