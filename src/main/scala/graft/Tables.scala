@@ -48,9 +48,11 @@ object Tables {
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
 
   /** Row count of `<dir>/<name>.parquet`, cached per path for the
-    * lifetime of the process. Regime switches (exact-vs-sketch
-    * percentile in rel_winsorized_stats / rel_median_abs_deviation)
-    * consult this on every query construction; without the cache each
+    * lifetime of the process. It is the observed measure most
+    * [[Regimes]] switches pass to `Regimes.big`, and the input to the
+    * oracle-mirrored sample arithmetic (Dedup, Similarity); compare it
+    * with a threshold only through a `Regimes` entry. Switches consult
+    * it on every query construction; without the cache each
     * construction charged a full count job to the query's measured
     * time. Testdata dirs are immutable within a run, so a plain
     * per-path memo is safe.

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.DecimalType
 
-import graft.{Q, Tables}
+import graft.{Q, Regimes, Tables}
 
 /** Second tier of relational coverage: CUBE grouping sets, exact
   * percentiles, cross-table joins between the text and vector
@@ -917,7 +917,8 @@ object Advanced {
     // min-row pick per group via a rank filter.
     Q("rel_weighted_median",
       (s, d) => weightedMedianFrame(Tables.lineitem(s, d),
-        distributed = Tables.rowCount(s, d, "lineitem") > 2000000L),
+        distributed = Regimes.big(s, Regimes.PrefixSum,
+          Tables.rowCount(s, d, "lineitem"))),
       Some("""WITH base AS (
           SELECT l_returnflag, l_extendedprice, l_orderkey, l_linenumber,
             CAST(l_quantity AS BIGINT) AS q,
@@ -1080,7 +1081,8 @@ object Advanced {
         // threshold the cut comes from 9 broadcast approx-percentile
         // spend boundaries + comparisons (exact per-bucket sums,
         // approximate bucket EDGES). Oracle scales use the exact path.
-        val bigFrame = Tables.rowCount(s, d, "orders") > 50000000L
+        val bigFrame = Regimes.big(s, Regimes.GlobalNtile,
+          Tables.rowCount(s, d, "orders"))
         val bucketed =
           if (!bigFrame) {
             // small-regime branch only (WindowAuditSpec allowlist)

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.DecimalType
 
-import graft.{Q, Tables}
+import graft.{Q, Regimes, Tables}
 
 /** Relational operator coverage: scan/filter/project, equi + semi +
   * anti + multi-way joins (broadcast where the build side is small),
@@ -716,12 +716,11 @@ object Relational {
         // mergeable approx_percentile sketch instead (bounded buffer,
         // same plan shape); only the bounds' exactness is traded, the
         // clipped sum stays an exact decimal. Oracle scales run the
-        // exact path; the threshold is a conf so PlanSpec can force
-        // the big-frame regime and pin that no exact `percentile`
-        // (full per-group value buffering) survives in its plan.
-        val exactMax = s.conf.get(
-          "spark.graft.winsorize.exactMaxRows", "100000000").toLong
-        val bigFrame = Tables.rowCount(s, d, "lineitem") > exactMax
+        // exact path; PlanSpec forces the big side and pins that no
+        // exact `percentile` (full per-group value buffering)
+        // survives in its plan.
+        val bigFrame = Regimes.big(s, Regimes.ExactPercentile,
+          Tables.rowCount(s, d, "lineitem"))
         val pctExpr =
           if (!bigFrame) "percentile(l_extendedprice, array(0.01D, 0.99D))"
           else "approx_percentile(l_extendedprice, array(0.01D, 0.99D), 10000)"
@@ -852,15 +851,14 @@ object Relational {
         // Scale switch (the rel_winsorized_stats pattern above): the
         // exact `percentile` buffers every group value in one
         // aggregation buffer — ~2M doubles per returnflag at sf1, a
-        // per-task OOM at 100×. Past the conf threshold BOTH passes
+        // per-task OOM at 100×. Past the threshold BOTH passes
         // (the group median and the deviation median) come from the
         // mergeable approx_percentile sketch instead — bounded
         // buffer, identical two-pass broadcast plan shape. Oracle
-        // scales run the exact path; PlanSpec forces the big-frame
-        // regime and pins that no exact percentile survives.
-        val exactMax = s.conf.get(
-          "spark.graft.mad.exactMaxRows", "100000000").toLong
-        val bigFrame = Tables.rowCount(s, d, "lineitem") > exactMax
+        // scales run the exact path; PlanSpec forces the big side
+        // and pins that no exact percentile survives.
+        val bigFrame = Regimes.big(s, Regimes.ExactPercentile,
+          Tables.rowCount(s, d, "lineitem"))
         def pct(c: String) =
           if (!bigFrame) s"percentile($c, 0.5D)"
           else s"approx_percentile($c, 0.5D, 10000)"

@@ -3,7 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.{Q, Tables}
+import graft.{Q, Regimes, Tables}
 
 /** Deduplication operators for a training-data pipeline: exact
   * (content-hash groupBy), MinHash signatures + LSH banding
@@ -80,7 +80,17 @@ object Dedup {
     * engines agree at EVERY scale. */
   private def groupSampleThreshold(s: SparkSession, d: String): Long =
     math.max(1L,
-      10240000L / math.max(Tables.rowCount(s, d, "documents"), 5000L))
+      groupSampleBudget / math.max(Tables.rowCount(s, d, "documents"),
+        groupSampleFloorDocs))
+
+  /** Corpus size up to which the group sample keeps its original
+    * threshold (2048 of 65536); [[groupSampleBudget]] = 2048 × this. */
+  private val groupSampleFloorDocs = 5000L
+  private val groupSampleBudget = 2048L * groupSampleFloorDocs
+
+  /** dedup_minhash_accuracy samples candidate pairs at 1 in
+    * 10·ceil(n_docs / accDocsPerStep), mirrored in its oracle SQL. */
+  private val accDocsPerStep = 10000L
 
   private def groupSampled(thresh: Long): Column =
     conv(substring(md5((col("doc_id") % 100000).cast("string")), 1, 4),
@@ -88,7 +98,7 @@ object Dedup {
 
   /** Oracle CTE mirroring [[groupSampleThreshold]]. */
   private val sampleThrSql =
-    """sthr AS (SELECT greatest(1, 10240000 // greatest(COUNT(*), 5000))
+    s"""sthr AS (SELECT greatest(1, $groupSampleBudget // greatest(COUNT(*), $groupSampleFloorDocs))
           AS t FROM documents)"""
 
   /** Oracle predicate mirroring [[groupSampled]]. */
@@ -222,7 +232,7 @@ object Dedup {
     * Path selection follows the measured edge count — the same kind
     * of runtime decision AQE makes per exchange, taken once:
     *
-    *  - `nEdges <= smallGraphEdges` (default 1M ≈ ~100 MB of DSU
+    *  - up to [[Regimes.DsuComponents]]' 1M edges (≈ ~100 MB of DSU
     *    state): union-find in ONE executor task (repartition(1) +
     *    mapPartitions). Three Spark jobs total, no iteration — the
     *    iterative form's 5–9 driver-coordinated rounds are pure
@@ -253,7 +263,6 @@ object Dedup {
     * session should unpersist it when done.
     */
   def connectedComponents(edges0: DataFrame,
-                          smallGraphEdges: Long = 1000000L,
                           edgeBound: Long = -1L): DataFrame = {
     val s = edges0.sparkSession
     import s.implicits._
@@ -268,17 +277,12 @@ object Dedup {
     // edge frame is referenced exactly once (the DSU scan) and the
     // persist is skipped too. A bound ABOVE the threshold proves
     // nothing (the true count may still be small), so that case falls
-    // back to counting.
-    val boundedSmall = edgeBound >= 0L && edgeBound <= smallGraphEdges
+    // back to counting. A forced big side skips both the bound and
+    // the count.
+    val boundedSmall = edgeBound >= 0L &&
+      !Regimes.big(s, Regimes.DsuComponents, edgeBound)
     val edges = if (boundedSmall) edges0 else edges0.persist()
-    val nEdges = if (boundedSmall) -1L else edges.count()
-    // Lineage cut + cache; materialized by the caller's next action.
-    def pin(df: DataFrame): DataFrame = {
-      val cut = s.createDataFrame(df.rdd, df.schema)
-      cut.persist()
-      cut
-    }
-    if (boundedSmall || nEdges <= smallGraphEdges) {
+    if (boundedSmall || !Regimes.big(s, Regimes.DsuComponents, edges.count())) {
       val comp = edges.select($"src", $"dst").as[(Long, Long)]
         .repartition(1)
         .mapPartitions { it =>
@@ -888,8 +892,8 @@ object Dedup {
         // 1/10 form. The same COUNT(*)-derived modulus is computed
         // inside the oracle SQL, so the two engines stay equal at
         // EVERY scale, sf1 included.
-        val sampleMod = 10L *
-          ((Tables.rowCount(s, d, "documents") + 9999L) / 10000L)
+        val sampleMod = 10L * ((Tables.rowCount(s, d, "documents") +
+          accDocsPerStep - 1) / accDocsPerStep)
         val cands = DedupIndex.candidates(s, d)
           .filter(conv(substring(md5(concat_ws("|",
             lit("acc:"), $"doc_a", $"doc_b")), 1, 4), 16, 10)
@@ -923,7 +927,7 @@ object Dedup {
           .withColumn("err_ppm", abs($"est_ppm" - $"true_ppm"))
       },
       Some(s"""WITH $corpusSql, $signaturesSql, $bandsSql,
-        smod AS (SELECT 10 * ((COUNT(*) + 9999) // 10000) AS m
+        smod AS (SELECT 10 * ((COUNT(*) + ${accDocsPerStep - 1}) // $accDocsPerStep) AS m
                  FROM documents),
         sampled AS (
           SELECT doc_a, doc_b FROM candidates

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.DecimalType
 
-import graft.{Q, Tables}
+import graft.{Q, Regimes, Tables}
 
 /** Event-stream operators over the `events` table: semi-structured
   * (JSON-in-string) extraction, calendar bucketing, gap-based
@@ -773,7 +773,8 @@ object EventsOps {
         // trading only bucket-BOUNDARY exactness. The oracle always
         // exercises the exact path (sf dirs are far below the
         // threshold).
-        val bigFrame = Tables.rowCount(s, d, "events") > 50000000L
+        val bigFrame = Regimes.big(s, Regimes.GlobalNtile,
+          Tables.rowCount(s, d, "events"))
         val scored =
           if (!bigFrame) {
             // threshold-bounded branch (small regime only): the
@@ -1328,7 +1329,8 @@ object EventsOps {
     // never widen rows.
     Q("ev_peak_concurrency",
       (s, d) => peakConcurrencyFrame(Tables.events(s, d),
-        distributed = Tables.rowCount(s, d, "events") > 2000000L),
+        distributed = Regimes.big(s, Regimes.PrefixSum,
+          Tables.rowCount(s, d, "events"))),
       Some("""WITH deltas AS (
           SELECT event_type, epoch_us(ts) AS t, 1 AS delta FROM events
           UNION ALL

@@ -3,7 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.{Q, Tables}
+import graft.{Q, Regimes, Tables}
 
 /** Graph analytics over relationally-derived graphs — the two shapes
   * a warehouse actually runs without a dedicated graph engine:
@@ -46,14 +46,13 @@ import graft.{Q, Tables}
   */
 object GraphOps {
 
-  /** persist + lineage cut (same pattern as Dedup.connectedComponents):
-    * the LogicalRDD leaf is computed once and cached however many
-    * times the unrolled plan references it. */
-  private def pin(df: DataFrame): DataFrame = {
-    val cut = df.sparkSession.createDataFrame(df.rdd, df.schema)
-    cut.persist()
-    cut
-  }
+  /** Node-sized join side under [[Regimes.GraphBroadcast]]:
+    * broadcast on the small side; on the big side a SHUFFLE_HASH hint,
+    * because the stats-less LogicalRDD leaves of pinned frames would
+    * otherwise plan sort-merge and neither side broadcasts at 10⁹
+    * nodes. Only the join strategy changes, never a row. */
+  private def maybeB(bcast: Boolean, df: DataFrame): DataFrame =
+    if (bcast) broadcast(df) else df.hint("SHUFFLE_HASH")
 
   /** Pin manager for unrolled iterative loops — LAZY per round (no
     * eager count, no early unpersist: the lineage cut bounds the
@@ -202,7 +201,6 @@ object GraphOps {
     * scale reasoning.
     */
   def pagerank(edges0: DataFrame, rounds: Int = 3,
-               broadcastThreshold: Long = 10000000L,
                nodeBound: Long = -1L): DataFrame = {
     val s = edges0.sparkSession
     import s.implicits._
@@ -210,24 +208,19 @@ object GraphOps {
     // Pinned: referenced by the em build, the unit frame and the
     // rank init — one computation instead of three.
     val deg0 = pin(edges.groupBy($"src").agg(count(lit(1)).as("outdeg")))
-    // Broadcast/SHUFFLE_HASH regime switch: node-sized frames
-    // broadcast while they fit, beyond that every round join goes
-    // SHUFFLE_HASH (the stats-less LogicalRDD leaves would otherwise
-    // plan sort-merge — same reasoning as Dedup.connectedComponents'
-    // iterative path; neither side broadcasts at 10⁹ nodes). Callers
+    // Broadcast/SHUFFLE_HASH regime switch ([[maybeB]]). Callers
     // with a cheap node-count UPPER BOUND (e.g. dimension-table row
     // counts) pass it to skip the eager count job this operator
     // otherwise pays before its main action (guide §1.2); the switch
     // is never semantic and an overshoot only flips
     // broadcast→SHUFFLE_HASH earlier, the safe direction.
-    val n = if (nodeBound >= 0L) nodeBound else deg0.count()
-    def maybeB(df: DataFrame): DataFrame =
-      if (n <= broadcastThreshold) broadcast(df) else df.hint("SHUFFLE_HASH")
+    val bcast = !Regimes.big(s, Regimes.GraphBroadcast,
+      if (nodeBound >= 0L) nodeBound else deg0.count())
     // Edge frame with the sender's out-degree attached — the only
     // big table; pinned, scanned once per round, never shuffled in
     // the broadcast regime.
     val em = pin(edges
-      .join(maybeB(deg0.withColumnRenamed("src", "dsrc")),
+      .join(maybeB(bcast, deg0.withColumnRenamed("src", "dsrc")),
         col("src") === col("dsrc"))
       .select($"src", $"dst", $"outdeg"))
     // unit/base as a broadcast 1-row frame instead of an eager
@@ -244,12 +237,12 @@ object GraphOps {
     val rp = new RoundPins()
     for (_ <- 1 to rounds) {
       val contrib = em
-        .join(maybeB(ranks), $"src" === $"id")
+        .join(maybeB(bcast, ranks), $"src" === $"id")
         .groupBy($"dst")
         .agg(sum(expr("r div outdeg")).as("c"))
       ranks = rp.step(ranks.select($"id")
         .crossJoin(broadcast(unitF))
-        .join(maybeB(contrib), $"id" === $"dst", "left")
+        .join(maybeB(bcast, contrib), $"id" === $"dst", "left")
         .select($"id",
           ($"base" + expr("(85 * coalesce(c, 0L)) div 100")).as("r")))
     }
@@ -285,22 +278,20 @@ object GraphOps {
     */
   def personalizedPagerank(edges0: DataFrame, seeds0: DataFrame,
                            rounds: Int = 3,
-                           broadcastThreshold: Long = 10000000L,
                            nodeBound: Long = -1L): DataFrame = {
     val s = edges0.sparkSession
     import s.implicits._
     val edges = pin(edges0)
     val deg0 = edges.groupBy($"src").agg(count(lit(1)).as("outdeg"))
-    val n = if (nodeBound >= 0L) nodeBound else deg0.count()
-    def maybeB(df: DataFrame): DataFrame =
-      if (n <= broadcastThreshold) broadcast(df) else df.hint("SHUFFLE_HASH")
+    val bcast = !Regimes.big(s, Regimes.GraphBroadcast,
+      if (nodeBound >= 0L) nodeBound else deg0.count())
     val em = pin(edges
-      .join(maybeB(deg0.withColumnRenamed("src", "dsrc")),
+      .join(maybeB(bcast, deg0.withColumnRenamed("src", "dsrc")),
         col("src") === col("dsrc"))
       .select($"src", $"dst", $"outdeg"))
     // node frame with a seed flag; mass splits over PRESENT seeds
     val nodes = pin(deg0.select($"src".as("id"))
-      .join(maybeB(seeds0.select($"id".as("seed_id")).distinct()),
+      .join(maybeB(bcast, seeds0.select($"id".as("seed_id")).distinct()),
         $"id" === $"seed_id", "left")
       .select($"id", $"seed_id".isNotNull.cast("long").as("is_seed")))
     // unit/base as a broadcast 1-row frame instead of an eager
@@ -318,11 +309,11 @@ object GraphOps {
     val rp = new RoundPins()
     for (_ <- 1 to rounds) {
       val contrib = em
-        .join(maybeB(ranks.filter($"r" > 0)), $"src" === $"id")
+        .join(maybeB(bcast, ranks.filter($"r" > 0)), $"src" === $"id")
         .groupBy($"dst")
         .agg(sum(expr("r div outdeg")).as("c"))
       ranks = rp.step(nodes.crossJoin(broadcast(unitF))
-        .join(maybeB(contrib), $"id" === $"dst", "left")
+        .join(maybeB(bcast, contrib), $"id" === $"dst", "left")
         .select($"id",
           ($"is_seed" * $"base" + expr("(85 * coalesce(c, 0L)) div 100"))
             .as("r")))
@@ -595,13 +586,11 @@ object GraphOps {
                  pinner: DataFrame => DataFrame = pin): DataFrame = {
     val s = edges.sparkSession
     import s.implicits._
-    def maybeB(df: DataFrame): DataFrame =
-      if (broadcastSurvivors) broadcast(df) else df.hint("SHUFFLE_HASH")
     val keep = pinner(edges.groupBy($"src").agg(count(lit(1)).as("deg"))
       .filter($"deg" >= k).select($"src".as("v")))
     edges
-      .join(maybeB(keep), $"src" === $"v", "left_semi")
-      .join(maybeB(keep.withColumnRenamed("v", "v2")),
+      .join(maybeB(broadcastSurvivors, keep), $"src" === $"v", "left_semi")
+      .join(maybeB(broadcastSurvivors, keep.withColumnRenamed("v", "v2")),
         $"dst" === $"v2", "left_semi")
   }
 
@@ -618,13 +607,16 @@ object GraphOps {
     //
     // Scale: each round is one partial-agg'd degree count plus two
     // semi joins against the node-sized survivor set (broadcast —
-    // survivors only shrink; beyond broadcastable node counts the
+    // survivors only shrink; past Regimes.GraphBroadcast, judged on
+    // the part row count, an upper bound on co-purchase nodes, the
     // joins become SHUFFLE_HASH like Dedup.connectedComponents).
     // Every round's edge frame is pinned: the next round references
     // it three times (degree count + two semi joins), so an uncut
     // lineage would re-derive the co-purchase build 3^4 times.
     Q("gr_kcore",
-      (s, d) => kcorePeel(copurchaseSym(s, d), k = 3, rounds = 4),
+      (s, d) => kcorePeel(copurchaseSym(s, d), k = 3, rounds = 4,
+        broadcastSurvivors = !Regimes.big(s, Regimes.GraphBroadcast,
+          Tables.rowCount(s, d, "part"))),
       Some(kcoreOracle)),
 
     // ------------------------------------------------------------------
@@ -1086,29 +1078,29 @@ object GraphOps {
           .select(($"c_custkey" * 2).as("walker_id"))
           .join(edges.select($"src").distinct(),
             $"walker_id" === $"src", "semi")
-        var frontier = pinned(seeds.select($"walker_id",
+        var frontier = pin(seeds.select($"walker_id",
           $"walker_id".as("node"), lit(0L).as("step")))
         var walks = frontier
         // The frontier is walker-sized (one row per seed, bounded by
         // the customer table) — broadcast it so the pinned edge frame
         // is scanned in place each hop instead of re-shuffled (the
         // SHUFFLE_HASH hint on edges was shuffling BOTH sides every
-        // round). Regime switch on the memoized customer row count:
-        // beyond broadcastable seed counts the hop joins go
-        // SHUFFLE_HASH with the hash built on the walker side.
-        val bcastOk = Tables.rowCount(s, d, "customer") <= 10000000L
-        def maybeB(df: DataFrame): DataFrame =
-          if (bcastOk) broadcast(df) else df.hint("SHUFFLE_HASH")
+        // round). Regime switch on the memoized customer row count
+        // (an upper bound on walkers): beyond broadcastable seed
+        // counts the hop joins go SHUFFLE_HASH with the hash built on
+        // the walker side.
+        val bcast = !Regimes.big(s, Regimes.GraphBroadcast,
+          Tables.rowCount(s, d, "customer"))
         for (i <- 1 to 3) {
           val next = edges
-            .join(maybeB(frontier), $"node" === $"src")
+            .join(maybeB(bcast, frontier), $"node" === $"src")
             .withColumn("h", md5(concat_ws("_",
               $"node".cast("string"), lit(i), $"dst".cast("string"))))
             .groupBy($"walker_id")
             .agg(min(struct($"h", $"dst")).as("best"))
             .select($"walker_id", $"best.dst".as("node"),
               lit(i.toLong).as("step"))
-          frontier = pinned(next)
+          frontier = pin(next)
           walks = walks.unionByName(frontier)
         }
         walks.select($"walker_id", $"step", $"node")
@@ -1186,10 +1178,6 @@ object GraphOps {
             AS BIGINT) AS density_ppm
         FROM deg"""))
   )
-
-  /** persist + lineage cut for loop frames (public-ish alias of
-    * [[pin]] for the walk loop — same contract). */
-  private def pinned(df: DataFrame): DataFrame = pin(df)
 
   val all3: Seq[Q] = Seq(
 

@@ -414,10 +414,6 @@ object PipelineOps {
         // top-20×queries-sized; lazy pins (no count barrier), the
         // caller's single action computes each once, Bench/Verify
         // drop the pins per query.
-        def pin(df: DataFrame): DataFrame = {
-          val c = s.createDataFrame(df.rdd, df.schema)
-          c.persist(); c
-        }
         val dense = pin(denseRanks(emb, Similarity.qMod(s, d)))
         val fused10 = pin(fusedRanks(dense, lexRanks(s, d, emb))
           .filter($"rank" <= 10)

@@ -1269,20 +1269,10 @@ object Similarity {
       (s, d) => {
         import s.implicits._
         val emb = Tables.embeddings(s, d).select($"vec_id", $"embedding")
-        // LAZY pin (lineage cut + persist, no count): the per-round
-        // eager count was one full sequential job per round charged
-        // to the query for nothing — the caller's single action
-        // computes each round once through the persist anyway. All
-        // ≤4-row round frames stay cached until that action finishes
-        // (unpersisting early would recompute the chain per
-        // reference); Verify/Bench clearCache() between queries
-        // bounds the session.
-        def pinned(df: DataFrame, prev: DataFrame = null): DataFrame = {
-          val c = s.createDataFrame(df.rdd, df.schema)
-          c.persist()
-          c
-        }
-        var centers = pinned(emb.orderBy($"vec_id").limit(1)
+        // Lazy pins: the ≤4-row round frames stay cached until the
+        // caller's action finishes (unpersisting early would
+        // recompute the chain per reference).
+        var centers = pin(emb.orderBy($"vec_id").limit(1)
           .select($"vec_id".as("cid"), $"embedding".as("cemb"),
             lit(0L).as("round"), lit(0L).as("sel_dist_q")))
         for (r <- 1 to 3) {
@@ -1297,7 +1287,7 @@ object Similarity {
           val next = sel.join(emb, "vec_id")
             .select($"vec_id".as("cid"), $"embedding".as("cemb"),
               lit(r.toLong).as("round"), $"sel_dist_q")
-          centers = pinned(centers.unionByName(next), prev = centers)
+          centers = pin(centers.unionByName(next))
         }
         centers.select($"round", $"cid".as("center_id"), $"sel_dist_q")
       },

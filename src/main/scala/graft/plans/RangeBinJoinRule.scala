@@ -56,19 +56,14 @@ import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType}
   * conditions only; joins that already carry a cross-side equality
   * are left alone (they already plan as hash joins, and this guard is
   * also what makes the rewrite idempotent under the fixed-point
-  * batch: the rewritten join's bin equality trips it). Bin width is
-  * `spark.graft.rangeJoin.binWidth` (default 1024 units); intervals
-  * spanning many bins replicate proportionally — size W near the
-  * typical interval length. A production extension would pick W from
-  * column statistics and clamp per-row bin counts.
+  * batch: the rewritten join's bin equality trips it). The bin width W
+  * is a fixed 1024 units; intervals spanning many bins replicate
+  * proportionally. A production extension would pick W from column
+  * statistics and clamp per-row bin counts.
   */
 object RangeBinJoinRule extends Rule[LogicalPlan] with PredicateHelper {
 
-  private val BIN_WIDTH_KEY = "spark.graft.rangeJoin.binWidth"
-
-  private def binWidth: Long =
-    try conf.getConfString(BIN_WIDTH_KEY, "1024").toLong max 1L
-    catch { case _: NumberFormatException => 1024L }
+  private val BinWidth = 1024L
 
   private def integral(e: Expression): Boolean = e.dataType match {
     case LongType | IntegerType => true
@@ -123,7 +118,7 @@ object RangeBinJoinRule extends Rule[LogicalPlan] with PredicateHelper {
         if ps != bs
       } yield (p, b, isLower, ps)
 
-      val w = Literal(binWidth)
+      val w = Literal(BinWidth)
       def bin(e: Expression) = IntegralDivide(Cast(e, LongType), w)
 
       // Sequence is TimeZoneAwareExpression: unresolved until the

@@ -37,11 +37,11 @@ class PlanSpec extends AnyFunSuite with SharedSpark {
 
   test("winsorized stats above the exact-row threshold buffer no " +
        "per-group values: sketch percentiles only, same output shape") {
-    // Force the big-frame regime (the conf exists for exactly this
-    // pin): clip bounds must come from the mergeable
-    // approx_percentile sketch — the exact `percentile` aggregate
-    // buffers every group value per task, a per-task OOM at 100x.
-    val approx = withConf("spark.graft.winsorize.exactMaxRows" -> "0") {
+    // Force the big-frame regime: clip bounds must come from the
+    // mergeable approx_percentile sketch — the exact `percentile`
+    // aggregate buffers every group value per task, a per-task OOM
+    // at 100x.
+    val approx = withConf(forceBig) {
       val p = plan("rel_winsorized_stats")
       assert(p.contains("approx_percentile"), p.take(600))
       assert(!p.replace("approx_percentile", "§").contains("percentile("),
@@ -58,11 +58,11 @@ class PlanSpec extends AnyFunSuite with SharedSpark {
 
   test("median-abs-deviation above the exact-row threshold buffers no " +
        "per-group values: sketch percentiles only, same output shape") {
-    // Same conf-gated big-frame switch as rel_winsorized_stats: both
+    // Same big-frame switch as rel_winsorized_stats: both
     // percentile passes (group median + deviation median) must come
     // from the mergeable approx_percentile sketch — the exact
     // `percentile` aggregate buffers every group value per task.
-    val approx = withConf("spark.graft.mad.exactMaxRows" -> "0") {
+    val approx = withConf(forceBig) {
       val p = plan("rel_median_abs_deviation")
       assert(p.contains("approx_percentile"), p.take(600))
       assert(!p.replace("approx_percentile", "§").contains("percentile("),

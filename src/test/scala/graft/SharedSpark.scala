@@ -13,6 +13,10 @@ trait SharedSpark extends TempDirs { this: Suite =>
 
   lazy val spark: SparkSession = GraftSession.create(4)
 
+  /** `withConf(forceBig) { ... }` puts every [[Regimes]] entry on its
+    * big side for plans built inside the block. */
+  val forceBig: (String, String) = Regimes.ForceBig -> "true"
+
   /** Runs `body` with the given runtime confs set, then restores each
     * key's previous value (or unsets it), also when `body` throws. */
   def withConf[T](pairs: (String, String)*)(body: => T): T = {

@@ -5,13 +5,23 @@ import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.window.WindowExec
 import org.scalatest.funsuite.AnyFunSuite
 
+object WindowAuditSpec {
+  /** True when `p` plans a WindowExec with an empty partition spec —
+    * one task sorts the window's whole input. */
+  def unpartitioned(p: SparkPlan): Boolean = p.collectFirst {
+    case w: WindowExec if w.partitionSpec.isEmpty => true
+    case a: AdaptiveSparkPlanExec if unpartitioned(a.initialPlan) => true
+  }.isDefined
+}
+
 /** Registry-wide single-partition-window pin (round-5 verdict item
   * 6): the only queries allowed to plan a WindowExec with an EMPTY
   * partition spec are the allowlist below, where the window's input
   * frame is provably tiny by construction (a grouped rollup over
   * days/weeks/buckets/sources/deciles, a top-N, a pre-shrunk
-  * frontier) or the site is threshold-switched to a broadcast-cutoff
-  * plan past 50M rows (ev_rfm_segments, rel_decile_lift).
+  * frontier) or the site is the small side of
+  * [[Regimes.GlobalNtile]], whose big side is a broadcast-cutoff plan
+  * (ev_rfm_segments, rel_decile_lift).
   *
   * A lit(0) partition key does NOT suppress the shape — Spark 4's
   * EliminateWindowPartitions strips foldable partition expressions
@@ -24,6 +34,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * WindowExec onto Ranking.runningSums for exactly this reason.
   */
 class WindowAuditSpec extends AnyFunSuite with SharedSpark {
+  import WindowAuditSpec.unpartitioned
 
   private val allowlist = Set(
     "dedup_split_leakage",        // ≤ |splits|² cells
@@ -31,9 +42,9 @@ class WindowAuditSpec extends AnyFunSuite with SharedSpark {
     "ev_changepoint_cusum",       // daily rollup
     "ev_cumulative_users",        // daily rollup
     "ev_lifetime_table",          // weekly lifetable
-    "ev_rfm_segments",            // threshold-switched ≤50M regime
+    "ev_rfm_segments",            // Regimes.GlobalNtile small side
     "rel_cardinality_est",        // flag×priority rollup
-    "rel_decile_lift",            // threshold-switched + 10 deciles
+    "rel_decile_lift",            // GlobalNtile small side + 10 deciles
     "rel_pareto_frontier",        // pre-shrunk level-1 frontier
     "rel_partition_skew_planner", // per-ship-month keys
     "rel_sequence_gaps",          // per-bucket boundaries
@@ -44,10 +55,6 @@ class WindowAuditSpec extends AnyFunSuite with SharedSpark {
   test("no query outside the documented-tiny allowlist plans an " +
        "unpartitioned WindowExec") {
     val sfDir = "/root/testdata/sf0.001"
-    def unpartitioned(p: SparkPlan): Boolean = p.collectFirst {
-      case w: WindowExec if w.partitionSpec.isEmpty => true
-      case a: AdaptiveSparkPlanExec if unpartitioned(a.initialPlan) => true
-    }.isDefined
     val failed = scala.collection.mutable.ListBuffer.empty[(String, String)]
     val hits = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
       case (name, fn) =>

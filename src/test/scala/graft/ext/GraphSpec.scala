@@ -69,8 +69,9 @@ class GraphSpec extends AnyFunSuite with SharedSpark {
     val edges = sym(1L -> 2L, 2L -> 3L, 3L -> 4L, 4L -> 1L, 1L -> 3L)
     val b = GraphOps.pagerank(edges, rounds = 3)
       .as[(Long, Long)].collect().toMap
-    val sh = GraphOps.pagerank(edges, rounds = 3, broadcastThreshold = 0L)
-      .as[(Long, Long)].collect().toMap
+    val sh = withConf(forceBig) {
+      GraphOps.pagerank(edges, rounds = 3).as[(Long, Long)].collect().toMap
+    }
     assert(b == sh,
       "the shuffle-hash regime must not change a single micro-rank unit")
   }
@@ -84,11 +85,12 @@ class GraphSpec extends AnyFunSuite with SharedSpark {
     // 10¹²/n unit comes from the lazy in-plan count either way)
     val bounded = GraphOps.pagerank(edges, rounds = 3, nodeBound = 1000L)
       .as[(Long, Long)].collect().toMap
-    // and a bound that overshoots the broadcast threshold (flips the
-    // round joins to SHUFFLE_HASH — the safe direction)
-    val over = GraphOps.pagerank(edges, rounds = 3, nodeBound = 1000L,
-        broadcastThreshold = 10L)
-      .as[(Long, Long)].collect().toMap
+    // and the same bound on the big side (round joins SHUFFLE_HASH —
+    // the side an overshooting bound selects)
+    val over = withConf(forceBig) {
+      GraphOps.pagerank(edges, rounds = 3, nodeBound = 1000L)
+        .as[(Long, Long)].collect().toMap
+    }
     assert(counted == bounded && counted == over)
   }
 

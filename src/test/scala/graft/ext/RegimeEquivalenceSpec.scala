@@ -1,10 +1,11 @@
 package graft.ext
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SharedSpark
+import graft.{SharedSpark, SparkEntry, WindowAuditSpec}
 
 /** Round-10 optimization guards: the scale regimes introduced for the
   * superlinear pair evals must be RESULT-NEUTRAL where they claim to
@@ -22,6 +23,10 @@ import graft.SharedSpark
   *  - sim sub-block regime: below the cap the shard count is 1
   *    (bounded join never engages at oracle SFs); the shard key is
   *    stable and in [0, nSplits).
+  *  - [[graft.Regimes]] big sides, forced with `forceBig` at two SFs
+  *    and held to each entry's contract against the natural (small)
+  *    side: exact entries give the same rows, approximate entries the
+  *    same keys and row count within the stated bound.
   */
 class RegimeEquivalenceSpec extends AnyFunSuite with SharedSpark {
 
@@ -40,6 +45,17 @@ class RegimeEquivalenceSpec extends AnyFunSuite with SharedSpark {
       (a, i) <- docs.zipWithIndex; b <- docs.drop(i + 1)
       inter = sets(a).intersect(sets(b)).size.toLong if inter > 0
     } yield (a, b, inter, sets(a).size.toLong, sets(b).size.toLong)
+  }
+
+  /** Query `name` at `sf`: the natural rows, then the rows and plan
+    * with every regime forced big. */
+  private def naturalAndForced(name: String, sf: String)
+      : (Array[Row], Array[Row], SparkPlan) = {
+    val natural = SparkEntry.queries(name)(spark, sf).collect()
+    withConf(forceBig) {
+      val df = SparkEntry.queries(name)(spark, sf)
+      (natural, df.collect(), df.queryExecution.executedPlan)
+    }
   }
 
   for (sf <- Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01")) {
@@ -66,6 +82,62 @@ class RegimeEquivalenceSpec extends AnyFunSuite with SharedSpark {
       }.filter(_._6 >= 0.8).toSet
       assert(want.nonEmpty, "planted twins must produce pairs")
       assert(got == want)
+    }
+
+    for (q <- Seq("gr_random_walk", "gr_kcore"))
+      test(s"$q forced to the SHUFFLE_HASH side gives the same rows at $sf") {
+        val (natural, forced, _) = naturalAndForced(q, sf)
+        assert(natural.nonEmpty)
+        assert(forced.map(_.toString).sorted.toSeq ==
+          natural.map(_.toString).sorted.toSeq)
+      }
+
+    test(s"ev_rfm_segments forced to approximate cuts keeps its contract at $sf") {
+      val (natural, forced, plan) = naturalAndForced("ev_rfm_segments", sf)
+      assert(!WindowAuditSpec.unpartitioned(plan),
+        "the big side must not sort every user through one window task")
+      // user_id → (recency_days, frequency, monetary) is exact
+      def key(r: Row) =
+        (r.getAs[Long]("user_id"), r.getAs[Long]("recency_days"),
+          r.getAs[Long]("frequency"), r.getAs[Double]("monetary"))
+      assert(forced.length == natural.length)
+      assert(forced.map(key).toSet == natural.map(key).toSet)
+      // each bucket is within one of the exact buckets its tie group
+      // (rows with the same ranked value) spans
+      for ((value, bucket) <- Seq("recency_days" -> "r", "frequency" -> "f",
+          "monetary" -> "m")) {
+        val spans = natural.groupBy(_.getAs[Any](value)).map { case (v, rs) =>
+          val bs = rs.map(_.getAs[Long](bucket))
+          v -> (bs.min, bs.max)
+        }
+        val worst = forced.map { r =>
+          val (lo, hi) = spans(r.getAs[Any](value))
+          val b = r.getAs[Long](bucket)
+          math.max(lo - b, b - hi)
+        }.max
+        assert(worst <= 1L, s"$bucket off its tie group's buckets by $worst")
+      }
+    }
+
+    test(s"rel_decile_lift forced to approximate cuts keeps its contract at $sf") {
+      val (natural, forced, plan) = naturalAndForced("rel_decile_lift", sf)
+      assert(plan.toString.contains("percentile_approx"), plan)
+      def byDecile(rs: Array[Row]) =
+        rs.map(r => r.getAs[Long]("decile") -> r.getAs[Long]("n_customers"))
+          .toMap
+      val (n, f) = (byDecile(natural), byDecile(forced))
+      assert(forced.length == natural.length && f.keySet == n.keySet)
+      val total = n.values.sum
+      assert(f.values.sum == total)
+      // each decile edge (customers through decile i) moves by at most
+      // the sketch's rank error, n/10000 rounded up, plus one
+      val slack = (total + 9999L) / 10000L + 1L
+      val deciles = n.keys.toSeq.sorted
+      val worst = deciles.indices.map { i =>
+        val upTo = deciles.take(i + 1)
+        math.abs(upTo.map(f).sum - upTo.map(n).sum)
+      }.max
+      assert(worst <= slack)
     }
   }
 

@@ -1,6 +1,7 @@
 package graft.ext
 
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.catalyst.plans.logical.Project
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -89,10 +90,12 @@ class Round3Spec extends AnyFunSuite with SharedSpark {
     val edges = e0.unionByName(e0.select($"dst".as("src"), $"src".as("dst")))
     val expect = Set((1L, 1L), (2L, 1L), (3L, 1L), (4L, 1L),
       (10L, 10L), (11L, 10L), (20L, 20L), (21L, 20L), (22L, 20L))
-    val fast = Dedup.connectedComponents(edges, smallGraphEdges = Long.MaxValue)
+    val fast = Dedup.connectedComponents(edges)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val iterative = Dedup.connectedComponents(edges, smallGraphEdges = -1L)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val iterative = withConf(forceBig) {
+      Dedup.connectedComponents(edges)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    }
     assert(fast === expect)
     assert(iterative === expect)
     // edgeBound (round 10): a true upper bound at or under the
@@ -107,6 +110,15 @@ class Round3Spec extends AnyFunSuite with SharedSpark {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(bounded === expect)
     assert(overBound === expect)
+    // forceBig wins over a bound that would certify the DSU path: the
+    // iterative path returns a projection of its label frame, the DSU
+    // path the bare pinned leaf
+    val forcedBounded = withConf(forceBig) {
+      Dedup.connectedComponents(edges, edgeBound = 12L)
+    }
+    assert(forcedBounded.queryExecution.logical.isInstanceOf[Project])
+    assert(forcedBounded.collect().map(r => (r.getLong(0), r.getLong(1)))
+      .toSet === expect)
   }
 
   test("keep-best: exact-duplicate copies never survive") {

@@ -116,12 +116,4 @@ class RangeBinJoinSpec extends AnyFunSuite with SharedSpark {
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(got == want, s"got $got want $want")
   }
-
-  test("bin width conf is honored") {
-    withConf("spark.graft.rangeJoin.binWidth" -> "64") {
-      val got = naturalJoin().select(col("p"), col("ival_id")).collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(got == expected())
-    }
-  }
 }
