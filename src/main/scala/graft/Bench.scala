@@ -97,7 +97,7 @@ object Bench {
     def warmup(): Unit =
       try {
         import org.apache.spark.sql.functions._
-        val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
+        val li = Tables.lineitem(spark, sfDir)
           .select(col("l_orderkey"), col("l_quantity"))
         li.groupBy(col("l_orderkey")).count()
           .join(broadcast(li.limit(10)), "l_orderkey")

@@ -32,7 +32,7 @@ object PlanDump {
   private val lambda = """\$\$Lambda\$?\d*/0x[0-9a-f]+@[0-9a-f]+""".r
 
   /** The formatted plan with only plan-dependent text left in it. */
-  private def stable(explain: String): String = {
+  private[graft] def stable(explain: String): String = {
     val paths = storePath.replaceAllIn(explain, "<index>/$1/")
     val renumbered = counters.foldLeft(paths) { (text, counter) =>
       val ids = mutable.Map.empty[String, Int]

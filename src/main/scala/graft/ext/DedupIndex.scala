@@ -66,7 +66,7 @@ object DedupIndex {
       // Candidates derive from the just-written signatures (one read,
       // not a second MinHash pass).
       Frame("candidates", 4, "doc_a", Seq("doc_a", "doc_b"),
-        (s, _, tmp) => Dedup.lshCandidates(s.read.parquet(s"$tmp/signatures")
+        (s, _, tmp) => Dedup.lshCandidates(Tables.parquet(s, s"$tmp/signatures")
           .select("doc_id", "h1", "h2", "h3", "h4"))),
       Frame("hgrams5", 8, "h", Seq("h", "doc_id"),
         (s, d, _) => buildHgrams5(s, d)),

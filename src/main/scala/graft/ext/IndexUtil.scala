@@ -6,6 +6,8 @@ import java.security.MessageDigest
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
+import graft.Tables
+
 /** Shared install mechanics for the persisted index layouts
   * ([[GraphIndex]] / [[DedupIndex]] / [[TextIndex]] / [[MmIndex]]):
   * build under a unique tmp dir, atomically rename into place with
@@ -78,7 +80,7 @@ private[ext] object IndexUtil {
   * `repartition(parts, key).sortWithinPartitions(sort*)` so downstream
   * joins read co-located, sorted runs. `build` receives the install's
   * tmp dir so a frame can derive from a frame written before it. */
-private[ext] final case class Frame(
+private[graft] final case class Frame(
     name: String, parts: Int, key: String, sort: Seq[String],
     build: (SparkSession, String, File) => DataFrame)
 
@@ -94,22 +96,16 @@ private[ext] final case class Frame(
   * a stored schema or derivation changes. Atomicity is
   * [[IndexUtil.install]]'s.
   */
-private[ext] final class Store(tag: String, version: Int,
+private[graft] final class Store(tag: String, version: Int,
     inputs: Seq[String], frames: Seq[Frame]) {
 
   def fingerprint(sfDir: String): String = {
     val md = MessageDigest.getInstance("MD5")
     def add(s: String): Unit = md.update(s.getBytes("UTF-8"))
-    def walk(f: File, rel: String): Unit =
-      if (f.isDirectory)
-        f.listFiles().sortBy(_.getName)
-          .foreach(c => walk(c, s"$rel/${c.getName}"))
-      else add(s"$rel:${f.length}:${f.lastModified}")
     add(s"$tag-v$version")
     inputs.foreach { n =>
       add(n)
-      val f = new File(sfDir, n)
-      if (f.exists()) walk(f, n)
+      Tables.files(new File(sfDir, n), n).foreach(add)
     }
     md.digest().map("%02x".format(_)).mkString
   }
@@ -134,5 +130,5 @@ private[ext] final class Store(tag: String, version: Int,
 
   /** The stored frame `name`, read from the persisted layout. */
   def read(s: SparkSession, sfDir: String, name: String): DataFrame =
-    s.read.parquet(s"${ensure(s, sfDir)}/$name")
+    Tables.parquet(s, s"${ensure(s, sfDir)}/$name")
 }

@@ -9,7 +9,10 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Guards the one-engine rule: the shared test session is the engine
   * the mains verify and time, whichever suite happens to create it,
-  * and no other code under src/ builds a session of its own.
+  * and no other code under src/ builds a session of its own. Also
+  * guards the one-reader rule: engine code reads parquet only through
+  * [[Tables.parquet]], whose schema memo keeps inference jobs out of
+  * query construction.
   */
 class GraftSessionSpec extends AnyFunSuite with SharedSpark {
 
@@ -43,18 +46,27 @@ class GraftSessionSpec extends AnyFunSuite with SharedSpark {
     assert(diff.isEmpty, diff.mkString("; "))
   }
 
+  /** Scala files under `root`, other than `allowed`, that contain `needle`. */
+  private def offenders(root: String, allowed: String, needle: String): Seq[String] = {
+    val stream = Files.walk(Paths.get(root))
+    try stream.iterator().asScala
+      .filter(p => p.toString.endsWith(".scala") &&
+        p.getFileName.toString != allowed)
+      .filter(p => new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
+        .contains(needle))
+      .map(_.toString).toSeq.sorted
+    finally stream.close()
+  }
+
   test("no source file outside GraftSession.scala builds a SparkSession") {
-    val needle = "SparkSession" + ".builder"
-    val stream = Files.walk(Paths.get("src"))
-    val offenders =
-      try stream.iterator().asScala
-        .filter(p => p.toString.endsWith(".scala") &&
-          p.getFileName.toString != "GraftSession.scala")
-        .filter(p => new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
-          .contains(needle))
-        .map(_.toString).toSeq.sorted
-      finally stream.close()
-    assert(offenders.isEmpty,
-      s"build the session with GraftSession.create instead: ${offenders.mkString(", ")}")
+    val found = offenders("src", "GraftSession.scala", "SparkSession" + ".builder")
+    assert(found.isEmpty,
+      s"build the session with GraftSession.create instead: ${found.mkString(", ")}")
+  }
+
+  test("no main source file outside Tables.scala reads parquet directly") {
+    val found = offenders("src/main", "Tables.scala", ".read" + ".parquet(")
+    assert(found.isEmpty,
+      s"read parquet through Tables.parquet instead: ${found.mkString(", ")}")
   }
 }
