@@ -35,12 +35,8 @@ object Regimes {
 
   /** Observed: an upper bound on the rows of the ranked frame. */
   val GlobalNtile: Regime = Regime("global ntile", 50000000L,
-    "approximate: bucket edges come from approx_percentile cuts at " +
-      "accuracy 10000 instead of one global ntile window; keys and " +
-      "row counts are exact; rows tied on the ranked value share one " +
-      "bucket, within one of the exact buckets their tie group spans; " +
-      "over distinct values each edge (rows through bucket i) is " +
-      "within ceil(n/10000) + 1 rows of the exact edge")
+    "exact: Ranking.exactNtile's range-partitioned sort replaces the " +
+      "single-partition ntile window; every row is identical")
 
   /** Observed: rows of the frame the running sum scans. */
   val PrefixSum: Regime = Regime("prefix sum", 2000000L,

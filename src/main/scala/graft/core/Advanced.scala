@@ -191,13 +191,8 @@ object Advanced {
     Q("rel_percentiles",
       (s, d) => {
         import s.implicits._
-        // Fan the single-split scan: the exact-percentile partials
-        // (value→count buffers) are the per-row cost and would fuse
-        // into the one scan task (guide §2.5; no-op on multi-split
-        // sources).
-        Par.fan(Tables.lineitem(s, d)
-            .select($"l_returnflag", $"l_quantity", $"l_extendedprice"),
-          $"l_quantity", $"l_extendedprice")
+        Tables.lineitem(s, d)
+          .select($"l_returnflag", $"l_quantity", $"l_extendedprice")
           .groupBy($"l_returnflag")
           .agg(
             expr("percentile(l_quantity, 0.5)").as("median_qty"),
@@ -259,12 +254,6 @@ object Advanced {
         // back together.
         def keep(c: String) = substring(
           md5(concat(lit("acd5|"), col(c).cast("string"))), 1, 1) === "0"
-        // NOT fanned: the partial distinct agg in the scan task
-        // compresses duplicate keys ~4× before the shuffle — a
-        // Par.fan here ships raw rows instead and measured a wash
-        // locally while shuffling more bytes at scale (guide §2.3
-        // "aggregate before you shuffle" wins) — left in the
-        // partial-agg-first shape.
         def arm(c: String, exact: String, ok: String) =
           Tables.lineitem(s, d)
             .groupBy($"l_returnflag")
@@ -308,11 +297,8 @@ object Advanced {
     Q("rel_approx_percentiles",
       (s, d) => {
         import s.implicits._
-        // Fan as in rel_percentiles — four percentile buffers fused
-        // over a one-row-group scan run on one core otherwise.
-        Par.fan(Tables.lineitem(s, d)
-            .select($"l_returnflag", $"l_quantity", $"l_extendedprice"),
-          $"l_quantity", $"l_extendedprice")
+        Tables.lineitem(s, d)
+          .select($"l_returnflag", $"l_quantity", $"l_extendedprice")
           .groupBy($"l_returnflag")
           .agg(
             expr("percentile(l_quantity, array(0.45D, 0.5D, 0.55D))")
@@ -464,13 +450,6 @@ object Advanced {
     Q("rel_profile_columns",
       (s, d) => {
         import s.implicits._
-        // NOT fanned (round-10 revert of the round-9 Par.fan): the
-        // fan shipped RAW rows into the Expand×4 + global aggregate,
-        // discarding the map-side partial aggregation that compresses
-        // each scan task's output to one row per distinct value —
-        // the same argument that reverted the rel_approx_distinct
-        // fan. Measured: driver r9 0.72× (1.11→1.55 s), builder r10
-        // baseline 1.97 s vs 1.16 s reverted (worktree A/B).
         Tables.lineitem(s, d)
             .select($"l_orderkey", $"l_partkey", $"l_shipdate",
               $"l_quantity", $"l_returnflag").agg(
@@ -521,15 +500,15 @@ object Advanced {
                                 (o_orderstatus), ())""")),
 
     // ------------------------------------------------------------------
-    // SQL-frontend round trip: temp views + the session's registered
-    // custom aggregate (mode_det, a TypedImperativeAggregate) driven
-    // entirely through spark.sql — the surface a SQL-first user of
-    // the library sees. Catalyst plans it like the DataFrame form
-    // (broadcast dims, partial-agg'd custom buffers); the oracle
-    // recomputes the deterministic mode relationally.
+    // SQL-frontend round trip: temp views + the custom aggregate
+    // GraftExtensions injects into every session (mode_det, a
+    // TypedImperativeAggregate) driven entirely through spark.sql —
+    // the surface a SQL-first user of the library sees. Catalyst
+    // plans it like the DataFrame form (broadcast dims, partial-agg'd
+    // custom buffers); the oracle recomputes the deterministic mode
+    // relationally.
     Q("rel_sql_frontend",
       (s, d) => {
-        graft.functions.NativeFunctions.register(s)
         Tables.orders(s, d).createOrReplaceTempView("orders_sqlv")
         Tables.customer(s, d).createOrReplaceTempView("customer_sqlv")
         Tables.nation(s, d).createOrReplaceTempView("nation_sqlv")
@@ -781,12 +760,8 @@ object Advanced {
         import s.implicits._
         def dbl(c: Column) = c.cast("double")
         val dec = DecimalType(27, 4)
-        // Fan the single-split scan before the five exact decimal
-        // sums — the dominant per-row cost (guide §2.5; no-op on
-        // multi-split sources).
-        val agg = Par.fan(Tables.lineitem(s, d)
-            .select($"l_returnflag", $"l_quantity", $"l_extendedprice"),
-          $"l_quantity", $"l_extendedprice")
+        val agg = Tables.lineitem(s, d)
+          .select($"l_returnflag", $"l_quantity", $"l_extendedprice")
           .groupBy($"l_returnflag")
           .agg(count(lit(1)).as("n"),
             sum($"l_quantity".cast(dec)).as("sx"),
@@ -1065,22 +1040,18 @@ object Advanced {
     // single divisions of decimal-exact numerators/denominators
     // (magnitudes ≪ the 17-sig-digit decimal→double caveat). The
     // ntile window is whole-table — fine for customer-sized frames;
-    // at 10⁹+ customers the same cut comes from approx_percentile
-    // boundaries + a range join, trading exactness of the bucket
-    // EDGES (not of the per-bucket sums) for full parallelism. The
-    // 10-row decile frame then carries cumulative/total windows for
-    // free.
+    // at 10⁹+ customers the same buckets come from
+    // Ranking.exactNtile's distributed sort. The 10-row decile frame
+    // then carries cumulative/total windows for free.
     Q("rel_decile_lift",
       (s, d) => {
         import s.implicits._
         val spend = Tables.orders(s, d)
           .groupBy($"o_custkey")
           .agg(sum($"o_totalprice".cast(DecimalType(27, 2))).as("spend"))
-        // Scale switch (see ev_rfm_segments): the exact global
-        // ntile(10) single-threads the per-customer frame; past the
-        // threshold the cut comes from 9 broadcast approx-percentile
-        // spend boundaries + comparisons (exact per-bucket sums,
-        // approximate bucket EDGES). Oracle scales use the exact path.
+        // Scale switch (see ev_rfm_segments): the global ntile(10)
+        // window single-threads the per-customer frame; past the
+        // threshold Ranking.exactNtile cuts the same buckets.
         val bigFrame = Regimes.big(s, Regimes.GlobalNtile,
           Tables.rowCount(s, d, "orders"))
         val bucketed =
@@ -1089,14 +1060,8 @@ object Advanced {
             val wN = Window.orderBy($"spend".desc, $"o_custkey")
             spend.withColumn("decile", ntile(10).over(wN).cast("long"))
           } else {
-            val qs = array((1 to 9).map(i => lit(i / 10.0)): _*)
-            val cuts = spend.agg(percentile_approx(
-              $"spend".cast("double"), qs, lit(10000)).as("c"))
-            spend.crossJoin(broadcast(cuts))
-              .withColumn("decile",
-                (1 to 9).map(i =>
-                  ($"spend".cast("double") < $"c" (9 - i)).cast("int"))
-                  .reduce(_ + _).cast("long") + 1L)
+            Ranking.exactNtile(spend, 10, Seq($"spend".desc, $"o_custkey"),
+              "decile")
           }
         val deciles = bucketed
           .groupBy($"decile")

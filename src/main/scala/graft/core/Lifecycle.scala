@@ -547,15 +547,7 @@ object Lifecycle {
           $"l_discount".cast(DecimalType(4, 2)).cast("string"),
           $"l_returnflag", $"l_linestatus",
           unix_micros($"l_shipdate".cast("timestamp")))
-        // Fan the single-split scan BEFORE the per-row md5 — the
-        // canonical-string build + hash is the dominant map cost and
-        // fuses into the one scan task otherwise (guide §2.5; no-op
-        // on multi-split sources).
-        Par.fan(Tables.lineitem(s, d)
-            .select($"l_orderkey", $"l_linenumber", $"l_quantity",
-              $"l_extendedprice", $"l_discount", $"l_returnflag",
-              $"l_linestatus", $"l_shipdate"),
-          $"l_orderkey", $"l_linenumber")
+        Tables.lineitem(s, d)
           .select($"l_returnflag", $"l_linestatus",
             conv(substring(md5(key), 1, 8), 16, 10).cast("long").as("h"))
           .groupBy($"l_returnflag", $"l_linestatus")
@@ -605,12 +597,7 @@ object Lifecycle {
           $"l_discount".cast(DecimalType(4, 2)).cast("string"),
           $"l_returnflag", $"l_linestatus",
           unix_micros($"l_shipdate".cast("timestamp")))
-        // Fan before the per-row md5 — see rel_table_fingerprint.
-        Par.fan(Tables.lineitem(s, d)
-            .select($"l_orderkey", $"l_linenumber", $"l_quantity",
-              $"l_extendedprice", $"l_discount", $"l_returnflag",
-              $"l_linestatus", $"l_shipdate"),
-          $"l_orderkey", $"l_linenumber")
+        Tables.lineitem(s, d)
           .select(expr("l_orderkey div 1024").as("key_range"),
             conv(substring(md5(key), 1, 8), 16, 10).cast("long").as("h"))
           .groupBy($"key_range")

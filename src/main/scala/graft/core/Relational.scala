@@ -32,17 +32,10 @@ object Relational {
     Q("rel_pricing_summary",
       (s, d) => {
         import s.implicits._
-        // Fan the single-split scan before the decimal aggregation:
-        // the 4 exact decimal sums are the per-row cost here, and
-        // fused over a one-row-group scan they run on one core
-        // (guide §2.5). Project first so the exchange carries only
-        // the 6 needed columns (§2.3). No-op on multi-split sources.
-        Par.fan(
-          Tables.lineitem(s, d)
-            .filter($"l_shipdate" <= to_timestamp(lit("2001-06-30 00:00:00")))
-            .select($"l_returnflag", $"l_linestatus", $"l_quantity",
-              $"l_extendedprice", $"l_discount", $"l_tax"),
-          $"l_quantity", $"l_extendedprice")
+        Tables.lineitem(s, d)
+          .filter($"l_shipdate" <= to_timestamp(lit("2001-06-30 00:00:00")))
+          .select($"l_returnflag", $"l_linestatus", $"l_quantity",
+            $"l_extendedprice", $"l_discount", $"l_tax")
           .groupBy($"l_returnflag", $"l_linestatus")
           .agg(
             dsum($"l_quantity", 2).as("sum_qty"),
@@ -724,13 +717,8 @@ object Relational {
         val pctExpr =
           if (!bigFrame) "percentile(l_extendedprice, array(0.01D, 0.99D))"
           else "approx_percentile(l_extendedprice, array(0.01D, 0.99D), 10000)"
-        // Both passes fan the single-split scan (guide §2.5): the
-        // percentile partials buffer per-task and the clip+decimal
-        // re-aggregation is the per-row cost — fused over one row
-        // group they run on one core. No-op on multi-split sources.
-        def base = Par.fan(
-          Tables.lineitem(s, d).select($"l_returnflag", $"l_extendedprice"),
-          $"l_extendedprice")
+        def base =
+          Tables.lineitem(s, d).select($"l_returnflag", $"l_extendedprice")
         val pct = base
           .groupBy($"l_returnflag")
           .agg(expr(pctExpr).as("pcts"))
@@ -862,12 +850,8 @@ object Relational {
         def pct(c: String) =
           if (!bigFrame) s"percentile($c, 0.5D)"
           else s"approx_percentile($c, 0.5D, 10000)"
-        // Fan both passes of the single-split scan — the percentile
-        // buffers are the per-row cost (guide §2.5; no-op on
-        // multi-split sources).
-        def base = Par.fan(
-          Tables.lineitem(s, d).select($"l_returnflag", $"l_extendedprice"),
-          $"l_extendedprice")
+        def base =
+          Tables.lineitem(s, d).select($"l_returnflag", $"l_extendedprice")
         val med = base
           .groupBy($"l_returnflag")
           .agg(expr(pct("l_extendedprice")).cast("double").as("med"))

@@ -1515,10 +1515,6 @@ object Dedup {
         // rationale as dedup_lsh_recall_curve (bit-identical to the
         // fixed 1/32 pick at every oracle-gated SF).
         val sampled = groupSampled(groupSampleThreshold(s, d))
-        // NOT fanned: a Par.fan of the sampled docs before the k=4/6
-        // shingling explodes measured +1.1 s in a back-to-back
-        // worktree A/B (the arms' gram self-joins dominate and the
-        // extra exchange only delayed them) — reverted.
         val base = corpus(s, d).filter(sampled)
         def jaccards(k: Int): DataFrame = {
           // k = 5 is EXACTLY the persisted DedupIndex shingle

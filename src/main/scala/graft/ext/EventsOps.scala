@@ -747,8 +747,8 @@ object EventsOps {
     // with a user_id tiebreak (total order ⇒ identical buckets on
     // any engine). The global ntile is a single-partition sort of
     // the ALREADY-AGGREGATED user table (one row per user) — fine
-    // into the millions of users; beyond that swap in approx
-    // percentile cutoffs and give up bucket-boundary exactness.
+    // into the millions of users; beyond that the same buckets come
+    // from Ranking.exactNtile's distributed sort.
     // Fixed reference date so the metric is reproducible.
     Q("ev_rfm_segments",
       (s, d) => {
@@ -763,16 +763,13 @@ object EventsOps {
           .withColumn("recency_days",
             datediff(lit("2024-02-01").cast("date"), $"last_day")
               .cast("long"))
-        // Path selection (the documented scale switch, now real): the
-        // exact global ntile sorts the WHOLE one-row-per-user frame
-        // through one WindowExec partition — fine into the millions
-        // of users, single-threaded death beyond. Past the threshold
-        // (cheap metadata-ish count of the raw events scan, an upper
-        // bound on users) quartiles come instead from broadcast
-        // approx-percentile cutoffs + comparisons — fully parallel,
-        // trading only bucket-BOUNDARY exactness. The oracle always
-        // exercises the exact path (sf dirs are far below the
-        // threshold).
+        // Path selection: the global ntile window sorts the WHOLE
+        // one-row-per-user frame through one WindowExec partition —
+        // fine into the millions of users, single-threaded beyond.
+        // Past the threshold (the raw events row count, an upper
+        // bound on users) each quartile comes from
+        // Ranking.exactNtile's range-partitioned sort instead — the
+        // same total orders, so every row is identical.
         val bigFrame = Regimes.big(s, Regimes.GlobalNtile,
           Tables.rowCount(s, d, "events"))
         val scored =
@@ -786,25 +783,11 @@ object EventsOps {
               .withColumn("f", ntile(4).over(fW).cast("long"))
               .withColumn("m", ntile(4).over(mW).cast("long"))
           } else {
-            val qs = array(lit(0.25), lit(0.5), lit(0.75))
-            val cuts = per.agg(
-              percentile_approx($"recency_days", qs, lit(10000)).as("rc"),
-              percentile_approx($"frequency", qs, lit(10000)).as("fc"),
-              percentile_approx($"monetary", qs, lit(10000)).as("mc"))
-            def bucketAsc(v: org.apache.spark.sql.Column,
-                          c: org.apache.spark.sql.Column)
-                : org.apache.spark.sql.Column =
-              (lit(1) + (v > c(0)).cast("int") + (v > c(1)).cast("int") +
-                (v > c(2)).cast("int")).cast("long")
-            def bucketDesc(v: org.apache.spark.sql.Column,
-                           c: org.apache.spark.sql.Column)
-                : org.apache.spark.sql.Column =
-              (lit(1) + (v < c(2)).cast("int") + (v < c(1)).cast("int") +
-                (v < c(0)).cast("int")).cast("long")
-            per.crossJoin(broadcast(cuts))
-              .withColumn("r", bucketAsc($"recency_days", $"rc"))
-              .withColumn("f", bucketDesc($"frequency", $"fc"))
-              .withColumn("m", bucketDesc($"monetary", $"mc"))
+            import graft.core.Ranking.exactNtile
+            val r = exactNtile(per, 4,
+              Seq($"recency_days".asc, $"user_id"), "r")
+            val f = exactNtile(r, 4, Seq($"frequency".desc, $"user_id"), "f")
+            exactNtile(f, 4, Seq($"monetary".desc, $"user_id"), "m")
           }
         scored
           .withColumn("segment",

@@ -523,15 +523,7 @@ object LakeOps {
     Q("rel_encoding_advisor",
       (s, d) => {
         import s.implicits._
-        // Fan the single-split scan BEFORE the 3× stack unpivot: the
-        // generator and the month/cast per-row work otherwise fuse
-        // into the one scan task, and the window exchange then gets
-        // its 3×-row input written by a single core (guide §2.5;
-        // no-op on multi-split sources).
-        val base = graft.core.Par.fan(Tables.lineitem(s, d)
-            .select($"l_orderkey", $"l_linenumber", $"l_returnflag",
-              $"l_linestatus", $"l_shipdate"),
-          $"l_orderkey", $"l_linenumber")
+        val base = Tables.lineitem(s, d)
           .select($"l_orderkey", $"l_linenumber",
             expr("l_orderkey div 4096").as("file_id"),
             expr("""stack(3,

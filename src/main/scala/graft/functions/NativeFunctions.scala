@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{Column, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.graftbridge.ColumnBridge
@@ -960,26 +960,6 @@ object NativeFunctions {
     ColumnBridge.column(IsNumericToken(ColumnBridge.expression(c)))
   def startsWithName(c: Column): Column =
     ColumnBridge.column(StartsWithName(ColumnBridge.expression(c)))
-
-  /** SQL registration (native expressions, not UDFs). */
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    registry.createOrReplaceTempFunction("farm_is_numeric_token_native",
-      exprs => IsNumericToken(exprs.head), "internal")
-    registry.createOrReplaceTempFunction("farm_starts_with_name_native",
-      exprs => StartsWithName(exprs.head), "internal")
-    registry.createOrReplaceTempFunction("mode_det",
-      exprs => ModeDet(exprs.head).toAggregateExpression(), "internal")
-    registry.createOrReplaceTempFunction("approx_top_k_ss",
-      exprs => ApproxTopK(exprs.head,
-        k = exprs(1).eval().asInstanceOf[Int],
-        capacity = exprs(2).eval().asInstanceOf[Int])
-        .toAggregateExpression(), "internal")
-    registry.createOrReplaceTempFunction("top_k_pairs",
-      exprs => TopKRows(exprs(0), exprs(1),
-        k = exprs(2).eval().asInstanceOf[Int])
-        .toAggregateExpression(), "internal")
-  }
 }
 
 /** Session-extension entry point: wire the engine's native functions
@@ -991,14 +971,24 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     import org.apache.spark.sql.catalyst.FunctionIdentifier
     import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
-    ext.injectFunction((FunctionIdentifier("farm_is_numeric_token_native"),
-      new ExpressionInfo(classOf[IsNumericToken].getName,
-        "farm_is_numeric_token_native"),
-      (exprs: Seq[Expression]) => IsNumericToken(exprs.head)))
-    ext.injectFunction((FunctionIdentifier("farm_starts_with_name_native"),
-      new ExpressionInfo(classOf[StartsWithName].getName,
-        "farm_starts_with_name_native"),
-      (exprs: Seq[Expression]) => StartsWithName(exprs.head)))
+    def fn(name: String, cls: Class[_])(build: Seq[Expression] => Expression)
+        : Unit =
+      ext.injectFunction(
+        (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), build))
+    // k and capacity must be literals: they are evaluated when the
+    // call is built.
+    def int(e: Expression): Int = e.eval().asInstanceOf[Int]
+    fn("farm_is_numeric_token_native", classOf[IsNumericToken])(
+      e => IsNumericToken(e.head))
+    fn("farm_starts_with_name_native", classOf[StartsWithName])(
+      e => StartsWithName(e.head))
+    fn("mode_det", classOf[ModeDet])(
+      e => ModeDet(e.head).toAggregateExpression())
+    fn("approx_top_k_ss", classOf[ApproxTopK])(
+      e => ApproxTopK(e.head, k = int(e(1)), capacity = int(e(2)))
+        .toAggregateExpression())
+    fn("top_k_pairs", classOf[TopKRows])(
+      e => TopKRows(e(0), e(1), k = int(e(2))).toAggregateExpression())
     ext.injectOptimizerRule(_ => graft.plans.LevenshteinThresholdRule)
     ext.injectOptimizerRule(_ => graft.plans.RangeBinJoinRule)
   }

@@ -63,11 +63,10 @@ object FarmPipeline {
       }
   }
 
-  /** Records → the reference's 12/13-column output schema
+  /** Records → the reference's 13-column output schema
     * (:720-764). Name splitting via the golden-tested UDF; alternate
     * name and dash-defaulting via native expressions. */
-  def toCsvFormat(records: Dataset[RecordRow],
-                  addNotesColumn: Boolean = true): DataFrame = {
+  def toCsvFormat(records: Dataset[RecordRow]): DataFrame = {
     val spark = records.sparkSession
     import spark.implicits._
     val numericHeaders = Seq(
@@ -78,7 +77,7 @@ object FarmPipeline {
       val v = trim(element_at($"numbers", i + 1))
       when(v.isNull || v === "" || v === "None", "-").otherwise(v).as(h)
     }
-    val base = records.toDF()
+    records.toDF()
       .filter(trim($"name") =!= "")
       .withColumn("name", trim($"name"))
       .withColumn("parts", FarmFunctions.splitNameUdf($"name"))
@@ -92,16 +91,15 @@ object FarmPipeline {
         $"page".as("Page"),
         $"pageLine".as("Page Line"),
         $"doc", $"side", $"idx"): _*)
-    val withNotes =
-      if (addNotesColumn) base.withColumn("Notes", lit("")) else base
-    // Reference output order: page asc, left column fully, then right
-    // (:654-666) — per document.
-    withNotes.orderBy($"doc", $"Page", $"side", $"idx")
+      .withColumn("Notes", lit(""))
+      // Reference output order: page asc, left column fully, then
+      // right (:654-666) — per document.
+      .orderBy($"doc", $"Page", $"side", $"idx")
   }
 
   /** End-to-end: blocks → ordered CSV-shape DataFrame. */
-  def run(blocks: DataFrame, addNotesColumn: Boolean = true): DataFrame =
-    toCsvFormat(assembleRecords(linesFromBlocks(blocks)), addNotesColumn)
+  def run(blocks: DataFrame): DataFrame =
+    toCsvFormat(assembleRecords(linesFromBlocks(blocks)))
       .drop("doc", "side", "idx")
 
   /** CSV sink (:769-774): one CSV per document via partitioned write;
@@ -127,16 +125,17 @@ object Layout {
 
   /** Gap-based page-line banding (:605-652): among name lines of a
     * column ordered by (top, seq), a new band opens when the gap to
-    * the previous name line exceeds `tolerance`; Python's band map is
-    * keyed by raw `top` with last-wins on duplicates — reproduced by
-    * taking the max band within (column, top); non-name lines get 1.
+    * the previous name line exceeds [[RecordFold.bandGap]]; Python's
+    * band map is keyed by raw `top` with last-wins on duplicates —
+    * reproduced by taking the max band within (column, top); non-name
+    * lines get 1.
     */
-  def withPageLine(lines: DataFrame, tolerance: Double = 0.01): DataFrame = {
+  def withPageLine(lines: DataFrame): DataFrame = {
     val isName = graft.functions.NativeFunctions.startsWithName(col("text"))
     val wCol = Window.partitionBy(col("doc"), col("page"), col("side"))
       .orderBy(col("top"), col("seq"))
     val gap = abs(col("top") - lag(col("top"), 1).over(wCol))
-    val band = sum(when(gap > tolerance, 1).otherwise(0))
+    val band = sum(when(gap > RecordFold.bandGap, 1).otherwise(0))
       .over(wCol.rowsBetween(Window.unboundedPreceding, Window.currentRow)) + 1
     val wTop = Window.partitionBy(col("doc"), col("page"), col("side"), col("top"))
     val names = lines.filter(isName)

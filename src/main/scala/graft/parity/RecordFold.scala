@@ -26,10 +26,14 @@ object RecordFold {
   final case class Record(name: String, numbers: Seq[String],
                           page: Int, pageLine: Int)
 
+  /** Vertical gap between consecutive name lines that opens a new
+    * page-line band (lambda_function.py:605-652). */
+  val bandGap = 0.01
+
   /** Gap-based page-line banding over one column's lines, already
     * sorted by (top, seq): name lines get a band number that
     * increments when the vertical gap to the previous name line
-    * exceeds 0.01; non-name lines get the constant 1
+    * exceeds [[bandGap]]; non-name lines get the constant 1
     * (lambda_function.py:605-652). Python keys its band map by the
     * raw `top` float — on duplicate tops the *last* band wins for all
     * lines at that top — reproduced here. */
@@ -39,7 +43,7 @@ object RecordFold {
     var band = 1
     var prevTop = Double.NaN
     for ((nl, i) <- nameLines.zipWithIndex) {
-      if (i > 0 && math.abs(nl.top - prevTop) > 0.01) band += 1
+      if (i > 0 && math.abs(nl.top - prevTop) > bandGap) band += 1
       topToBand(nl.top) = band
       prevTop = nl.top
     }
@@ -101,12 +105,13 @@ object RecordFold {
   }
 
   /** Whole-document assembly mirroring textract_to_records
-    * (:570-669): page asc, left column (left < threshold) fully, then
-    * right. Used by the local oracle and tests; the Spark pipeline
+    * (:570-669): page asc, left column
+    * (left < [[FarmPipeline.columnThreshold]]) fully, then right. Used by the local oracle and tests; the Spark pipeline
     * reproduces the same order with an explicit sort key. */
-  def assembleDocument(lines: Seq[Line], threshold: Double = 0.5): Seq[Record] =
+  def assembleDocument(lines: Seq[Line]): Seq[Record] =
     lines.groupBy(_.page).toSeq.sortBy(_._1).flatMap { case (_, pageLines) =>
-      val (left, right) = pageLines.partition(_.left < threshold)
+      val (left, right) =
+        pageLines.partition(_.left < FarmPipeline.columnThreshold)
       foldColumn(left) ++ foldColumn(right)
     }
 }

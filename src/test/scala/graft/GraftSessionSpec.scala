@@ -12,13 +12,16 @@ import org.scalatest.funsuite.AnyFunSuite
   * and no other code under src/ builds a session of its own. Also
   * guards the one-reader rule: engine code reads parquet only through
   * [[Tables.parquet]], whose schema memo keeps inference jobs out of
-  * query construction.
+  * query construction. And no plan is chosen from the core count or
+  * the planned split count: a result never depends on the host.
   */
 class GraftSessionSpec extends AnyFunSuite with SharedSpark {
 
   test("the shared session carries the GraftExtensions functions and rules") {
-    assert(spark.catalog.functionExists("farm_starts_with_name_native"))
-    assert(spark.catalog.functionExists("farm_is_numeric_token_native"))
+    for (fn <- Seq("farm_starts_with_name_native",
+                   "farm_is_numeric_token_native", "mode_det",
+                   "approx_top_k_ss", "top_k_pairs"))
+      assert(spark.catalog.functionExists(fn), s"$fn is not injected")
     // The planning tracker records every rule the optimizer ran.
     val qe = spark.range(1).toDF("id").queryExecution
     qe.optimizedPlan
@@ -47,11 +50,11 @@ class GraftSessionSpec extends AnyFunSuite with SharedSpark {
   }
 
   /** Scala files under `root`, other than `allowed`, that contain `needle`. */
-  private def offenders(root: String, allowed: String, needle: String): Seq[String] = {
+  private def offenders(root: String, needle: String, allowed: String*): Seq[String] = {
     val stream = Files.walk(Paths.get(root))
     try stream.iterator().asScala
       .filter(p => p.toString.endsWith(".scala") &&
-        p.getFileName.toString != allowed)
+        !allowed.contains(p.getFileName.toString))
       .filter(p => new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
         .contains(needle))
       .map(_.toString).toSeq.sorted
@@ -59,14 +62,21 @@ class GraftSessionSpec extends AnyFunSuite with SharedSpark {
   }
 
   test("no source file outside GraftSession.scala builds a SparkSession") {
-    val found = offenders("src", "GraftSession.scala", "SparkSession" + ".builder")
+    val found = offenders("src", "SparkSession" + ".builder", "GraftSession.scala")
     assert(found.isEmpty,
       s"build the session with GraftSession.create instead: ${found.mkString(", ")}")
   }
 
   test("no main source file outside Tables.scala reads parquet directly") {
-    val found = offenders("src/main", "Tables.scala", ".read" + ".parquet(")
+    val found = offenders("src/main", ".read" + ".parquet(", "Tables.scala")
     assert(found.isEmpty,
       s"read parquet through Tables.parquet instead: ${found.mkString(", ")}")
+  }
+
+  test("no main source file plans from the core count or the split count") {
+    val found = Seq("defaultParallelism", "getNumPartitions")
+      .flatMap(offenders("src/main", _))
+    assert(found.isEmpty,
+      s"let the input decide the partitioning: ${found.mkString(", ")}")
   }
 }

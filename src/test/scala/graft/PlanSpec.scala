@@ -427,17 +427,15 @@ class PlanSpec extends AnyFunSuite with SharedSpark {
     val p = plan("rel_table_fingerprint")
     assert(!p.contains("Join") && !p.contains("Sort"),
       "an order-independent checksum must not order or join\n" + p.take(600))
-    // One partial-agg shuffle, plus at most the Par.fan scan fan-out
-    // (REPARTITION_BY_NUM below the md5 projection — present only
-    // when the source is split-starved, e.g. the one-row-group
-    // testdata; a no-op on multi-split sources).
+    // One partial-agg shuffle and no fixed-count repartition: the
+    // plan never depends on the core count.
     val ensure = p.linesIterator
       .count(l => l.contains("Exchange") && l.contains("ENSURE_REQUIREMENTS"))
-    val fan = p.linesIterator
+    val byNum = p.linesIterator
       .count(l => l.contains("Exchange") && l.contains("REPARTITION_BY_NUM"))
-    assert(ensure == 1 && fan <= 1,
-      s"one partial-agg shuffle (+ optional fan) expected, " +
-        s"got ensure=$ensure fan=$fan\n$p")
+    assert(ensure == 1 && byNum == 0,
+      s"one partial-agg shuffle and no REPARTITION_BY_NUM expected, " +
+        s"got ensure=$ensure byNum=$byNum\n$p")
   }
 
   test("domain affinity broadcasts the bucket model back to the grams") {
@@ -461,15 +459,15 @@ class PlanSpec extends AnyFunSuite with SharedSpark {
     assert(!p.contains("Join") && !p.contains("Sort"),
       "an order-independent range checksum must not order or join\n" +
         p.take(600))
-    // Same allowance as the fingerprint pin: one partial-agg shuffle
-    // plus at most the conditional Par.fan scan fan-out.
+    // Same pin as the fingerprint: one partial-agg shuffle, no
+    // fixed-count repartition.
     val ensure = p.linesIterator
       .count(l => l.contains("Exchange") && l.contains("ENSURE_REQUIREMENTS"))
-    val fan = p.linesIterator
+    val byNum = p.linesIterator
       .count(l => l.contains("Exchange") && l.contains("REPARTITION_BY_NUM"))
-    assert(ensure == 1 && fan <= 1,
-      s"one partial-agg shuffle (+ optional fan) expected, " +
-        s"got ensure=$ensure fan=$fan\n$p")
+    assert(ensure == 1 && byNum == 0,
+      s"one partial-agg shuffle and no REPARTITION_BY_NUM expected, " +
+        s"got ensure=$ensure byNum=$byNum\n$p")
   }
 
   test("sequence gaps window within key buckets, never one global sort") {

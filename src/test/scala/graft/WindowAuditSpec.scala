@@ -20,7 +20,7 @@ object WindowAuditSpec {
   * frame is provably tiny by construction (a grouped rollup over
   * days/weeks/buckets/sources/deciles, a top-N, a pre-shrunk
   * frontier) or the site is the small side of
-  * [[Regimes.GlobalNtile]], whose big side is a broadcast-cutoff plan
+  * [[Regimes.GlobalNtile]], whose big side is Ranking.exactNtile
   * (ev_rfm_segments, rel_decile_lift).
   *
   * A lit(0) partition key does NOT suppress the shape — Spark 4's

@@ -114,10 +114,9 @@ class NativeFunctionsSpec extends AnyFunSuite with SharedSpark {
       assert(got == Map(1L -> "a", 2L -> "z", 3L -> "only", 4L -> big),
         s"parts=$parts")
     }
-    // all-null group → null result; SQL registration path works
-    // (mode_det is registered, not injected by GraftExtensions)
+    // all-null group → null result; the SQL function works
+    // (injected by GraftExtensions)
     rows.toDF("k", "v").createOrReplaceTempView("modetest")
-    NativeFunctions.register(spark)
     val viaSql = spark.sql(
       "SELECT k, mode_det(v) AS m FROM modetest WHERE v IS NULL GROUP BY k")
       .collect()
@@ -180,9 +179,8 @@ class NativeFunctionsSpec extends AnyFunSuite with SharedSpark {
       assert(t <= est && est - err <= t, s"$v: est=$est err=$err true=$t")
     }
 
-    // SQL registration path.
+    // SQL function path.
     rows.toDF("v").createOrReplaceTempView("topktest")
-    NativeFunctions.register(spark)
     val viaSql = spark.sql(
       "SELECT approx_top_k_ss(v, 1, 64) AS t FROM topktest").collect()
     assert(viaSql.head.getSeq[org.apache.spark.sql.Row](0)
@@ -212,9 +210,8 @@ class NativeFunctionsSpec extends AnyFunSuite with SharedSpark {
         s"parts=$parts got=${got("a")}")
       assert(got("b") == Seq((1L, 9L)), "short group returns all rows")
     }
-    // SQL registration path.
+    // SQL function path.
     rows.toDF("g", "o", "v").createOrReplaceTempView("topkpairs")
-    NativeFunctions.register(spark)
     val viaSql = spark.sql(
       "SELECT top_k_pairs(o, v, 1) AS t FROM topkpairs WHERE g = 'a'")
       .collect().head.getSeq[org.apache.spark.sql.Row](0)
