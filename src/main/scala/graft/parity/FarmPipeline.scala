@@ -12,7 +12,7 @@ import org.apache.spark.sql.expressions.Window
   *   page-line banding    → window functions ([[Layout]])
   *   record assembly      → ONE shuffle: groupByKey((doc,page,side))
   *                          + flatMapGroups over [[RecordFold]]
-  *   projection + sink    → native exprs + UDF split, partitioned CSV
+  *   projection + sink    → native exprs + UDF split, one CSV per doc
   *
   * Scale posture: the only wide operation is the per-column grouping.
   * A column of one scanned page is a few hundred lines (bounded), so
@@ -102,17 +102,21 @@ object FarmPipeline {
     toCsvFormat(assembleRecords(linesFromBlocks(blocks)))
       .drop("doc", "side", "idx")
 
-  /** CSV sink (:769-774): one CSV per document via partitioned write;
-    * within-file order restored by the sort keys. */
+  /** CSV sink (:769-774): one CSV per document, with header, at
+    * `outPath/doc=<escaped key>/part-*.csv`, replacing `outPath` whole.
+    * Rows are clustered by document and put back in reference order by
+    * the sort keys; [[graft.sources.CsvSink]] writes each document's
+    * run to its own file on `java.nio` with Spark's CSV generator, so
+    * the bytes are those of `partitionBy("doc")` CSV, without the
+    * `.crc` side files Hadoop's local FileSystem adds. */
   def writeCsv(result: DataFrame, outPath: String): Unit =
     result
       .repartition(col("doc"))
       .sortWithinPartitions(col("doc"), col("Page"), col("side"), col("idx"))
       .drop("side", "idx")
-      .write.mode("overwrite")
-      .option("header", true)
-      .partitionBy("doc")
-      .csv(outPath)
+      .write.format(classOf[graft.sources.CsvSink].getName)
+      .mode("overwrite")
+      .save(outPath)
 }
 
 /** Window-function formulation of the reference's hand-rolled

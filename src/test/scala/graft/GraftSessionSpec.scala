@@ -13,7 +13,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * guards the one-reader rule: engine code reads parquet only through
   * [[Tables.parquet]], whose schema memo keeps inference jobs out of
   * query construction. And no plan is chosen from the core count or
-  * the planned split count: a result never depends on the host.
+  * the planned split count: a result never depends on the host. CSV
+  * leaves the engine only through the per-document sink.
   */
 class GraftSessionSpec extends AnyFunSuite with SharedSpark {
 
@@ -71,6 +72,13 @@ class GraftSessionSpec extends AnyFunSuite with SharedSpark {
     val found = offenders("src/main", ".read" + ".parquet(", "Tables.scala")
     assert(found.isEmpty,
       s"read parquet through Tables.parquet instead: ${found.mkString(", ")}")
+  }
+
+  test("no main source file outside CsvSink.scala writes CSV through Spark's writer") {
+    val found = Seq(".csv" + "(", "format(\"csv\")")
+      .flatMap(offenders("src/main", _, "CsvSink.scala")).distinct
+    assert(found.isEmpty,
+      s"write per-document CSV through graft.sources.CsvSink: ${found.mkString(", ")}")
   }
 
   test("no main source file plans from the core count or the split count") {
