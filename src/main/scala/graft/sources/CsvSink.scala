@@ -31,9 +31,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * the layout and bytes of `partitionBy("doc").csv(outPath)`, whose
   * `UnivocityGenerator` it uses. No `.crc` side files are written.
   *
-  * Rows of one `doc` must arrive contiguously within a task (the
-  * caller sorts on `doc` first); a key that comes back fails the task
-  * rather than splitting a document over two files.
+  * All rows of one `doc` must reach one task, contiguously (the
+  * caller repartitions and sorts on `doc` first), so a document is
+  * never split over two files: a key that comes back within a task
+  * fails the task, and a key that two tasks wrote fails the job
+  * commit before it moves any file.
   *
   * Commit protocol, all-or-nothing per job like Spark's v1 committer:
   * the driver deletes `outPath` and makes a `_temporary-<job>` staging
@@ -126,7 +128,14 @@ private class CsvBatchWrite(schema: StructType, out: String) extends BatchWrite 
   }
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    for (m <- messages; (staged, rel) <- m.asInstanceOf[CsvFiles].files) {
+    val files = messages.toSeq.flatMap(_.asInstanceOf[CsvFiles].files)
+    // A task names each directory once, so a repeat is a second task.
+    val dirs = files.map { case (_, rel) => rel.takeWhile(_ != '/') }
+    val split = dirs.diff(dirs.distinct).distinct
+    if (split.nonEmpty) throw new IllegalStateException(
+      s"rows of ${split.mkString(", ")} reached more than one write task: " +
+        s"repartition by ${CsvSink.KeyColumn} first")
+    for ((staged, rel) <- files) {
       val dst = root.resolve(rel)
       Files.createDirectories(dst.getParent)
       Files.move(staging.resolve(staged), dst)

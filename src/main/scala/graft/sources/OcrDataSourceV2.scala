@@ -21,15 +21,22 @@ import graft.sources.TextractConnector.OcrClient
   * .option("keys", "a.png,b.png").load()`.
   *
   * The DSv2 surface buys planner integration: one [[InputPartition]]
-  * per document (a 1000-executor cluster runs 1000 concurrent OCR
-  * jobs with no repartition step), column pruning (unrequested fields are never
-  * materialized per block), and `BlockType = <v>` filter pushdown
+  * per run of up to [[OcrDataSourceV2.DocsPerPartition]] consecutive
+  * keys, in the order `keys` lists them. A task starts the OCR job of
+  * every document in its partition before it polls the first one, so
+  * a cluster running 125 such tasks keeps about 1000 OCR jobs in
+  * flight with no repartition step, while a run of short documents
+  * pays the per-task cost once, not once per document. The reader
+  * emits each document's rows one document after another, with `seq`
+  * counting that document's blocks from 0. Also: column pruning
+  * (unrequested fields are never materialized per block), and `BlockType = <v>` filter pushdown
   * (non-matching blocks are skipped inside the reader, before any row
   * is built — at 100 TB the LINE filter drops most of Textract's
-  * WORD/PAGE blocks at the source). Failure quarantine: a document
-  * whose job fails yields one `error` row, so pruning `error` out also
-  * prunes the quarantine channel — callers that want the dead-letter
-  * path must select the column.
+  * WORD/PAGE blocks at the source). Failure quarantine, per document:
+  * a document whose job fails yields one `error` row, and the other
+  * documents of its partition still read in full. Pruning `error` out
+  * also prunes the quarantine channel — callers that want the
+  * dead-letter path must select the column.
   *
   * Options: `keys` (comma-separated document keys, required);
   * `client` — "stub" (default, deterministic offline fake) or the
@@ -51,6 +58,14 @@ class OcrDataSourceV2 extends TableProvider
 }
 
 object OcrDataSourceV2 {
+  /** Documents per input partition. A task's fixed cost (deserializing
+    * its closure, generating its projections) outweighs the reader's
+    * work for one short document; a few documents per task take most
+    * of that cost away, while larger partitions would leave cores idle
+    * on a small input. A constant, not read from the core count, so a
+    * plan never depends on the host. */
+  val DocsPerPartition = 8
+
   val schema: StructType = StructType(Seq(
     StructField("doc", StringType, nullable = false),
     StructField("seq", LongType, nullable = false),
@@ -113,14 +128,16 @@ private class OcrScanBuilder(options: Map[String, String])
         s"columns=[${required.fieldNames.mkString(", ")}]"
     override def toBatch: Batch = this
     override def planInputPartitions(): Array[InputPartition] =
-      options.getOrElse("keys", "").split(",").filter(_.nonEmpty)
-        .map(k => OcrInputPartition(k.trim): InputPartition)
+      options.getOrElse("keys", "").split(",").filter(_.nonEmpty).map(_.trim)
+        .grouped(OcrDataSourceV2.DocsPerPartition)
+        .map(docs => OcrInputPartition(docs.toSeq): InputPartition).toArray
     override def createReaderFactory(): PartitionReaderFactory =
       OcrReaderFactory(options, required.fieldNames, blockTypeEq)
   }
 }
 
-private case class OcrInputPartition(doc: String) extends InputPartition
+/** Consecutive document keys, read in this order. */
+private case class OcrInputPartition(docs: Seq[String]) extends InputPartition
 
 private case class OcrReaderFactory(options: Map[String, String],
                                     columns: Array[String],
@@ -129,7 +146,7 @@ private case class OcrReaderFactory(options: Map[String, String],
 
   override def createReader(partition: InputPartition)
       : PartitionReader[InternalRow] = {
-    val doc = partition.asInstanceOf[OcrInputPartition].doc
+    val docs = partition.asInstanceOf[OcrInputPartition].docs
     val client = OcrDataSourceV2.clientFor(options)
     val pollDelayMs = options.getOrElse("pollDelayMs", "2000").toLong
     val maxWaitMs = options.getOrElse("maxWaitMs", "900000").toLong
@@ -168,14 +185,15 @@ private case class OcrReaderFactory(options: Map[String, String],
         out
       }
 
-      private def errorRow(e: Throwable): InternalRow =
+      private def errorRow(doc: String, e: Throwable): InternalRow =
         project(doc, -1L, null, null, 0, 0.0, 0.0, String.valueOf(e.getMessage))
 
-      /** startJob → poll → paginate, lazily; any failure (including
-        * during page 2+ iteration) quarantines as one error row. */
-      private def open(): Iterator[InternalRow] =
+      /** poll → paginate one started job, lazily; any failure (of its
+        * start, or during page 2+ iteration) quarantines as one error
+        * row of `doc`. */
+      private def open(doc: String, job: Either[Exception, String]): Iterator[InternalRow] =
         try {
-          val jobId = client.startJob(doc)
+          val jobId = job.toTry.get
           val deadline = System.nanoTime() + maxWaitMs * 1000000L
           var status = client.jobStatus(jobId)
           var delay = pollDelayMs
@@ -210,20 +228,29 @@ private case class OcrReaderFactory(options: Map[String, String],
               if (dead) false
               else if (pending != null) true
               else try base.hasNext catch {
-                case e: Exception => pending = errorRow(e); true
+                case e: Exception => pending = errorRow(doc, e); true
               }
             def next(): InternalRow =
               if (pending != null) { dead = true; val r = pending; pending = null; r }
               else try base.next() catch {
-                case e: Exception => dead = true; errorRow(e)
+                case e: Exception => dead = true; errorRow(doc, e)
               }
           }
         } catch {
-          case e: Exception => Iterator.single(errorRow(e))
+          case e: Exception => Iterator.single(errorRow(doc, e))
         }
 
+      /** Every document's job is started before the first poll, so the
+        * partition's jobs run on the OCR service side by side. */
+      private def start(): Iterator[InternalRow] = {
+        val jobs = docs.map { doc =>
+          doc -> (try Right(client.startJob(doc)) catch { case e: Exception => Left(e) })
+        }
+        jobs.iterator.flatMap { case (doc, job) => open(doc, job) }
+      }
+
       override def next(): Boolean = {
-        if (it == null) it = open()
+        if (it == null) it = start()
         if (it.hasNext) { row = it.next(); true } else false
       }
       override def get(): InternalRow = row

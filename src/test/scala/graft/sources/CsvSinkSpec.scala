@@ -61,6 +61,14 @@ class CsvSinkSpec extends AnyFunSuite with SharedSpark {
     got
   }
 
+  /** A failed job left no `_SUCCESS`, part file or staging directory. */
+  private def assertNothingCommitted(out: File): Unit = {
+    val left = tree(out)
+    assert(!left.contains("_SUCCESS"))
+    assert(!left.exists(_.contains("part-")), left.mkString(", "))
+    assert(Option(out.list()).toSeq.flatten.forall(!_.startsWith("_temporary")))
+  }
+
   private def stubBlocks(keys: Seq[String]): DataFrame =
     spark.read.format("graft-ocr").option("keys", keys.mkString(","))
       .option("pollDelayMs", "1").load()
@@ -129,10 +137,45 @@ class CsvSinkSpec extends AnyFunSuite with SharedSpark {
     }
     assert(String.valueOf(e.getMessage).contains("injected failure") ||
       String.valueOf(e.getCause).contains("injected failure"), e.toString)
-    val left = tree(out)
-    assert(!left.contains("_SUCCESS"))
-    assert(!left.exists(_.contains("part-")), left.mkString(", "))
-    assert(Option(out.list()).toSeq.flatten.forall(!_.startsWith("_temporary")))
+    assertNothingCommitted(out)
+  }
+
+  test("a document whose rows reach two write tasks fails the job, which commits nothing") {
+    val out = tempDir("csvsink-split")
+    // Two partitions of one key each, without `writeCsv`'s repartition.
+    val split = spark.range(0, 4, 1, 2).select(lit("a").as("doc"), col("id").as("n"))
+    // A null key in one task and an empty key in the other share the
+    // default directory.
+    val default = spark.range(0, 2, 1, 2).select(
+      when(col("id") === 0, lit(null).cast("string")).otherwise(lit("")).as("doc"),
+      col("id").as("n"))
+    for ((frame, dir) <- Seq(split -> "doc=a", default -> "doc=__HIVE_DEFAULT_PARTITION__")) {
+      assert(frame.rdd.getNumPartitions == 2)
+      val e = intercept[Exception] {
+        frame.write.format(classOf[CsvSink].getName).mode("overwrite").save(out.getPath)
+      }
+      val msg = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .map(t => String.valueOf(t.getMessage)).mkString(" / ")
+      assert(msg.contains(s"rows of $dir reached more than one write task"), msg)
+      assertNothingCommitted(out)
+    }
+  }
+
+  test("packing documents into source partitions changes no document's bytes") {
+    val keys = (1 to 20).map(i => s"rawfarmdata/farm $i.png")
+    /** `doc=<key>` → its one file's bytes, from one `writeCsv` of `ks`. */
+    def write(ks: Seq[String]): Map[String, String] = {
+      val out = tempDir("csvsink-pack")
+      FarmPipeline.writeCsv(FarmPipeline.toCsvFormat(FarmPipeline.assembleRecords(
+        FarmPipeline.linesFromBlocks(stubBlocks(ks)))), out.getPath)
+      val files = parts(out)
+      assert(files.size == ks.size, "one file per document")
+      files.map { case (k, bytes) => k.takeWhile(_ != '/') -> bytes }
+    }
+    val together = write(keys)
+    val alone = keys.map(k => write(Seq(k))).reduce(_ ++ _)
+    assert(alone.keySet == together.keySet)
+    for (dir <- together.keys) assert(alone(dir) == together(dir), s"bytes of $dir differ")
   }
 
   test("a non-local scheme or an append fails before any job") {
