@@ -53,6 +53,39 @@ case class StartsWithName(child: Expression)
     copy(child = newChild)
 }
 
+/** is_header_text (lambda_function.py:136-156) as one codegen'd
+  * expression: the text lower-cased once (`UTF8String.toLowerCase`),
+  * then a byte search per header phrase; null in, null out. As an OR
+  * of 22 `lower(text).contains(p)` Columns, the optimizer inlined the
+  * input expression (a `trim`) into every term. */
+case class IsHeader(child: Expression)
+    extends UnaryExpression {
+
+  override def dataType: DataType = BooleanType
+  override def prettyName: String = "farm_is_header"
+
+  override def nullSafeEval(input: Any): Any =
+    IsHeader.matches(input.asInstanceOf[UTF8String])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, c => s"graft.functions.IsHeader.matches($c)")
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+object IsHeader {
+  private val phrases: Array[UTF8String] =
+    RefText.headerPhrases.map(UTF8String.fromString).toArray
+
+  def matches(text: UTF8String): Boolean = {
+    val lower = text.toLowerCase
+    var i = 0
+    while (i < phrases.length && !lower.contains(phrases(i))) i += 1
+    i < phrases.length
+  }
+}
+
 /** Dot product of two Array[Float] columns in double precision —
   * an ordered left-to-right fold, bit-identical to
   * `aggregate(zip_with(a, b, (x,y) => double(x)*double(y)), 0.0, +)`
@@ -960,10 +993,13 @@ object NativeFunctions {
     ColumnBridge.column(IsNumericToken(ColumnBridge.expression(c)))
   def startsWithName(c: Column): Column =
     ColumnBridge.column(StartsWithName(ColumnBridge.expression(c)))
+  def isHeader(c: Column): Column =
+    ColumnBridge.column(IsHeader(ColumnBridge.expression(c)))
 }
 
-/** Session-extension entry point: wire the engine's native functions
-  * into any SparkSession via
+/** Session-extension entry point: wire the engine's native functions,
+  * optimizer rules and the record-assembly planner strategy
+  * ([[graft.parity.DocFoldStrategy]]) into any SparkSession via
   * `.withExtensions(new GraftExtensions)` or the
   * `spark.sql.extensions=graft.functions.GraftExtensions` conf.
   */
@@ -991,5 +1027,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       e => TopKRows(e(0), e(1), k = int(e(2))).toAggregateExpression())
     ext.injectOptimizerRule(_ => graft.plans.LevenshteinThresholdRule)
     ext.injectOptimizerRule(_ => graft.plans.RangeBinJoinRule)
+    ext.injectPlannerStrategy(_ => graft.parity.DocFoldStrategy)
   }
 }

@@ -9,20 +9,14 @@ import org.apache.spark.sql.functions._
   * predicates expressible as Catalyst built-ins are plain `Column`
   * functions (codegen'd, pushdown-friendly); the genuinely procedural
   * parsers are Scala UDFs delegating to the golden-tested [[RefText]].
-  * The two hot predicates, is_numeric_token and starts_with_name, are
-  * codegen'd Catalyst expressions in [[graft.functions.NativeFunctions]].
+  * The three hot predicates, is_numeric_token, starts_with_name and
+  * is_header_text, are codegen'd Catalyst expressions in
+  * [[graft.functions.NativeFunctions]].
   */
 object FarmFunctions {
 
   // ---------------------------------------------------------------
   // Native Column expressions (no UDF — stay inside codegen)
-
-  /** is_header_text (lambda_function.py:136-156) as a chained
-    * `contains` over the phrase list; Catalyst folds the literals. */
-  def isHeader(text: Column): Column =
-    RefText.headerPhrases
-      .map(p => lower(text).contains(lit(p)))
-      .reduce(_ || _)
 
   /** extract_alternate_name (:711-715): first parenthetical, trimmed. */
   def alternateName(name: Column): Column =

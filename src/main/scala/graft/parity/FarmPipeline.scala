@@ -1,6 +1,6 @@
 package graft.parity
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -10,19 +10,17 @@ import org.apache.spark.sql.expressions.Window
   *   scan-filter-project  → narrow, whole-stage-codegen'd
   *   column-side split    → derived column (threshold 0.5, :572)
   *   page-line banding    → window functions ([[Layout]])
-  *   record assembly      → ONE shuffle: groupByKey((doc,page,side))
-  *                          + flatMapGroups over [[RecordFold]]
+  *   record assembly      → ONE shuffle, by doc: [[DocFold]] folds
+  *                          each (doc,page,side) run with [[RecordFold]]
   *   projection + sink    → native exprs + UDF split, one CSV per doc
   *
-  * Scale posture: the only wide operation is the per-column grouping.
-  * A column of one scanned page is a few hundred lines (bounded), so
-  * group state is O(page) while parallelism is O(documents) — the
-  * axis that actually grows at 100 TB (SURVEY.md §7.4-7).
+  * Scale posture: the only wide operation is the clustering by
+  * document, which the sink reuses (no second exchange, no second
+  * sort). Fold state is one column of one scanned page, a few hundred
+  * lines (bounded), while parallelism is O(documents) — the axis that
+  * actually grows at 100 TB (SURVEY.md §7.4-7).
   */
 object FarmPipeline {
-
-  final case class LineRow(doc: String, seq: Long, text: String,
-                           page: Int, top: Double, left: Double, side: Int)
 
   final case class RecordRow(doc: String, page: Int, side: Int, idx: Int,
                              name: String, numbers: Seq[String], pageLine: Int)
@@ -37,7 +35,7 @@ object FarmPipeline {
     blocks
       .filter($"BlockType" === "LINE")
       .withColumn("text", trim($"Text"))
-      .filter($"text" =!= "" && !FarmFunctions.isHeader($"text"))
+      .filter($"text" =!= "" && !graft.functions.NativeFunctions.isHeader($"text"))
       .select($"doc", $"seq", $"text",
         coalesce($"Page", lit(1)).as("page"),
         coalesce($"Geometry.BoundingBox.Top", lit(0.0)).as("top"),
@@ -46,22 +44,11 @@ object FarmPipeline {
         when($"left" < columnThreshold, 0).otherwise(1))
   }
 
-  /** Lines → assembled records. The single wide stage. */
-  def assembleRecords(lines: DataFrame): Dataset[RecordRow] = {
-    val spark = lines.sparkSession
-    import spark.implicits._
-    lines.select($"doc", $"seq", $"text", $"page", $"top", $"left", $"side")
-      .as[LineRow]
-      .groupByKey(l => (l.doc, l.page, l.side))
-      .flatMapGroups { (key: (String, Int, Int), it: Iterator[LineRow]) =>
-        val (doc, page, side) = key
-        val colLines = it.map(l =>
-          RecordFold.Line(l.text, l.page, l.top, l.left, l.seq)).toSeq
-        RecordFold.foldColumn(colLines).zipWithIndex.map { case (r, i) =>
-          RecordRow(doc, page, side, i, r.name, r.numbers, r.pageLine)
-        }
-      }
-  }
+  /** Lines → assembled records: one [[DocFold]], whose input is
+    * clustered by `doc` and sorted by `(doc, page, side)`. The single
+    * wide stage; its output is already clustered and sorted as
+    * [[writeCsv]] needs it. */
+  def assembleRecords(lines: DataFrame): Dataset[RecordRow] = DocFold.records(lines)
 
   /** Records → the reference's 13-column output schema
     * (:720-764). Name splitting via the golden-tested UDF; alternate
@@ -105,7 +92,11 @@ object FarmPipeline {
   /** CSV sink (:769-774): one CSV per document, with header, at
     * `outPath/doc=<escaped key>/part-*.csv`, replacing `outPath` whole.
     * Rows are clustered by document and put back in reference order by
-    * the sort keys; [[graft.sources.CsvSink]] writes each document's
+    * the sort keys. On frames built on [[assembleRecords]] Spark plans
+    * neither step: the fold's output is already hash-partitioned by
+    * `doc` and sorted by those keys, so `EnsureRequirements` drops the
+    * repartition and `RemoveRedundantSorts` the sort. Any other frame
+    * gets both. [[graft.sources.CsvSink]] writes each document's
     * run to its own file on `java.nio` with Spark's CSV generator, so
     * the bytes are those of `partitionBy("doc")` CSV, without the
     * `.crc` side files Hadoop's local FileSystem adds. */

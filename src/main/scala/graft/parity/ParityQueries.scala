@@ -33,7 +33,7 @@ object ParityQueries {
       (s, d) => {
         import s.implicits._
         Tables.documents(s, d)
-          .withColumn("is_header", FarmFunctions.isHeader($"text"))
+          .withColumn("is_header", graft.functions.NativeFunctions.isHeader($"text"))
           .select($"doc_id", $"is_header")
       },
       Some(s"""SELECT doc_id, ${headerPredicateSql("text")} AS is_header

@@ -9,10 +9,10 @@ import scala.collection.mutable.ArrayBuffer
   *
   * This logic is deliberately pure (Seq in → Seq out) so it can be
   * (a) golden-tested against vectors generated by the reference and
-  * (b) used verbatim as the per-group body of the distributed fold —
-  * one (doc, page, side) column is always small (a scanned page), so
-  * the group fits trivially in a task while document *count* carries
-  * the scale (SURVEY.md §7.4-7).
+  * (b) used verbatim by the distributed fold, [[DocFoldExec]], which
+  * feeds it one (doc, page, side) run of rows at a time — one column is
+  * always small (a scanned page), so its state fits trivially in a task
+  * while document *count* carries the scale (SURVEY.md §7.4-7).
   */
 object RecordFold {
 
@@ -98,7 +98,7 @@ object RecordFold {
   }
 
   /** Full single-column pipeline: stable sort by (top, seq), banding,
-    * fold. This is the distributed per-group body. */
+    * fold. [[DocFoldExec]] calls it once per (doc, page, side) run. */
   def foldColumn(lines: Seq[Line]): Seq[Record] = {
     val sorted = lines.sortBy(l => (l.top, l.seq))
     processColumn(assignPageLines(sorted))

@@ -247,16 +247,30 @@ class PlanSpec extends AnyFunSuite with SharedSpark {
     assert(!p.contains("CartesianProduct"), p)
   }
 
-  test("record assembly has exactly one exchange (the column grouping)") {
-    import org.apache.spark.sql.functions._
-    val blocks = graft.sources.BlockSource.fromRows(spark,
-      Seq(("d", 0L, "LINE", "John Smith, 40", 1, 0.1, 0.1)))
-    val records = graft.parity.FarmPipeline.assembleRecords(
-      graft.parity.FarmPipeline.linesFromBlocks(blocks))
-    val exchanges = records.queryExecution.executedPlan.toString
-      .linesIterator.count(_.contains("Exchange"))
-    assert(exchanges == 1,
-      s"expected a single shuffle for the fold, got $exchanges")
+  test("writeCsv of assembled records shuffles once, by doc, and sorts only below the fold") {
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.SortExec
+    import org.apache.spark.sql.execution.exchange.{ENSURE_REQUIREMENTS, ShuffleExchangeExec}
+    import graft.parity.{DocFoldExec, FarmPipeline}
+    val blocks = graft.sources.BlockSource.fromRows(spark, Seq(
+      ("d", 0L, "LINE", "John Smith, 40", 1, 0.1, 0.1),
+      ("e", 1L, "LINE", "Mary Jones, 12", 1, 0.6, 0.2)))
+    val csv = FarmPipeline.toCsvFormat(FarmPipeline.assembleRecords(
+      FarmPipeline.linesFromBlocks(blocks)))
+    val nodes = executedNodes(FarmPipeline.writeCsv(csv, tempDir("plan-writecsv").getPath))
+    val shuffles = nodes.collect { case s: ShuffleExchangeExec => s }
+    assert(shuffles.size == 1, nodes.head.treeString)
+    val only = shuffles.head
+    assert(only.shuffleOrigin == ENSURE_REQUIREMENTS, only.toString)
+    assert(only.outputPartitioning match {
+      case h: HashPartitioning => h.expressions.map(_.sql) == Seq("doc")
+      case _ => false
+    }, only.toString)
+    // A linear plan: the nodes before the fold are its ancestors.
+    val fold = nodes.indexWhere(_.isInstanceOf[DocFoldExec])
+    assert(fold > 0, nodes.head.treeString)
+    assert(!nodes.take(fold).exists(_.isInstanceOf[SortExec]), nodes.head.treeString)
+    assert(nodes.forall(_.missingInput.isEmpty), "a node is marked '!'")
   }
 
   test("SCD2 build reuses one custkey shuffle across windows and rollup") {

@@ -1,6 +1,12 @@
 package graft
 
+import scala.collection.mutable.ArrayBuffer
+
+import org.apache.spark.graftbridge.BusDrain
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.Suite
 
 /** The session every spec runs on: [[GraftSession.create]] at
@@ -27,6 +33,28 @@ trait SharedSpark extends TempDirs { this: Suite =>
       case (k, Some(v)) => spark.conf.set(k, v)
       case (k, None) => spark.conf.unset(k)
     }
+  }
+
+  /** Every node, root first, of the physical plan the last query
+    * `action` ran executed: AQE's final plan, through its query stages.
+    * The query is caught by a QueryExecutionListener, so this sees
+    * what a write actually planned, not a rebuilt copy of its input. */
+  def executedNodes(action: => Unit): Seq[SparkPlan] = {
+    val ran = ArrayBuffer[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        ran.synchronized(ran += qe)
+      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try { action; BusDrain(spark.sparkContext) }
+    finally spark.listenerManager.unregister(listener)
+    def walk(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
+      case s: QueryStageExec => walk(s.plan)
+      case _ => p.children.flatMap(walk)
+    })
+    walk(ran.synchronized(ran.last).executedPlan)
   }
 
   /** Each (query, sf dir) returns the same sorted rows at 4 and at 7

@@ -97,6 +97,29 @@ class NativeFunctionsSpec extends AnyFunSuite with SharedSpark {
     }
   }
 
+  test("IsHeader equals the OR of lower(text).contains(phrase), codegen'd and interpreted") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions._
+    val vectors = golden("is_header_text.json").map(_.get("in").asText())
+    val edge = Seq("WAYNE COUNTY", "Cash Value Of The Farm", "  acres of IMPROVED  ",
+      "Müller — 東京", "ÄCRES OF IMPROVED LAND", "\u212Aelvin", "İ", "ß straße",
+      "ΣΊΣΥΦΟΣ", "\uD83D\uDE00 name of owner", "", null)
+    val texts = (vectors ++ edge).toDF("t")
+    // The Column formulation the expression replaces.
+    val old = RefText.headerPhrases.map(p => lower($"t").contains(lit(p))).reduce(_ || _)
+    def both: Seq[(String, Option[Boolean], Option[Boolean])] =
+      texts.select($"t", NativeFunctions.isHeader($"t"), old).collect()
+        .map(r => (r.getString(0), Option(r.get(1)).map(_ == true),
+          Option(r.get(2)).map(_ == true))).toSeq
+    for (rows <- Seq(both, withConf("spark.sql.codegen.wholeStage" -> "false",
+        "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")(both))) {
+      assert(rows.size == vectors.size + edge.size)
+      for ((t, got, want) <- rows) assert(got == want, s"input=<$t>")
+    }
+    assert(both.collect { case (null, got, _) => got } == Seq(None), "null in, null out")
+    assert(both.count(_._2.contains(true)) > 0 && both.count(_._2.contains(false)) > 0)
+  }
+
   test("mode_det: deterministic ties, null skip, partitioning-invariant") {
     import spark.implicits._
     val big = "x" * 70000 // > writeUTF's 64 KB cap: pins the

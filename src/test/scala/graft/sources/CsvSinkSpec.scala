@@ -7,6 +7,8 @@ import java.nio.file.{Files, Path}
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.SortExec
+import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_COL, ShuffleExchangeExec}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -99,6 +101,13 @@ class CsvSinkSpec extends AnyFunSuite with SharedSpark {
     val got = assertSameAsOracle(frame)
     assert(got.keySet.exists(_.startsWith("doc=__HIVE_DEFAULT_PARTITION__/")))
     assert(got.keySet.exists(_.startsWith("doc=file%3A%2F%2F%2Ftmp%2Fin%2Fdoc1.json/")))
+    // Not clustered by doc, so writeCsv still plans its own exchange and sort.
+    val nodes = executedNodes(FarmPipeline.writeCsv(frame, tempDir("csvsink-plan").getPath))
+    assert(nodes.exists {
+      case s: ShuffleExchangeExec => s.shuffleOrigin == REPARTITION_BY_COL
+      case _ => false
+    }, nodes.head.treeString)
+    assert(nodes.exists(_.isInstanceOf[SortExec]), nodes.head.treeString)
   }
 
   test("empty input writes only _SUCCESS") {
