@@ -69,7 +69,8 @@ class DocFoldSpec extends AnyFunSuite with SharedSpark {
 
   test("assembleRecords equals foldColumn per (doc, page, side) at 1, 3 and 7 partitions, AQE on and off") {
     import spark.implicits._
-    val prop = Prop.forAll(corpus) { rows =>
+    // No shrinking: each candidate runs six Spark jobs.
+    val prop = Prop.forAllNoShrink(corpus) { rows =>
       val want = sorted(expected(rows))
       val lines = rows.toDF("doc", "seq", "text", "page", "top", "left", "side")
       (for (parts <- Seq(1, 3, 7); aqe <- Seq("true", "false")) yield
